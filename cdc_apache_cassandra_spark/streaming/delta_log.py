@@ -1516,6 +1516,7 @@ def _plan_dv_buckets(
     read_schema = T.StructType(
         [f for f in live.schema.fields if f.name != "__bucket"]
     )
+    phys_fields = read_schema.fields
     if mapped_fields is not None:
         # published files of a mapped table carry PHYSICAL names: read
         # with the physical schema, rename back positionally (pure
@@ -1530,32 +1531,25 @@ def _plan_dv_buckets(
             for f in read_schema.fields
         ]
 
-        def scan(rels: list[str]) -> DataFrame:
-            return (
-                spark.read.schema(T.StructType(phys_fields))
-                .parquet(*[os.path.join(out_path, r) for r in rels])
-                .select(
-                    *[
-                        F.col(pf.name).cast(lf.dataType).alias(lf.name)
-                        for pf, lf in zip(phys_fields, read_schema.fields)
-                    ],
-                    F.col("_metadata.file_path").alias("__fp"),
-                    F.col("_metadata.row_index").alias("__ri"),
-                )
+    def scan(rels: list[str]) -> DataFrame:
+        # an unmapped table is the identity mapping: same names and
+        # types, so nothing is cast and each alias keeps its name
+        return (
+            spark.read.schema(T.StructType(phys_fields))
+            .parquet(*[os.path.join(out_path, r) for r in rels])
+            .select(
+                *[
+                    (
+                        F.col(pf.name)
+                        if pf.dataType == lf.dataType
+                        else F.col(pf.name).cast(lf.dataType)
+                    ).alias(lf.name)
+                    for pf, lf in zip(phys_fields, read_schema.fields)
+                ],
+                F.col("_metadata.file_path").alias("__fp"),
+                F.col("_metadata.row_index").alias("__ri"),
             )
-
-    else:
-
-        def scan(rels: list[str]) -> DataFrame:
-            return (
-                spark.read.schema(read_schema)
-                .parquet(*[os.path.join(out_path, r) for r in rels])
-                .select(
-                    "*",
-                    F.col("_metadata.file_path").alias("__fp"),
-                    F.col("_metadata.row_index").alias("__ri"),
-                )
-            )
+        )
 
     plain = [rel for rel, add in cand.values() if not add.get("deletionVector")]
     dved = {
@@ -1706,26 +1700,631 @@ def _plan_dv_buckets(
     return out
 
 
-def _read_last_ict(out_path: str, version: int) -> int | None:
-    """The previous commit's ``inCommitTimestamp`` (monotonicity floor
-    for the next one), or None when no previous commit survives or it
-    carries none (pre-enablement tail / cleaned history — the clock
-    then floors the sequence)."""
-    if version < 0:
-        return None
-    path = os.path.join(out_path, LOG_DIR, f"{version:020d}.json")
+def _next_ict(log: "_LogState", out_path: str, now: int) -> int:
+    """The next commit's ``inCommitTimestamp``: strictly monotonic —
+    max(clock, previous commit's + 1), so clock skew cannot run table
+    time backwards. The replay already captured the last commit's
+    ICT; the commit file is re-read only when state came straight off
+    a checkpoint (the one case replay never saw the commit). No
+    surviving previous commit, or one carrying none (pre-enablement
+    tail / cleaned history), leaves the clock to floor the sequence."""
+    prev = log.last_ict
+    if prev is None and log.last >= 0:
+        try:
+            raw = _log_read_bytes(_commit_path(out_path, log.last))
+        except FileNotFoundError:
+            raw = b""
+        for line in raw.decode().splitlines():
+            if line.strip() and "commitInfo" in (action := json.loads(line)):
+                prev = action["commitInfo"].get("inCommitTimestamp")
+                break
+    return max(now, int(prev) + 1 if prev is not None else 0)
+
+
+def _commit(
+    out_path: str,
+    version: int,
+    header: list[dict],
+    info: dict,
+    actions: list[dict],
+    ict: int | None,
+) -> None:
+    """Write one commit: ``header`` (protocol/metaData/txn), the
+    ``commitInfo`` and the data actions. With ``ict`` (from
+    :func:`_next_ict`) the commitInfo carries it and comes FIRST, per
+    spec (readers resolve the time without scanning the whole file)."""
+    ci = {"commitInfo": info}
+    if ict is None:
+        _write_commit(out_path, version, header + [ci] + actions)
+        return
+    info["inCommitTimestamp"] = ict
+    _write_commit(out_path, version, [ci] + header + actions)
+
+
+def _remove_action(path: str, now: int, dv: dict | None = None) -> dict:
+    """A spec ``remove`` of one data file; ``dv`` is the deletion
+    vector the removed add carried (the pair is the file's identity)."""
+    rm = {"path": path, "deletionTimestamp": now, "dataChange": True}
+    if dv:
+        rm["deletionVector"] = dv
+    return {"remove": rm}
+
+
+def _bucket_add(
+    out_path: str, rel: str, bucket: int, store_version: int, now: int
+) -> dict:
+    """The ``add`` of a bucket's published data file, tagged with the
+    bucket and the store version it captured (the next export's diff
+    key)."""
+    dst = os.path.join(out_path, rel)
+    return {
+        "add": {
+            "path": rel,
+            "partitionValues": {},
+            "size": _io_size(dst),
+            "modificationTime": now,
+            "dataChange": True,
+            "stats": _file_stats_json(dst),
+            "tags": {"bucket": str(bucket), "storeVersion": str(store_version)},
+        }
+    }
+
+
+class _ExportPlan(NamedTuple):
+    """What one :func:`delta_export` will do, decided from metadata
+    alone — the store manifest, the replayed log and the changed
+    buckets' directory listings — before any data is read."""
+
+    version: int
+    #: bucket -> (published path | None, store version it captured)
+    published: dict[int, tuple[str | None, int]]
+    #: bucket -> current store version
+    store_buckets: dict[int, int]
+    changed: list[int]
+    dropped: list[int]
+    #: changed bucket -> the store's active file to hard-link (None:
+    #: every row a tombstone)
+    linkable: dict[int, str | None]
+    #: changed buckets the staging job reads through the active view
+    staged: list[int]
+    #: staged buckets the DV planner may re-point instead of rewriting
+    dv_candidates: list[int]
+    #: the empty-bucket memo entries that survive (bucket still stored)
+    empty_kept: dict[int, int]
+    is_mapped: bool
+    #: the table configuration this export commits (updated in place
+    #: by the mapping and ICT steps)
+    cfg: dict
+    ict_on: bool
+    v2c_on: bool
+    cdf_on: bool
+    cdf_pk: list[str]
+    stored_schema: T.StructType | None
+
+
+def _export_manifest(
+    store_path: str, out_path: str, manifest_store, active_view_fn
+) -> dict:
+    """The store manifest an export publishes, after the refusals that
+    must precede any IO against the table root."""
+    if (
+        "://" in out_path
+        and not out_path.startswith("file://")
+        and isinstance(_LOG_COMMIT_STORE, LocalLogCommitStore)
+    ):
+        # refused by SCHEME up front, before any remote filesystem (an
+        # S3 client construction may touch credentials/network): the
+        # default POSIX-link publication cannot commit to this root
+        raise NotImplementedError(
+            f"{out_path}: exporting to this scheme needs a conditional-"
+            "PUT commit store (set_log_commit_store / HttpLogCommitStore)"
+        )
+    manifest = (
+        _read_manifest(store_path)
+        if manifest_store is None
+        else manifest_store.load(store_path)[0]
+    )
+    if manifest is None:
+        raise FileNotFoundError(f"no materialized state at {store_path}")
+    # The default view (row-level op filter) is sound ONLY for plain-LWW
+    # stores. The manifest records the store's kind at merge time; a
+    # compound/custom store exported without its dominance-aware view
+    # would RESURRECT dominated rows for every external reader — refuse
+    # rather than publish wrong data. A manifest WITHOUT the marker is
+    # indistinguishable (compound stores predate it), so it is refused
+    # too: one merge_into records the marker on a legacy lww store.
+    if active_view_fn is None and manifest.get("kind") != "lww":
+        raise ValueError(
+            f"store at {store_path} has kind={manifest.get('kind')!r}; "
+            "pass active_view_fn (operators.lww.compound_active_view for "
+            "compound stores) — the default op!='DELETE' view would "
+            "resurrect rows dominated by partition-range tombstones. For "
+            "a legacy lww store, one merge_into records kind='lww'."
+        )
+    return manifest
+
+
+def _export_plan(
+    store_path: str,
+    out_path: str,
+    manifest: dict,
+    log: "_LogState",
+    default_view: bool,
+    column_mapping: str | None,
+    deletion_vectors: bool,
+    in_commit_timestamps: bool,
+    v2_checkpoints: bool,
+    change_data_feed: bool,
+    cdf_pk_cols: list[str] | None,
+) -> _ExportPlan:
+    """Decide an export from metadata: which buckets changed (store
+    version moved since the published add tag / empty memo) or were
+    dropped, how each changed bucket's file comes to exist, and the
+    table's protocol-relevant flags (column mapping, ICT, V2
+    checkpoints, CDF — each sticky through the table configuration)."""
+    published: dict[int, tuple[str | None, int]] = {
+        b: (None, v) for b, v in log.empty_buckets.items()
+    }
+    for path, add in log.files.items():
+        tags = add.get("tags") or {}
+        if "bucket" in tags:
+            published[int(tags["bucket"])] = (path, int(tags["storeVersion"]))
+    store_buckets = {int(b): v for b, v in manifest["buckets"].items()}
+    changed = sorted(
+        b
+        for b, v in store_buckets.items()
+        if b not in published or published[b][1] != v
+    )
+    existing_mode = _column_mapping_mode(log.meta)
+    if existing_mode not in ("none", "name"):
+        raise NotImplementedError(
+            f"{out_path}: export target carries column-mapping mode "
+            f"{existing_mode!r}; this exporter writes name mode only"
+        )
+    if column_mapping in ("id", "none"):
+        # a mode name that is not a source-table path: refuse with the
+        # right diagnosis instead of FileNotFoundError('id')
+        raise NotImplementedError(
+            f"column_mapping={column_mapping!r}: this exporter writes "
+            'name mode only — pass "name" to mint fresh identities or '
+            "a source-table path to inherit them"
+        )
+    if column_mapping is not None and log.meta is not None:
+        raise ValueError(
+            "column_mapping applies at table CREATION; an existing "
+            "mapped table continues its mapping automatically"
+            if existing_mode == "name"
+            else "column_mapping applies at table CREATION; this "
+            "table already exists without mapping"
+        )
+    is_mapped = existing_mode == "name" or (
+        log.meta is None and column_mapping is not None
+    )
+    cfg = dict((log.meta or {}).get("configuration") or {})
+    v2c_on = v2_checkpoints or cfg.get("delta.checkpointPolicy") == "v2"
+    if v2c_on:
+        cfg["delta.checkpointPolicy"] = "v2"
+    cdf_on = change_data_feed or (
+        cfg.get("delta.enableChangeDataFeed") == "true"
+    )
+    cdf_pk = list(cdf_pk_cols or []) or [
+        c for c in (cfg.get(_CDF_PK_KEY) or "").split(",") if c
+    ]
+    if cdf_on:
+        if not cdf_pk:
+            raise ValueError(
+                "change_data_feed requires cdf_pk_cols (the row "
+                "identity the change classification joins on); once "
+                "given they persist in the table configuration"
+            )
+        cfg["delta.enableChangeDataFeed"] = "true"
+        cfg[_CDF_PK_KEY] = ",".join(cdf_pk)
+    # LINK instead of rewrite (guide §2.4 remove-shuffles-outright /
+    # VERDICT r11 item 4): for the default row-tombstone view, a
+    # changed bucket's publishable rows are EXACTLY the store's
+    # ``active-*.parquet`` file — merge_into staged the active/
+    # tombstone split in its own write job precisely so this export
+    # can adopt the file by hard link (metadata-only) instead of
+    # re-reading and re-writing the same bytes as a second
+    # distributed job per commit. Guards: default view only (custom
+    # views — compound dominance — do real work), unmapped tables
+    # (mapped files stage under physical names), no DVs, no CDF
+    # (its classification consumes the live view anyway), recorded
+    # manifest schema (the linked file's schema equals it by
+    # construction), and the bucket dir actually carries the split
+    # layout (pre-split and compacted-legacy dirs fall back to the
+    # staging job per bucket).
+    stored_schema = _stored_schema(manifest) if changed else None
+    linkable: dict[int, str | None] = {}
+    if (
+        default_view
+        and not is_mapped
+        and not deletion_vectors
+        and not cdf_on
+        and stored_schema is not None
+    ):
+        for b in changed:
+            bdir = os.path.join(
+                store_path,
+                version_dir(manifest, store_buckets[b]),
+                f"__bucket={b}",
+            )
+            names = [n for n in _io_listdir(bdir) if n.endswith(".parquet")]
+            actives = [n for n in names if n.startswith("active-")]
+            if (
+                names
+                and len(actives) <= 1
+                and all(n.startswith(("active-", "tombs-")) for n in names)
+            ):
+                linkable[b] = (
+                    os.path.join(bdir, actives[0]) if actives else None
+                )
+    staged = [b for b in changed if b not in linkable]
+    return _ExportPlan(
+        version=log.last + 1,
+        published=published,
+        store_buckets=store_buckets,
+        changed=changed,
+        dropped=sorted(b for b in published if b not in store_buckets),
+        linkable=linkable,
+        staged=staged,
+        dv_candidates=staged if deletion_vectors else [],
+        empty_kept={
+            b: v for b, v in log.empty_buckets.items() if b in store_buckets
+        },
+        is_mapped=is_mapped,
+        cfg=cfg,
+        ict_on=in_commit_timestamps
+        or cfg.get("delta.enableInCommitTimestamps") == "true",
+        v2c_on=v2c_on,
+        cdf_on=cdf_on,
+        cdf_pk=cdf_pk,
+        stored_schema=stored_schema,
+    )
+
+
+def _export_view(
+    spark: SparkSession,
+    store_path: str,
+    manifest: dict,
+    plan: _ExportPlan,
+    active_view_fn,
+) -> tuple[DataFrame | None, T.StructType]:
+    """The staged buckets' publishable rows (``__bucket`` kept) and
+    their data schema; ``(None, recorded schema)`` for an all-linked
+    export, whose scan would have produced exactly the recorded data
+    columns. Persisted when more than one step consumes the rows."""
+    if not plan.staged:
+        return None, plan.stored_schema
+    paths = _bucket_paths(store_path, manifest, plan.staged)
+    # recorded-schema scan: no footer-merging job at plan time
+    # (guide §1/§6; legacy manifests fall back to mergeSchema)
+    raw = _read_bucket_files(spark, store_path, manifest, paths).drop("__ver")
+    # ``active_view_fn``: state rows -> publishable table rows. The
+    # default (row-tombstone filter) matches the single-PK store;
+    # COMPOUND stores MUST pass operators.lww.compound_active_view —
+    # their dominance rules (partition-range tombstones, static
+    # resolution) are read-time, and publishing raw op!='DELETE'
+    # rows would resurrect dominated rows for external readers.
+    # Bucket-local application is sound because the store buckets on
+    # the partition key: a partition's tombstone/static co-locate
+    # with every row they govern (the merge_into invariant).
+    view_fn = active_view_fn or (lambda df: df.filter(F.col("op") != "DELETE"))
+    live = view_fn(raw)
+    if "__bucket" not in live.columns:
+        raise ValueError(
+            "active_view_fn must preserve the __bucket column "
+            "(operate on state rows, do not project it away)"
+        )
+    if plan.dv_candidates or plan.cdf_on:
+        # the DV planner's two jobs (count-by-bucket gate, set-equality
+        # verify), the staging write and the CDF classification would
+        # each re-read the changed buckets' store files — persist the
+        # view once (scoped-tracked AND explicitly released after its
+        # last use; on an exception in between, the scope tracking is
+        # the backstop)
+        from cdc_apache_cassandra_spark.caching import persist_scoped
+
+        live = persist_scoped(live)
+    return live, live.drop("__bucket").schema
+
+
+def _export_schema(
+    log: "_LogState",
+    plan: _ExportPlan,
+    new_schema: T.StructType,
+    column_mapping: str | None,
+) -> tuple[str, list[dict] | None]:
+    """The schemaString this export commits and, for a mapped table,
+    its name-mode fields (which record their mapping keys in
+    ``plan.cfg``). The table schema only ever WIDENS: this export's
+    (changed-buckets) schema is reconciled with the log's current
+    metaData, so a re-export of an old narrow bucket cannot regress
+    it."""
+    if log.meta is not None:
+        from cdc_apache_cassandra_spark.streaming.schema_evolution import (
+            reconcile_schemas,
+        )
+
+        new_schema = reconcile_schemas(
+            T.StructType.fromJson(json.loads(log.meta["schemaString"])),
+            new_schema,
+        )
+    if not plan.is_mapped:
+        return new_schema.json(), None
+    # graft name-mode mapping metadata onto the (reconciled) LOGICAL
+    # schema: existing fields keep their physical name/id (reconcile
+    # preserves old StructField metadata), inherited fields copy the
+    # source table's, new fields mint fresh ids past maxColumnId
+    inherit = None
+    next_id = int(plan.cfg.get("delta.columnMapping.maxColumnId") or 0)
+    if log.meta is not None:
+        # later commits inherit the log's OWN mapping by name:
+        # reconcile_schemas rebuilds a type-widened StructField WITHOUT
+        # its metadata, so relying on reconcile alone would re-mint
+        # that column's physical name and silently null it in every
+        # previously published file (code-review r11 finding)
+        inherit = json.loads(log.meta["schemaString"])["fields"]
+    elif column_mapping != "name":
+        src = _replay(column_mapping)
+        if src.meta is None:
+            raise FileNotFoundError(
+                f"column_mapping source has no Delta log: {column_mapping}"
+            )
+        if _column_mapping_mode(src.meta) == "none":
+            raise ValueError(
+                f"column_mapping source {column_mapping} carries no "
+                "column mapping to inherit; pass "
+                'column_mapping="name" to mint fresh'
+            )
+        inherit = json.loads(src.meta["schemaString"])["fields"]
+        src_cfg = src.meta.get("configuration") or {}
+        next_id = max(
+            next_id, int(src_cfg.get("delta.columnMapping.maxColumnId") or 0)
+        )
+    mapped_fields, next_id = _graft_mapping(
+        new_schema.jsonValue()["fields"], inherit, next_id
+    )
+    plan.cfg["delta.columnMapping.mode"] = "name"
+    plan.cfg["delta.columnMapping.maxColumnId"] = str(next_id)
+    return json.dumps({"type": "struct", "fields": mapped_fields}), mapped_fields
+
+
+def _stage_buckets(
+    spark: SparkSession,
+    out_path: str,
+    plan: _ExportPlan,
+    log: "_LogState",
+    live: DataFrame | None,
+    mapped_fields: list[dict] | None,
+    dv_max_fraction: float,
+) -> tuple[str | None, list[int], dict]:
+    """Run the ONE distributed job that writes the staged buckets'
+    files, after the DV planner has taken the sparse-delete buckets it
+    can re-point instead. Returns ``(staging dir, rewritten buckets,
+    {bucket: (rel_path, old_add, dv_descriptor)})``."""
+    if live is None:
+        return None, [], {}
+    # staging is unique per writer: two racing exporters never clobber
+    # each other's files; the loser of the commit race cleans up its
+    # own staging and nothing else
+    staging = os.path.join(
+        out_path, f"_staging_{plan.version}_{uuid.uuid4().hex[:8]}"
+    )
     try:
-        raw = _log_read_bytes(path)
-    except FileNotFoundError:
-        return None
-    for line in raw.decode().splitlines():
-        line = line.strip()
-        if not line:
+        dv_buckets = (
+            _plan_dv_buckets(
+                spark,
+                out_path,
+                live,
+                log,
+                plan.dv_candidates,
+                dv_max_fraction,
+                mapped_fields,
+            )
+            if plan.dv_candidates
+            else {}
+        )
+        rewrite = [b for b in plan.staged if b not in dv_buckets]
+        to_stage = (
+            live
+            if not dv_buckets
+            else live.filter(F.col("__bucket").isin(rewrite))
+        )
+        if mapped_fields is not None:
+            # mapped tables stage parquet under PHYSICAL names (the
+            # delta-spark layout; add.stats then key physical too)
+            to_stage = _to_physical(to_stage, mapped_fields)
+        if rewrite:
+            (
+                to_stage.repartition(len(rewrite), F.col("__bucket"))
+                .write.mode("overwrite")
+                .partitionBy("__bucket")
+                .parquet(staging)
+            )
+        else:
+            _io_mkdirs(staging)  # the caller's cleanup expects the dir
+    finally:
+        if plan.dv_candidates and not plan.cdf_on:
+            # release AND drop the ledger entry (looping callers outside
+            # the registry/bench would otherwise accumulate one dead
+            # reference per export). With CDF on, the change
+            # classification is the view's actual last use — the
+            # caller releases there.
+            from cdc_apache_cassandra_spark.caching import release_one
+
+            release_one(live)
+    return staging, rewrite, dv_buckets
+
+
+def _staged_file(staging: str, bucket: int) -> str | None:
+    """The staged bucket's single data file (None: every row was a
+    tombstone, so the write job produced none)."""
+    bdir = os.path.join(staging, f"__bucket={bucket}")
+    parts = [n for n in _io_listdir(bdir) if n.endswith(".parquet")]
+    if len(parts) > 1:
+        raise RuntimeError(
+            f"bucket {bucket}: expected one staged file, got {parts} "
+            "(repartition-by-bucket invariant broken)"
+        )
+    return os.path.join(bdir, parts[0]) if parts else None
+
+
+def _publish_buckets(
+    out_path: str,
+    plan: _ExportPlan,
+    sources: dict[int, str | None],
+    publish,
+    now: int,
+    empty_now: dict[int, int],
+) -> list[dict]:
+    """Publish each bucket's new data file under its content-addressed
+    name with ``publish(src, dst)`` — a hard link of the store's active
+    file or a move out of staging, metadata-sized driver work either
+    way — removing the bucket's previously published file. A bucket
+    with no source (every row a tombstone) gets no add but is
+    REMEMBERED in the commitInfo memo, so the next export does not
+    reclassify it as changed."""
+    actions: list[dict] = []
+    for b, src in sources.items():
+        old = plan.published.get(b, (None, 0))[0]
+        if old is not None:
+            actions.append(_remove_action(old, now))
+        store_version = plan.store_buckets[b]
+        if src is None:
+            empty_now[b] = store_version
             continue
-        action = json.loads(line)
-        if "commitInfo" in action:
-            ict = action["commitInfo"].get("inCommitTimestamp")
-            return int(ict) if ict is not None else None
+        empty_now.pop(b, None)
+        rel = f"{DATA_DIR}/b{b:05d}-v{store_version:010d}.parquet"
+        publish(src, os.path.join(out_path, rel))
+        actions.append(_bucket_add(out_path, rel, b, store_version, now))
+    return actions
+
+
+def _repoint_actions(
+    plan: _ExportPlan, dv_buckets: dict, now: int
+) -> list[dict]:
+    """Re-point each DV bucket's EXISTING file at the deletion vector
+    the planner wrote executor-side (the ordinals never reach the
+    driver): remove the old (file, DV) pair and re-add the file with
+    the new DV and the bucket's current store version."""
+    actions: list[dict] = []
+    for b in sorted(dv_buckets):
+        rel, old_add, dv = dv_buckets[b]
+        actions.append(_remove_action(rel, now, old_add.get("deletionVector")))
+        tags = {
+            **(old_add.get("tags") or {}),
+            "storeVersion": str(plan.store_buckets[b]),
+        }
+        actions.append(
+            {
+                "add": {
+                    **old_add,
+                    "deletionVector": dv,
+                    "dataChange": True,
+                    "modificationTime": now,
+                    "tags": tags,
+                }
+            }
+        )
+    return actions
+
+
+def _export_cdf_actions(
+    spark: SparkSession,
+    out_path: str,
+    plan: _ExportPlan,
+    log: "_LogState",
+    live: DataFrame,
+    actions: list[dict],
+    schema_json: str,
+    mapped_fields: list[dict] | None,
+) -> list[dict]:
+    """CHANGE-DATA files for a MIXED commit. Spec synthesis covers
+    pure-insert and pure-remove commits, so those deliberately get
+    none; a mixed commit MUST carry cdc actions (readers treat them as
+    authoritative and refuse a mixed commit without them) — including
+    the rare rewrite that changed no row, which ships one EMPTY cdc
+    file rather than an unreadable commit. Pre image = every touched
+    bucket's published file (changed rewrites + drops), read under the
+    NEW schema; post image = the staged rows; classification is the
+    SAME pk join delta_changes uses. Distributed end to end — the
+    driver handles file names only."""
+    pre_entries = [
+        (plan.published[b][0], log.files[plan.published[b][0]])
+        for b in plan.changed + plan.dropped
+        if b in plan.published and plan.published[b][0] is not None
+    ]
+    if not pre_entries or not any("add" in a for a in actions):
+        return []
+    pseudo_meta = {
+        "schemaString": schema_json,
+        "partitionColumns": [],
+        "configuration": plan.cfg,
+    }
+    logical = T.StructType.fromJson(json.loads(schema_json))
+    post_df = live.drop("__bucket")
+    for f in logical.fields:
+        if f.name not in post_df.columns:
+            # re-export of an old narrow bucket: the reconciled schema
+            # keeps columns this batch's rows lack — typed nulls, the
+            # same rule the scan applies to pre-DDL files
+            post_df = post_df.withColumn(f.name, F.lit(None).cast(f.dataType))
+    changes = _classify_changes(
+        _scan_adds(spark, out_path, pre_entries, pseudo_meta),
+        post_df,
+        plan.cdf_pk,
+        logical.names,
+    )
+    if mapped_fields is not None:
+        # cdc files of a mapped table store data under PHYSICAL names;
+        # _change_type keeps its literal name (spec passthrough)
+        changes = _to_physical(changes, mapped_fields)
+    return _publish_cdc_files(
+        out_path, plan.version, changes, min(32, max(1, len(pre_entries)))
+    )
+
+
+def _export_protocol_action(
+    log: "_LogState", plan: _ExportPlan, has_dv: bool
+) -> dict | None:
+    """The commit's ``protocol`` action: the full protocol on table
+    creation; on the first DV / ICT / V2-checkpoint / CDF commit of a
+    table not yet declaring the feature, the spec's in-place upgrade —
+    the UNION of everything the table already declares and what this
+    export now needs (never a rebuild, which would drop live
+    features); otherwise none."""
+    need = _export_protocol(
+        plan.is_mapped, has_dv, plan.ict_on, plan.v2c_on, plan.cdf_on
+    )
+    if log.last < 0:
+        return {"protocol": need}
+    proto = log.proto or {}
+    wf = proto.get("writerFeatures")
+    # writers must honor delta.enableChangeDataFeed when the protocol
+    # says so: features form -> the changeDataFeed writer feature;
+    # legacy form -> minWriterVersion >= 4
+    implies_cdf = log.proto is not None and (
+        "changeDataFeed" in wf
+        if wf is not None
+        else int(proto.get("minWriterVersion", 2)) >= 4
+    )
+    if (
+        (
+            has_dv
+            and (
+                log.proto is None
+                or not log.has_reader_feature("deletionVectors")
+            )
+        )
+        or (plan.ict_on and "inCommitTimestamp" not in (wf or []))
+        or (
+            plan.v2c_on
+            and "v2Checkpoint" not in (proto.get("readerFeatures") or [])
+        )
+        or (plan.cdf_on and not implies_cdf)
+    ):
+        return {"protocol": _merge_protocol(log.proto, need)}
     return None
 
 
@@ -1828,40 +2427,9 @@ def delta_export(
     vector) against the bucket's staged live rows classifies to
     exactly the newly masked rows' deletes — the same generic
     classification, no DV-specific path."""
-    if (
-        "://" in out_path
-        and not out_path.startswith("file://")
-        and isinstance(_LOG_COMMIT_STORE, LocalLogCommitStore)
-    ):
-        # refused by SCHEME up front, before any remote filesystem (an
-        # S3 client construction may touch credentials/network): the
-        # default POSIX-link publication cannot commit to this root
-        raise NotImplementedError(
-            f"{out_path}: exporting to this scheme needs a conditional-"
-            "PUT commit store (set_log_commit_store / HttpLogCommitStore)"
-        )
-    manifest = (
-        _read_manifest(store_path)
-        if manifest_store is None
-        else manifest_store.load(store_path)[0]
+    manifest = _export_manifest(
+        store_path, out_path, manifest_store, active_view_fn
     )
-    if manifest is None:
-        raise FileNotFoundError(f"no materialized state at {store_path}")
-    # The default view (row-level op filter) is sound ONLY for plain-LWW
-    # stores. The manifest records the store's kind at merge time; a
-    # compound/custom store exported without its dominance-aware view
-    # would RESURRECT dominated rows for every external reader — refuse
-    # rather than publish wrong data. A manifest WITHOUT the marker is
-    # indistinguishable (compound stores predate it), so it is refused
-    # too: one merge_into records the marker on a legacy lww store.
-    if active_view_fn is None and manifest.get("kind") != "lww":
-        raise ValueError(
-            f"store at {store_path} has kind={manifest.get('kind')!r}; "
-            "pass active_view_fn (operators.lww.compound_active_view for "
-            "compound stores) — the default op!='DELETE' view would "
-            "resurrect rows dominated by partition-range tombstones. For "
-            "a legacy lww store, one merge_into records kind='lww'."
-        )
     log = _replay(out_path)
     if (
         txn_app is not None
@@ -1869,588 +2437,95 @@ def delta_export(
         and log.txns.get(txn_app, -1) >= txn_version
     ):
         return None  # replayed batch: already published
-
-    # bucket -> (published path | None, store version it captured)
-    published: dict[int, tuple[str | None, int]] = {
-        b: (None, v) for b, v in log.empty_buckets.items()
-    }
-    for path, add in log.files.items():
-        tags = add.get("tags") or {}
-        if "bucket" in tags:
-            published[int(tags["bucket"])] = (path, int(tags["storeVersion"]))
-
-    store_buckets = {int(b): v for b, v in manifest["buckets"].items()}
-    changed = sorted(
-        b
-        for b, v in store_buckets.items()
-        if b not in published or published[b][1] != v
+    # plan: every per-bucket strategy is decided here, before data IO
+    plan = _export_plan(
+        store_path,
+        out_path,
+        manifest,
+        log,
+        active_view_fn is None,
+        column_mapping,
+        deletion_vectors,
+        in_commit_timestamps,
+        v2_checkpoints,
+        change_data_feed,
+        cdf_pk_cols,
     )
-    dropped = sorted(b for b in published if b not in store_buckets)
-
+    version, cfg = plan.version, plan.cfg
     actions: list[dict] = []
     dv_buckets: dict = {}
-    version = log.last + 1
     schema_json = None
-    empty_now: dict[int, int] = {
-        b: v for b, v in log.empty_buckets.items() if b in store_buckets
-    }
-    existing_mode = _column_mapping_mode(log.meta)
-    if existing_mode not in ("none", "name"):
-        raise NotImplementedError(
-            f"{out_path}: export target carries column-mapping mode "
-            f"{existing_mode!r}; this exporter writes name mode only"
+    empty_now = dict(plan.empty_kept)
+    if plan.changed:
+        live, new_schema = _export_view(
+            spark, store_path, manifest, plan, active_view_fn
         )
-    if column_mapping in ("id", "none"):
-        # a mode name that is not a source-table path: refuse with the
-        # right diagnosis instead of FileNotFoundError('id')
-        raise NotImplementedError(
-            f"column_mapping={column_mapping!r}: this exporter writes "
-            'name mode only — pass "name" to mint fresh identities or '
-            "a source-table path to inherit them"
+        schema_json, mapped_fields = _export_schema(
+            log, plan, new_schema, column_mapping
         )
-    if column_mapping is not None and log.meta is not None:
-        raise ValueError(
-            "column_mapping applies at table CREATION; an existing "
-            "mapped table continues its mapping automatically"
-            if existing_mode == "name"
-            else "column_mapping applies at table CREATION; this "
-            "table already exists without mapping"
+        staging, rewrite, dv_buckets = _stage_buckets(
+            spark, out_path, plan, log, live, mapped_fields, dv_max_fraction
         )
-    is_mapped = existing_mode == "name" or (
-        log.meta is None and column_mapping is not None
-    )
-    mapped_fields: list[dict] | None = None
-    export_cfg = dict((log.meta or {}).get("configuration") or {})
-    ict_on = in_commit_timestamps or (
-        export_cfg.get("delta.enableInCommitTimestamps") == "true"
-    )
-    v2c_on = v2_checkpoints or (
-        export_cfg.get("delta.checkpointPolicy") == "v2"
-    )
-    if v2c_on and export_cfg.get("delta.checkpointPolicy") != "v2":
-        export_cfg["delta.checkpointPolicy"] = "v2"
-    cdf_on = change_data_feed or (
-        export_cfg.get("delta.enableChangeDataFeed") == "true"
-    )
-    cdf_pk = list(cdf_pk_cols or []) or [
-        c for c in (export_cfg.get(_CDF_PK_KEY) or "").split(",") if c
-    ]
-    if cdf_on:
-        if not cdf_pk:
-            raise ValueError(
-                "change_data_feed requires cdf_pk_cols (the row "
-                "identity the change classification joins on); once "
-                "given they persist in the table configuration"
-            )
-        export_cfg["delta.enableChangeDataFeed"] = "true"
-        export_cfg[_CDF_PK_KEY] = ",".join(cdf_pk)
-
-    if changed:
-        # LINK instead of rewrite (guide §2.4 remove-shuffles-outright /
-        # VERDICT r11 item 4): for the default row-tombstone view, a
-        # changed bucket's publishable rows are EXACTLY the store's
-        # ``active-*.parquet`` file — merge_into staged the active/
-        # tombstone split in its own write job precisely so this export
-        # can adopt the file by hard link (metadata-only) instead of
-        # re-reading and re-writing the same bytes as a second
-        # distributed job per commit. Guards: default view only (custom
-        # views — compound dominance — do real work), unmapped tables
-        # (mapped files stage under physical names), no DVs, no CDF
-        # (its classification consumes the live view anyway), recorded
-        # manifest schema (the linked file's schema equals it by
-        # construction), and the bucket dir actually carries the split
-        # layout (pre-split and compacted-legacy dirs fall back to the
-        # staging job per bucket).
-        stored_schema = _stored_schema(manifest)
-        linkable: dict[int, str | None] = {}
-        if (
-            active_view_fn is None
-            and not is_mapped
-            and not deletion_vectors
-            and not cdf_on
-            and stored_schema is not None
-        ):
-            for b in changed:
-                bdir = os.path.join(
-                    store_path,
-                    version_dir(manifest, store_buckets[b]),
-                    f"__bucket={b}",
-                )
-                names = [
-                    n for n in _io_listdir(bdir) if n.endswith(".parquet")
-                ]
-                actives = [n for n in names if n.startswith("active-")]
-                if (
-                    names
-                    and len(actives) <= 1
-                    and all(
-                        n.startswith(("active-", "tombs-")) for n in names
-                    )
-                ):
-                    # None = every row in the bucket is a tombstone (no
-                    # active file): publish as the empty-bucket memo
-                    linkable[b] = (
-                        os.path.join(bdir, actives[0]) if actives else None
-                    )
-        spark_changed = [b for b in changed if b not in linkable]
-        if spark_changed:
-            paths = _bucket_paths(store_path, manifest, spark_changed)
-            # recorded-schema scan: no footer-merging job at plan time
-            # (guide §1/§6; legacy manifests fall back to mergeSchema)
-            raw = _read_bucket_files(spark, store_path, manifest, paths).drop(
-                "__ver"
-            )
-            # ``active_view_fn``: state rows -> publishable table rows. The
-            # default (row-tombstone filter) matches the single-PK store;
-            # COMPOUND stores MUST pass operators.lww.compound_active_view —
-            # their dominance rules (partition-range tombstones, static
-            # resolution) are read-time, and publishing raw op!='DELETE'
-            # rows would resurrect dominated rows for external readers.
-            # Bucket-local application is sound because the store buckets on
-            # the partition key: a partition's tombstone/static co-locate
-            # with every row they govern (the merge_into invariant).
-            view_fn = active_view_fn or (
-                lambda df: df.filter(F.col("op") != "DELETE")
-            )
-            live = view_fn(raw)
-            if "__bucket" not in live.columns:
-                raise ValueError(
-                    "active_view_fn must preserve the __bucket column "
-                    "(operate on state rows, do not project it away)"
-                )
-            new_schema = live.drop("__bucket").schema
-        else:
-            # all-linked commit: the read with .schema(recorded) would
-            # have produced exactly the recorded data columns
-            live = None
-            new_schema = stored_schema
-        # the table schema only ever WIDENS: reconcile this export's
-        # (changed-buckets) schema with the log's current metaData so a
-        # re-export of an old narrow bucket cannot regress the schema
-        if log.meta is not None:
-            from cdc_apache_cassandra_spark.streaming.schema_evolution import (
-                reconcile_schemas,
-            )
-
-            new_schema = reconcile_schemas(
-                T.StructType.fromJson(json.loads(log.meta["schemaString"])),
-                new_schema,
-            )
-        if is_mapped:
-            # graft name-mode mapping metadata onto the (reconciled)
-            # LOGICAL schema: existing fields keep their physical
-            # name/id (reconcile preserves old StructField metadata),
-            # inherited fields copy the source table's, new fields
-            # mint fresh ids past maxColumnId
-            inherit = None
-            next_id = int(
-                export_cfg.get("delta.columnMapping.maxColumnId") or 0
-            )
-            if log.meta is not None:
-                # later commits inherit the log's OWN mapping by name:
-                # reconcile_schemas rebuilds a type-widened StructField
-                # WITHOUT its metadata, so relying on reconcile alone
-                # would re-mint that column's physical name and
-                # silently null it in every previously published file
-                # (code-review r11 finding)
-                inherit = json.loads(log.meta["schemaString"])["fields"]
-            elif column_mapping != "name":
-                src = _replay(column_mapping)
-                if src.meta is None:
-                    raise FileNotFoundError(
-                        f"column_mapping source has no Delta log: "
-                        f"{column_mapping}"
-                    )
-                if _column_mapping_mode(src.meta) == "none":
-                    raise ValueError(
-                        f"column_mapping source {column_mapping} carries "
-                        "no column mapping to inherit; pass "
-                        'column_mapping="name" to mint fresh'
-                    )
-                inherit = json.loads(src.meta["schemaString"])["fields"]
-                next_id = max(
-                    next_id,
-                    int(
-                        (src.meta.get("configuration") or {}).get(
-                            "delta.columnMapping.maxColumnId"
-                        )
-                        or 0
-                    ),
-                )
-            mapped_fields, next_id = _graft_mapping(
-                new_schema.jsonValue()["fields"], inherit, next_id
-            )
-            schema_json = json.dumps(
-                {"type": "struct", "fields": mapped_fields}
-            )
-            export_cfg["delta.columnMapping.mode"] = "name"
-            export_cfg["delta.columnMapping.maxColumnId"] = str(next_id)
-        else:
-            schema_json = new_schema.json()
-        # sparse-delete buckets re-point their EXISTING file at a
-        # deletion vector instead of rewriting (opt-in — emitting a DV
-        # upgrades the table protocol to reader v3, which base-protocol
-        # consumers cannot read)
-        # the DV planner's two jobs (count-by-bucket gate, set-equality
-        # verify) and the staging write would each re-read the changed
-        # buckets' store files — persist the view once for all three
-        # (scoped-tracked AND explicitly released right after the
-        # staging write, its last use). The CDF writer persists for the
-        # same reason (staging write + change classification both
-        # consume it), releasing after the cdc files are staged; on an
-        # exception in between, the scope tracking is the backstop.
-        if deletion_vectors or cdf_on:
-            from cdc_apache_cassandra_spark.caching import (
-                persist_scoped,
-                release_one,
-            )
-
-            live = persist_scoped(live)
-        # staging is unique per writer: two racing exporters never
-        # clobber each other's files; the loser of the commit race
-        # cleans up its own staging and nothing else
-        staging = None
-        rewrite: list[int] = []
-        if live is not None:
-            staging = os.path.join(
-                out_path, f"_staging_{version}_{uuid.uuid4().hex[:8]}"
-            )
-            try:
-                dv_buckets = (
-                    _plan_dv_buckets(
-                        spark,
-                        out_path,
-                        live,
-                        log,
-                        spark_changed,
-                        dv_max_fraction,
-                        mapped_fields,
-                    )
-                    if deletion_vectors
-                    else {}
-                )
-                rewrite = [b for b in spark_changed if b not in dv_buckets]
-                to_stage = (
-                    live
-                    if not dv_buckets
-                    else live.filter(F.col("__bucket").isin(rewrite))
-                )
-                if mapped_fields is not None:
-                    # mapped tables stage parquet under PHYSICAL names (the
-                    # delta-spark layout; add.stats then key physical too)
-                    to_stage = _to_physical(to_stage, mapped_fields)
-                if rewrite:
-                    (
-                        to_stage.repartition(len(rewrite), F.col("__bucket"))
-                        .write.mode("overwrite")
-                        .partitionBy("__bucket")
-                        .parquet(staging)
-                    )
-                else:
-                    _io_mkdirs(staging)  # the finally-cleanup expects the dir
-            finally:
-                if deletion_vectors and not cdf_on:
-                    # release AND drop the ledger entry (looping callers
-                    # outside the registry/bench would otherwise accumulate
-                    # one dead reference per export). With CDF on, the
-                    # change classification below is the view's actual
-                    # last use — its own finally releases there.
-                    release_one(live)
+        # publish: linked buckets first (no Spark job touches them),
+        # then the staged ones, through the same loop
         _io_mkdirs(os.path.join(out_path, DATA_DIR))
         now = _now_ms()
-        # linked buckets first: adopt the store's active file by hard
-        # link (metadata-only; no Spark job touches these buckets)
-        for b in sorted(linkable):
-            src = linkable[b]
-            if b in published and published[b][0] is not None:
-                actions.append(
-                    {
-                        "remove": {
-                            "path": published[b][0],
-                            "deletionTimestamp": now,
-                            "dataChange": True,
-                        }
-                    }
-                )
-            if src is None:
-                # every row in the bucket is a tombstone: no active file,
-                # same empty-bucket memo as the staged path
-                empty_now[b] = store_buckets[b]
-                continue
-            empty_now.pop(b, None)
-            rel = f"{DATA_DIR}/b{b:05d}-v{store_buckets[b]:010d}.parquet"
-            dst = os.path.join(out_path, rel)
-            _io_link_or_copy(src, dst)
-            actions.append(
-                {
-                    "add": {
-                        "path": rel,
-                        "partitionValues": {},
-                        "size": _io_size(dst),
-                        "modificationTime": now,
-                        "dataChange": True,
-                        "stats": _file_stats_json(dst),
-                        "tags": {
-                            "bucket": str(b),
-                            "storeVersion": str(store_buckets[b]),
-                        },
-                    }
-                }
-            )
-        # move each staged bucket's single data file to its
-        # content-addressed name; metadata-sized driver work
         try:
-            for b in rewrite:
-                bdir = os.path.join(staging, f"__bucket={b}")
-                parts = [
-                    n for n in _io_listdir(bdir) if n.endswith(".parquet")
-                ]
-                if b in published and published[b][0] is not None:
-                    actions.append(
-                        {
-                            "remove": {
-                                "path": published[b][0],
-                                "deletionTimestamp": now,
-                                "dataChange": True,
-                            }
-                        }
-                    )
-                if not parts:
-                    # every row in the bucket was a tombstone: no data
-                    # file, but REMEMBER it (commitInfo memo) so the next
-                    # export does not reclassify it as changed
-                    empty_now[b] = store_buckets[b]
-                    continue
-                if len(parts) != 1:
-                    raise RuntimeError(
-                        f"bucket {b}: expected one staged file, got {parts} "
-                        "(repartition-by-bucket invariant broken)"
-                    )
-                empty_now.pop(b, None)
-                rel = f"{DATA_DIR}/b{b:05d}-v{store_buckets[b]:010d}.parquet"
-                dst = os.path.join(out_path, rel)
-                _io_move(os.path.join(bdir, parts[0]), dst)
-                actions.append(
-                    {
-                        "add": {
-                            "path": rel,
-                            "partitionValues": {},
-                            "size": _io_size(dst),
-                            "modificationTime": now,
-                            "dataChange": True,
-                            "stats": _file_stats_json(dst),
-                            "tags": {
-                                "bucket": str(b),
-                                "storeVersion": str(store_buckets[b]),
-                            },
-                        }
-                    }
+            for sources, publish in (
+                (plan.linkable, _io_link_or_copy),
+                ({b: _staged_file(staging, b) for b in rewrite}, _io_move),
+            ):
+                actions += _publish_buckets(
+                    out_path, plan, sources, publish, now, empty_now
                 )
         finally:
             if staging is not None:
                 _io_rmtree(staging)
-        if dv_buckets:
-            for b in sorted(dv_buckets):
-                # descriptor only — the DV file itself was written
-                # executor-side by the planner (the ordinals never
-                # reach the driver)
-                rel, old_add, dv = dv_buckets[b]
-                actions.append(
-                    {
-                        "remove": {
-                            "path": rel,
-                            "deletionTimestamp": now,
-                            "dataChange": True,
-                            **(
-                                {"deletionVector": old_add["deletionVector"]}
-                                if old_add.get("deletionVector")
-                                else {}
-                            ),
-                        }
-                    }
-                )
-                new_add = dict(old_add)
-                new_add["deletionVector"] = dv
-                new_add["dataChange"] = True
-                new_add["modificationTime"] = now
-                new_add["tags"] = {
-                    **(old_add.get("tags") or {}),
-                    "storeVersion": str(store_buckets[b]),
-                }
-                actions.append({"add": new_add})
-        if cdf_on:
+        actions += _repoint_actions(plan, dv_buckets, now)
+        if plan.cdf_on:
+            from cdc_apache_cassandra_spark.caching import release_one
+
             try:
-                # CHANGE-DATA files for a MIXED commit. Spec synthesis
-                # covers pure-insert and pure-remove commits, so those
-                # deliberately get none; a mixed commit MUST carry cdc
-                # actions (readers treat them as authoritative and
-                # refuse a mixed commit without them) — including the
-                # rare rewrite that changed no row, which ships one
-                # EMPTY cdc file rather than an unreadable commit.
-                # Pre image = every touched bucket's published file
-                # (changed rewrites + drops), read under the NEW
-                # schema; post image = the staged rows; classification
-                # is the SAME pk join delta_changes uses. Distributed
-                # end to end — the driver handles file names only.
-                pre_entries = [
-                    (published[b][0], log.files[published[b][0]])
-                    for b in list(changed) + dropped
-                    if b in published and published[b][0] is not None
-                ]
-                has_adds = any("add" in a for a in actions)
-                if pre_entries and has_adds:
-                    pseudo_meta = {
-                        "schemaString": schema_json,
-                        "partitionColumns": [],
-                        "configuration": export_cfg,
-                    }
-                    logical = T.StructType.fromJson(json.loads(schema_json))
-                    post_df = live.drop("__bucket")
-                    for f in logical.fields:
-                        if f.name not in post_df.columns:
-                            # re-export of an old narrow bucket: the
-                            # reconciled schema keeps columns this
-                            # batch's rows lack — typed nulls, the
-                            # same rule the scan applies to pre-DDL
-                            # files
-                            post_df = post_df.withColumn(
-                                f.name, F.lit(None).cast(f.dataType)
-                            )
-                    changes = _classify_changes(
-                        _scan_adds(
-                            spark, out_path, pre_entries, pseudo_meta
-                        ),
-                        post_df,
-                        cdf_pk,
-                        logical.names,
-                    )
-                    if mapped_fields is not None:
-                        # cdc files of a mapped table store data under
-                        # PHYSICAL names; _change_type keeps its
-                        # literal name (spec passthrough)
-                        changes = _to_physical(changes, mapped_fields)
-                    actions.extend(
-                        _publish_cdc_files(
-                            out_path,
-                            version,
-                            changes,
-                            min(32, max(1, len(pre_entries))),
-                        )
-                    )
+                actions += _export_cdf_actions(
+                    spark,
+                    out_path,
+                    plan,
+                    log,
+                    live,
+                    actions,
+                    schema_json,
+                    mapped_fields,
+                )
             finally:
                 release_one(live)
-
+    # commit
     now = _now_ms()
-    for b in dropped:
-        if published[b][0] is not None:
-            actions.append(
-                {
-                    "remove": {
-                        "path": published[b][0],
-                        "deletionTimestamp": now,
-                        "dataChange": True,
-                    }
-                }
-            )
-
+    for b in plan.dropped:
+        if plan.published[b][0] is not None:
+            actions.append(_remove_action(plan.published[b][0], now))
     schema_changed = schema_json is not None and (
         log.meta is None or log.meta["schemaString"] != schema_json
     )
-    memo_changed = empty_now != log.empty_buckets
-    ict_val = None
-    if ict_on:
-        # strictly monotonic authoritative commit time: never below the
-        # previous commit's (clock skew cannot run table time
-        # backwards). The replay already captured the last commit's
-        # ICT; the file re-read happens only when state came straight
-        # off a checkpoint (the one case replay never saw the commit)
-        prev_ict = (
-            log.last_ict
-            if log.last_ict is not None
-            else _read_last_ict(out_path, log.last)
-        )
-        ict_val = max(now, prev_ict + 1 if prev_ict is not None else 0)
-        if export_cfg.get("delta.enableInCommitTimestamps") != "true":
-            export_cfg["delta.enableInCommitTimestamps"] = "true"
-            if log.meta is not None:
-                # enabled AFTER creation: the spec's provenance keys
-                # tell readers which versions carry ICTs at all
-                export_cfg["delta.inCommitTimestampEnablementVersion"] = (
-                    str(version)
-                )
-                export_cfg["delta.inCommitTimestampEnablementTimestamp"] = (
-                    str(ict_val)
-                )
-    cfg_changed = export_cfg != dict(
-        (log.meta or {}).get("configuration") or {}
-    )
-    if not actions and not schema_changed and not memo_changed:
+    ict = _next_ict(log, out_path, now) if plan.ict_on else None
+    if plan.ict_on and cfg.get("delta.enableInCommitTimestamps") != "true":
+        cfg["delta.enableInCommitTimestamps"] = "true"
+        if log.meta is not None:
+            # enabled AFTER creation: the spec's provenance keys tell
+            # readers which versions carry ICTs at all
+            cfg["delta.inCommitTimestampEnablementVersion"] = str(version)
+            cfg["delta.inCommitTimestampEnablementTimestamp"] = str(ict)
+    cfg_changed = cfg != dict((log.meta or {}).get("configuration") or {})
+    if not actions and not schema_changed and empty_now == log.empty_buckets:
         # a config-only change (mid-life ICT enablement) commits on an
         # EXISTING table; with no metaData yet there is no schema to
         # write a first metaData from — nothing exportable, stay a
         # clean no-op exactly as before the flag existed
         if log.meta is None or not cfg_changed:
             return None  # export already current
-
-    def _has_writer_feature(feature: str) -> bool:
-        return log.proto is not None and feature in (
-            log.proto.get("writerFeatures") or []
-        )
-
-    def _implies_cdf(proto: dict | None) -> bool:
-        # writers must honor delta.enableChangeDataFeed when the
-        # protocol says so: features form -> the changeDataFeed writer
-        # feature; legacy form -> minWriterVersion >= 4
-        if proto is None:
-            return False
-        wf = proto.get("writerFeatures")
-        if wf is not None:
-            return "changeDataFeed" in wf
-        return int(proto.get("minWriterVersion", 2)) >= 4
-
     header: list[dict] = []
-    if log.last < 0:
-        header.append(
-            {
-                "protocol": _export_protocol(
-                    is_mapped, bool(dv_buckets), ict_on, v2c_on, cdf_on
-                )
-            }
-        )
-    elif (
-        (
-            dv_buckets
-            and (
-                log.proto is None
-                or not log.has_reader_feature("deletionVectors")
-            )
-        )
-        or (ict_on and not _has_writer_feature("inCommitTimestamp"))
-        or (
-            v2c_on
-            and (
-                log.proto is None
-                or "v2Checkpoint"
-                not in (log.proto.get("readerFeatures") or [])
-            )
-        )
-        or (cdf_on and not _implies_cdf(log.proto))
-    ):
-        # first DV / ICT / V2-checkpoint / CDF commit on a table not
-        # yet declaring the feature: the spec's in-place protocol
-        # upgrade — the UNION of everything the table already declares
-        # and what this export now needs (never a rebuild, which would
-        # drop live features)
-        header.append(
-            {
-                "protocol": _merge_protocol(
-                    log.proto,
-                    _export_protocol(
-                        is_mapped, bool(dv_buckets), ict_on, v2c_on, cdf_on
-                    ),
-                )
-            }
-        )
+    protocol = _export_protocol_action(log, plan, bool(dv_buckets))
+    if protocol is not None:
+        header.append(protocol)
     if log.meta is None or schema_changed or cfg_changed:
         meta = log.meta or {}
         header.append(
@@ -2461,7 +2536,7 @@ def delta_export(
                     "format": {"provider": "parquet", "options": {}},
                     "schemaString": schema_json or meta["schemaString"],
                     "partitionColumns": [],
-                    "configuration": export_cfg,
+                    "configuration": cfg,
                     "createdTime": meta.get("createdTime", now),
                 }
             }
@@ -2476,27 +2551,17 @@ def delta_export(
                 }
             }
         )
-    ci = {
-        "commitInfo": {
-            "timestamp": now,
-            "operation": "CDC MERGE EXPORT",
-            "operationParameters": {
-                "storeVersion": str(manifest["version"]),
-                "changedBuckets": str(len(changed)),
-                "droppedBuckets": str(len(dropped)),
-            },
-            "emptyBuckets": {str(b): v for b, v in empty_now.items()},
-        }
+    info = {
+        "timestamp": now,
+        "operation": "CDC MERGE EXPORT",
+        "operationParameters": {
+            "storeVersion": str(manifest["version"]),
+            "changedBuckets": str(len(plan.changed)),
+            "droppedBuckets": str(len(plan.dropped)),
+        },
+        "emptyBuckets": {str(b): v for b, v in empty_now.items()},
     }
-    if ict_val is not None:
-        ci["commitInfo"]["inCommitTimestamp"] = ict_val
-        # spec: with inCommitTimestamp enabled, commitInfo MUST be the
-        # commit's first action (readers resolve the time without
-        # scanning the whole file)
-        commit_actions = [ci] + header + actions
-    else:
-        commit_actions = header + [ci] + actions
-    _write_commit(out_path, version, commit_actions)
+    _commit(out_path, version, header, info, actions, ict)
     # delta-spark cadence: a parquet checkpoint every N commits, so a
     # long-lived export stays replayable in O(N) JSON reads and old JSON
     # can be cleaned. After the commit, so a checkpoint failure never
@@ -2506,7 +2571,7 @@ def delta_export(
         and version > 0
         and version % checkpoint_interval == 0
     ):
-        write_checkpoint(out_path, version, v2=v2c_on)
+        write_checkpoint(out_path, version, v2=plan.v2c_on)
     return version
 
 
@@ -2551,9 +2616,6 @@ def delta_restore(
         raise ValueError(f"{out_path}: no snapshot at version {version}")
     from cdc_apache_cassandra_spark.streaming.deletion_vectors import (
         dv_unique_id,
-    )
-    from cdc_apache_cassandra_spark.streaming.materialize import (
-        CommitConflict,
     )
 
     def keyed(files: dict) -> dict:
@@ -2606,21 +2668,10 @@ def delta_restore(
         if not add_back and not drop and restored_meta is None:
             return cur.last  # target state IS the current state
         now = _now_ms()
-        actions: list[dict] = []
-        for p, a in add_back:
-            add = dict(a)
-            add["dataChange"] = True
-            add["modificationTime"] = now
-            actions.append({"add": add})
-        for p, a in drop:
-            rm: dict = {
-                "path": p,
-                "deletionTimestamp": now,
-                "dataChange": True,
-            }
-            if a.get("deletionVector"):
-                rm["deletionVector"] = a["deletionVector"]
-            actions.append({"remove": rm})
+        actions = [
+            {"add": {**a, "dataChange": True, "modificationTime": now}}
+            for _p, a in add_back
+        ] + [_remove_action(p, now, a.get("deletionVector")) for p, a in drop]
         commit_v = cur.last + 1
         if cdf_on and add_back and drop:
             # mixed commit on a CDF table: delta-spark's RESTORE change
@@ -2657,37 +2708,25 @@ def delta_restore(
                 )
                 + actions
             )
-        header: list[dict] = []
-        if restored_meta is not None:
-            header.append({"metaData": restored_meta})
-        info: dict = {
+        header = [] if restored_meta is None else [{"metaData": restored_meta}]
+        info = {
             "timestamp": now,
             "operation": "RESTORE",
             "operationParameters": {"version": str(version)},
+            # restore the exporter's empty-bucket memo to the TARGET's
+            # so a later delta_export diffs against the restored state,
+            # not the pre-restore one — emitted even when EMPTY (replay
+            # treats an explicit {} as a reset; an absent key would
+            # leave the pre-restore memo in force)
+            "emptyBuckets": {str(b): v for b, v in tgt.empty_buckets.items()},
         }
-        # restore the exporter's empty-bucket memo to the TARGET's so a
-        # later delta_export diffs against the restored state, not the
-        # pre-restore one — emitted even when EMPTY (replay treats an
-        # explicit {} as a reset; an absent key would leave the
-        # pre-restore memo in force)
-        info["emptyBuckets"] = {
-            str(b): v for b, v in tgt.empty_buckets.items()
-        }
-        ci = {"commitInfo": info}
-        if cfg.get("delta.enableInCommitTimestamps") == "true":
-            prev_ict = (
-                cur.last_ict
-                if cur.last_ict is not None
-                else _read_last_ict(out_path, cur.last)
-            )
-            info["inCommitTimestamp"] = max(
-                now, prev_ict + 1 if prev_ict is not None else 0
-            )
-            commit_actions = [ci] + header + actions
-        else:
-            commit_actions = header + [ci] + actions
+        ict = (
+            _next_ict(cur, out_path, now)
+            if cfg.get("delta.enableInCommitTimestamps") == "true"
+            else None
+        )
         try:
-            _write_commit(out_path, commit_v, commit_actions)
+            _commit(out_path, commit_v, header, info, actions, ict)
             return commit_v
         except CommitConflict:
             continue  # another writer took the version — re-diff

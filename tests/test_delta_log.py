@@ -11,6 +11,7 @@ behave like Delta's.
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from cdc_apache_cassandra_spark.streaming.delta_log import (
@@ -2049,3 +2050,231 @@ def test_write_checkpoint_v2_requires_declared_feature(spark, tmp_path):
     _, table = _dv_export_store(spark, tmp_path)
     with pytest.raises(ValueError, match="v2Checkpoint"):
         write_checkpoint(table, v2=True)
+
+
+# --- characterization: one export commit per write strategy -----------------
+
+
+def _view_no_deletes(df):
+    # the default view's rows through a CUSTOM view function: takes the
+    # staging-job strategy instead of the hard-link one
+    return df.filter(F.col("op") != "DELETE")
+
+
+_EXPORT_CASES = {
+    # case -> (first export's options, second export's options)
+    "linked": ({}, {}),
+    "staged": (
+        {"active_view_fn": _view_no_deletes},
+        {"active_view_fn": _view_no_deletes},
+    ),
+    "dv_repoint": ({}, {"deletion_vectors": True}),
+    "cdf_mixed": ({"change_data_feed": True, "cdf_pk_cols": ["pk"]}, {}),
+    "column_mapping": ({"column_mapping": "name"}, {}),
+    "ict": ({"in_commit_timestamps": True}, {}),
+}
+
+
+def _commit_shape(table, version):
+    """A commit's actions with timestamps and uuid-bearing names
+    normalized: what the export decided, not when or under which
+    token. ``linked`` lists the newly published data files that are a
+    hard link of the store's file (the metadata-only strategy)."""
+    import re
+
+    path = os.path.join(table, LOG_DIR, f"{version:020d}.json")
+    actions = [json.loads(x) for x in open(path) if x.strip()]
+    info = next(a["commitInfo"] for a in actions if "commitInfo" in a)
+    meta = next((a["metaData"] for a in actions if "metaData" in a), None)
+    adds = [a["add"] for a in actions if "add" in a]
+    return {
+        "kinds": [next(iter(a)) for a in actions],
+        "adds": [
+            (
+                a["path"],
+                a.get("tags"),
+                (a.get("deletionVector") or {}).get("cardinality"),
+            )
+            for a in adds
+        ],
+        "linked": [
+            a["path"]
+            for a in adds
+            if not a.get("deletionVector")
+            and os.stat(os.path.join(table, a["path"])).st_nlink > 1
+        ],
+        "removes": [
+            (a["remove"]["path"], "deletionVector" in a["remove"])
+            for a in actions
+            if "remove" in a
+        ],
+        "cdc": [
+            re.sub(r"-[0-9a-f]{8}-", "-<token>-", a["cdc"]["path"])
+            for a in actions
+            if "cdc" in a
+        ],
+        "operationParameters": info["operationParameters"],
+        "emptyBuckets": info["emptyBuckets"],
+        "ict": "inCommitTimestamp" in info,
+        "protocol": next(
+            (a["protocol"] for a in actions if "protocol" in a), None
+        ),
+        "configuration": None if meta is None else {
+            k: "<ts>" if k.endswith("Timestamp") else v
+            for k, v in meta["configuration"].items()
+        },
+    }
+
+
+def _expected_export_shapes(case):
+    """The two commits of ``test_export_commit_shape_per_strategy``:
+    v0 publishes all four buckets; v1 empties bucket 0 (memo only),
+    rewrites bucket 2 and either rewrites bucket 1 or re-points its
+    file at a deletion vector."""
+
+    def data(b, v):
+        return f"data/b{b:05d}-v{v:010d}.parquet"
+
+    def tags(b, v):
+        return {"bucket": str(b), "storeVersion": str(v)}
+
+    base_protocol = {"minReaderVersion": 1, "minWriterVersion": 2}
+    v0 = {
+        "kinds": ["protocol", "metaData", "commitInfo"] + ["add"] * 4,
+        "adds": [(data(b, 1), tags(b, 1), None) for b in range(4)],
+        "linked": [data(b, 1) for b in range(4)],
+        "removes": [],
+        "cdc": [],
+        "operationParameters": {
+            "changedBuckets": "4", "droppedBuckets": "0", "storeVersion": "1"
+        },
+        "emptyBuckets": {},
+        "ict": False,
+        "protocol": base_protocol,
+        "configuration": {},
+    }
+    v1 = {
+        "kinds": ["commitInfo", "remove", "remove", "add", "remove", "add"],
+        "adds": [(data(b, 2), tags(b, 2), None) for b in (1, 2)],
+        "linked": [data(b, 2) for b in (1, 2)],
+        "removes": [(data(b, 1), False) for b in (0, 1, 2)],
+        "cdc": [],
+        "operationParameters": {
+            "changedBuckets": "3", "droppedBuckets": "0", "storeVersion": "2"
+        },
+        "emptyBuckets": {"0": 2},
+        "ict": False,
+        "protocol": None,
+        "configuration": None,
+    }
+    if case == "staged":
+        v0["linked"] = v1["linked"] = []
+    elif case == "dv_repoint":
+        v1.update(
+            kinds=["protocol"] + v1["kinds"],
+            adds=[
+                (data(2, 2), tags(2, 2), None),
+                (data(1, 1), tags(1, 2), 1),
+            ],
+            linked=[],
+            removes=[(data(b, 1), False) for b in (0, 2, 1)],
+            protocol={
+                "minReaderVersion": 3,
+                "minWriterVersion": 7,
+                "readerFeatures": ["deletionVectors"],
+                "writerFeatures": [
+                    "appendOnly", "deletionVectors", "invariants"
+                ],
+            },
+        )
+    elif case == "cdf_mixed":
+        v0.update(
+            linked=[],
+            protocol={"minReaderVersion": 1, "minWriterVersion": 4},
+            configuration={
+                "cdcEngine.changeDataFeed.pkCols": "pk",
+                "delta.enableChangeDataFeed": "true",
+            },
+        )
+        v1.update(
+            kinds=v1["kinds"] + ["cdc"] * 3,
+            linked=[],
+            cdc=[
+                f"_change_data/cdc-{1:020d}-<token>-{i:05d}.parquet"
+                for i in range(3)
+            ],
+        )
+    elif case == "column_mapping":
+        v0.update(
+            linked=[],
+            protocol={"minReaderVersion": 2, "minWriterVersion": 5},
+            configuration={
+                "delta.columnMapping.maxColumnId": "6",
+                "delta.columnMapping.mode": "name",
+            },
+        )
+        v1["linked"] = []
+    elif case == "ict":
+        v0.update(
+            kinds=["commitInfo", "protocol", "metaData"] + ["add"] * 4,
+            ict=True,
+            protocol={
+                "minReaderVersion": 1,
+                "minWriterVersion": 7,
+                "writerFeatures": [
+                    "appendOnly", "inCommitTimestamp", "invariants"
+                ],
+            },
+            configuration={"delta.enableInCommitTimestamps": "true"},
+        )
+        v1["ict"] = True
+    return {0: v0, 1: v1}
+
+
+@pytest.mark.parametrize("case", sorted(_EXPORT_CASES))
+def test_export_commit_shape_per_strategy(spark, tmp_path, case):
+    """Pins the exact commit each export strategy writes — action-kind
+    order, add tags, remove paths, commitInfo parameters, the
+    empty-bucket memo and the protocol — for a second export that
+    empties one bucket, sparsely deletes from another and updates a
+    third, leaving the fourth untouched."""
+    first, second = _EXPORT_CASES[case]
+    store = str(tmp_path / "store")
+    table = str(tmp_path / "table")
+    os.makedirs(store)
+    merge_into(
+        spark,
+        store,
+        spark.createDataFrame(
+            [("INSERT", k, 10, f"v{k}", 0, k) for k in range(40)], SCHEMA6
+        ),
+        ["pk"],
+        n_buckets=4,
+    )
+    got = {}
+    assert delta_export(spark, store, table, **first) == 0
+    got[0] = _commit_shape(table, 0)
+    bucket_of = {
+        r.pk: r.b
+        for r in spark.range(40)
+        .select(
+            F.col("id").alias("pk"),
+            F.pmod(F.xxhash64(F.col("id")), F.lit(4)).alias("b"),
+        )
+        .collect()
+    }
+    in_b = {
+        b: sorted(k for k, v in bucket_of.items() if v == b) for b in range(4)
+    }
+    batch = (
+        [("DELETE", k, 20, None, 1, k) for k in in_b[0]]
+        + [("DELETE", in_b[1][0], 20, None, 1, 100)]
+        + [("UPDATE", in_b[2][0], 20, "upd", 1, 101)]
+    )
+    merge_into(
+        spark, store, spark.createDataFrame(batch, SCHEMA6), ["pk"],
+        n_buckets=4,
+    )
+    assert delta_export(spark, store, table, **second) == 1
+    got[1] = _commit_shape(table, 1)
+    assert got == _expected_export_shapes(case)

@@ -170,3 +170,24 @@ def test_restore_keeps_cdf_enablement_in_restored_metadata(spark, tmp_path):
     assert meta["configuration"]["delta.enableChangeDataFeed"] == "true"
     assert meta["configuration"]["cdcEngine.changeDataFeed.pkCols"] == "pk"
     assert any("cdc" in x for x in _commit_actions(table, rv))
+
+
+def test_restore_on_ict_table_commitinfo_first_and_monotonic(
+    spark, tmp_path, monkeypatch
+):
+    """RESTORE on an in-commit-timestamp table: commitInfo is the
+    commit's first action and its inCommitTimestamp strictly exceeds
+    the previous commit's, even when the clock steps backwards."""
+    import cdc_apache_cassandra_spark.streaming.delta_log as dl
+
+    _, table = _build(spark, tmp_path, in_commit_timestamps=True)
+    prev = _commit_actions(table, 1)[0]["commitInfo"]["inCommitTimestamp"]
+    v0_rows = _rows(read_delta(spark, table, version=0))
+    monkeypatch.setattr(dl, "_now_ms", lambda: prev - 50_000)
+    rv = delta_restore(spark, table, version=0)
+    a = _commit_actions(table, rv)
+    assert "commitInfo" in a[0], "commitInfo must be the FIRST action"
+    assert a[0]["commitInfo"]["operation"] == "RESTORE"
+    assert a[0]["commitInfo"]["inCommitTimestamp"] == prev + 1
+    assert dict(commit_timestamps(table))[rv] == prev + 1
+    assert _rows(read_delta(spark, table)) == v0_rows

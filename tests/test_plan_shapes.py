@@ -14,6 +14,8 @@ import contextlib
 import io
 import re
 
+import pytest
+
 from cdc_apache_cassandra_spark.plans import QUERIES
 
 
@@ -276,7 +278,26 @@ _SINGLE_PARTITION_ALLOWLIST = {
 }
 
 
-def test_single_partition_exchanges_are_folds_or_allowlisted(spark):
+@pytest.fixture(scope="module")
+def registered_plans(spark, sf_dir):
+    """Every registered plan built ONCE on the smoke corpus (sf0.001),
+    as its ``simple`` and ``formatted`` explain strings — shared by the
+    global plan lints below, which would otherwise each build all of
+    them."""
+    from cdc_apache_cassandra_spark.caching import release_plan_caches
+
+    plans = {}
+    for name, q in QUERIES.items():
+        df = q.fn(spark, sf_dir)
+        plans[name] = {
+            "simple": plan_str(df, mode="simple"),
+            "formatted": plan_str(df),
+        }
+    release_plan_caches()
+    return plans
+
+
+def test_single_partition_exchanges_are_folds_or_allowlisted(registered_plans):
     """Global scale lint (round-3 fix: the round-2 version could not see
     SinglePartition at all — it lives on the Arguments line of formatted
     explain, not the operator header). Every `Exchange SinglePartition`
@@ -287,10 +308,9 @@ def test_single_partition_exchanges_are_folds_or_allowlisted(spark):
     windows (the canonical 100x killer) fail here."""
     from tools.plan_report import single_partition_kinds
 
-    sf = "/root/testdata/sf0.001"
     offenders = {}
-    for name, q in QUERIES.items():
-        kinds = single_partition_kinds(plan_str(q.fn(spark, sf), mode="simple"))
+    for name, plans in registered_plans.items():
+        kinds = single_partition_kinds(plans["simple"])
         n_global = kinds.count("global")
         if n_global and name not in _SINGLE_PARTITION_ALLOWLIST:
             offenders[name] = n_global
@@ -323,19 +343,16 @@ def test_deglobalized_queries_have_no_global_gather(spark):
         assert name not in _SINGLE_PARTITION_ALLOWLIST
 
 
-def test_no_cartesian_product_in_any_registered_plan(spark):
+def test_no_cartesian_product_in_any_registered_plan(registered_plans):
     """Global scale lint: no registered query may compile to a
     CartesianProductExec — every deliberate cross join in the surface is
     a 1-row/broadcastable side (BroadcastNestedLoopJoin), never an
     unbounded pair blow-up. Also forbids BatchEvalPython (row-at-a-time
     Python UDFs): Python may appear only Arrow-batched (ArrowEvalPython /
     MapInPandas / FlatMapGroupsInPandas)."""
-    from cdc_apache_cassandra_spark.plans import QUERIES
-
-    sf = "/root/testdata/sf0.001"
     offenders = {}
-    for name, q in QUERIES.items():
-        p = plan_str(q.fn(spark, sf))
+    for name, plans in registered_plans.items():
+        p = plans["formatted"]
         hits = [
             op
             for op in ("CartesianProduct", "BatchEvalPython")

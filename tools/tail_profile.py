@@ -2,8 +2,7 @@
 query, split wall time into
   construct = Python-side plan build (q.fn(spark, sf_dir) returning a DF)
   exec      = noop write of that DF (analysis + optimization + jobs)
-and, for the exec side, how much was actual JVM job time (sum of stage
-wall from the status store) vs driver/py4j overhead.
+and, for the exec side, how many Spark jobs and stages it ran.
 
 Usage: python tools/tail_profile.py [sf_dir] [--max-sec 1.0]
 Prints one JSON line per query plus an aggregate breakdown, so the
@@ -53,11 +52,9 @@ def main():
 
     tracker = sc.statusTracker()
 
-    def stage_seconds(job_lo: int) -> tuple[float, int, int]:
-        """(sum of completed-stage wall seconds, n_stages, n_jobs) for
-        jobs with id >= job_lo, via the Python StatusTracker."""
-        total = 0.0
-        n = 0
+    def job_counts(job_lo: int) -> tuple[int, int]:
+        """(n_stages, n_jobs) for jobs with id >= job_lo, via the
+        Python StatusTracker."""
         jobs = 0
         stage_ids = set()
         for jid in tracker.getJobIdsForGroup(None):
@@ -68,11 +65,10 @@ def main():
                 continue
             jobs += 1
             stage_ids.update(info.stageIds)
-        n = len(stage_ids)
-        return total, n, jobs
+        return len(stage_ids), jobs
 
     rows = []
-    agg = {"construct": 0.0, "exec": 0.0, "stage": 0.0, "n": 0, "jobs": 0}
+    agg = {"construct": 0.0, "exec": 0.0, "n": 0, "jobs": 0}
     for name in names:
         q = QUERIES[name]
         # rep 1 = warmup (codegen/JIT); rep 2 measured
@@ -98,8 +94,7 @@ def main():
                 "exec": round(t2 - t1, 3),
             }
             if rep == 1:
-                st, n_stages, n_jobs = stage_seconds(job_lo)
-                rec["stage_sec"] = round(st, 3)
+                n_stages, n_jobs = job_counts(job_lo)
                 rec["n_stages"] = n_stages
                 rec["n_jobs"] = n_jobs
             best = rec
@@ -111,7 +106,6 @@ def main():
         rows.append(best)
         agg["construct"] += best["construct"]
         agg["exec"] += best["exec"]
-        agg["stage"] += best.get("stage_sec", 0.0)
         agg["jobs"] += best.get("n_jobs", 0)
         agg["n"] += 1
 
