@@ -1,45 +1,39 @@
 """Vectorized (Arrow/numpy) batch codec for the Avro wire format.
 
 The reference encodes every mutation through JVM Avro
-(NativeAvroConverter, AbstractPulsarMutationSender.java:190-193); our
-container has no spark-avro jar, so the active default is the
-pure-Python Avro 1.11 codec in :mod:`avro_codec`. Round-2 review flagged
-its per-record ``dict`` encode loop as the largest remaining Python cost
-on the wire path ("every event crosses this codec twice").
+(NativeAvroConverter, AbstractPulsarMutationSender.java:190-193). This
+engine carries the Avro 1.11 binary layout twice: the per-record
+reference codec in :mod:`avro_codec`, and this module, the fast path
+every wire record takes. It compiles an Avro schema node (the
+nested-tuple model of :mod:`avro_codec`) into
 
-This module removes that loop for the hot-path field types. It compiles
-an Avro schema node (the nested-tuple model of :mod:`avro_codec`) into
+- a **vector encoder**: ``pyarrow.RecordBatch -> pa.BinaryArray``, one
+  Avro-binary record per row. Fixed-width fields
+  (long/int/double/float/bool/timestamp/date) are encoded with numpy:
+  zigzag + varint byte planes are computed for the whole column at once
+  ((n, 11) uint8 matrix + per-row length); string/bytes payloads are
+  sliced straight out of the Arrow data buffer; rare types
+  (cql_decimal/varint/duration, arrays, maps, nested records) become
+  per-value :func:`avro_codec.encode_value` segments. Every segment is
+  placed into one output buffer with a ragged scatter.
+- a **vector decoder**: ``pa.BinaryArray -> {field: pa.Array | list}``
+  that parses varints as byte-plane gathers and wraps payloads into
+  exact-typed Arrow arrays; rare types take a per-row
+  :func:`avro_codec.decode_value` inside the same position-tracked walk.
 
-- a **batch encoder**: ``pyarrow.RecordBatch -> list[bytes|None]``, one
-  Avro-binary record per row, built from per-FIELD fragment builders.
-  Fixed-width fields (long/int/double/float/bool/timestamp/date) are
-  encoded with numpy: zigzag + varint byte planes are computed for the
-  whole column at once ((n, 11) uint8 matrix + per-row length), so the
-  only per-row Python work is one flat-buffer slice and one
-  ``b"".join`` across fields. Strings/bytes take a tight per-value loop
-  (length varint + payload); rare types (cql_decimal/varint/duration,
-  arrays, maps, nested records) fall back to
-  :func:`avro_codec.encode_value` per value.
-- a **batch decoder**: ``list[bytes|None] -> dict[str, list]`` with a
-  pre-compiled, non-recursive step list per field (no per-row
-  isinstance dispatch), returning plain Python columns that callers
-  wrap into exact-typed ``pyarrow`` arrays.
+Byte identity with :func:`avro_codec.encode_record` and inversion of it
+are pinned by ``tests/test_wire_format.py`` (golden matrix, property
+tests and a random-schema fuzz).
 
-Byte identity with :func:`avro_codec.encode_record` is pinned by
-``tests/test_wire_format.py`` (golden matrix + property tests); the
-pandas-UDF path remains available as ``codec='avro-pandas'`` and the
-round-trip tests assert both paths produce identical wire bytes.
-
-Working on Arrow arrays (``mapInArrow``) rather than pandas also fixes a
-latent lossiness: Arrow->pandas turns a nullable int64 column into
-float64, silently rounding values above 2**53 before they reach the
-encoder. Arrow arrays keep exact int64 all the way down.
+Working on Arrow arrays (``mapInArrow``) rather than pandas keeps
+nullable int64 columns exact (Arrow->pandas turns them into float64,
+rounding values above 2**53) and keeps SQL NULL distinct from a NaN
+double.
 """
 
 from __future__ import annotations
 
-import struct as _struct
-from typing import Any, Callable
+from typing import Callable
 
 import numpy as np
 import pyarrow as pa
@@ -47,227 +41,37 @@ import pyarrow as pa
 from cdc_apache_cassandra_spark.functions.avro_codec import (
     decode_value,
     encode_value,
-    read_bytes,
-    read_long,
 )
 
 _NULL = b"\x00"  # union index 0 == null (zigzag(0))
 _PRESENT = 2  # union index 1 (zigzag(1) == 2)
 
 
-def _mat_to_frags(mat: np.ndarray, lens: np.ndarray) -> list:
-    """Byte-plane matrix + per-row lengths -> per-row bytes fragments.
-    Null rows (len 1, leading 0x00) slice to exactly ``_NULL``."""
-    buf = mat.tobytes()
-    w = mat.shape[1]
-    return [buf[i * w : i * w + l] for i, l in enumerate(lens.tolist())]
-
-
-def _varint_frags(vals: np.ndarray, nulls: np.ndarray | None) -> list:
-    """Per-row union-prefixed zigzag varints for an int64 column, as
-    ``bytes`` fragments (``b"\\x00"`` at null positions). One plane
-    construction shared with the vector encoder (:func:`_varint_mat`) —
-    the two paths cannot desynchronize."""
-    return _mat_to_frags(*_varint_mat(vals, nulls))
-
-
-def _fixed_frags(raw: np.ndarray, width: int, nulls: np.ndarray | None) -> list:
-    """Union prefix + little-endian fixed-width payload (double/float),
-    shared plane construction with :func:`_fixed_mat`."""
-    return _mat_to_frags(*_fixed_mat(raw, width, nulls))
-
-
-def _int_col(arr: pa.Array) -> tuple[np.ndarray, np.ndarray | None]:
-    """(int64 values with nulls as 0, null mask) for any integer-ish array."""
-    if arr.null_count:
-        nulls = np.asarray(arr.is_null())
-        vals = np.asarray(arr.fill_null(0), dtype=np.int64)
-        return vals, nulls
-    return np.asarray(arr, dtype=np.int64), None
-
-
-def _varint_of_len(n: int) -> bytes:
-    """Non-negative zigzag varint (string/bytes length prefix)."""
-    n <<= 1
-    out = bytearray()
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-_LEN_CACHE = [_varint_of_len(i) for i in range(4096)]
-
-
-def _len_varint(n: int) -> bytes:
-    return _LEN_CACHE[n] if n < 4096 else _varint_of_len(n)
-
-
-def _field_encoder(node: Any) -> Callable[[pa.Array], list]:
-    """Compile one ``("null", sub)`` union field into a fragment builder."""
-    if not (isinstance(node, tuple) and node[0] == "null"):
-        # non-nullable field (not produced by avro_schema_for, but keep
-        # the seam total): per-value fallback without union prefix
-        def enc_plain(arr: pa.Array) -> list:
-            out = []
-            for v in arr.to_pylist():
-                ba = bytearray()
-                encode_value(ba, node, v)
-                out.append(bytes(ba))
-            return out
-
-        return enc_plain
-
-    sub = node[1]
-
-    if sub in ("long", "int"):
-
-        def enc_int(arr: pa.Array) -> list:
-            vals, nulls = _int_col(arr)
-            return _varint_frags(vals, nulls)
-
-        return enc_int
-
-    if sub == "timestamp-millis":
-
-        def enc_ts(arr: pa.Array) -> list:
-            # Arrow timestamps are integral since-epoch; normalize to ms
-            t = arr.type
-            unit = getattr(t, "unit", "us")
-            div = {"s": 1, "ms": 1, "us": 1_000, "ns": 1_000_000}[unit]
-            mul = 1000 if unit == "s" else 1
-            ints = arr.cast(pa.int64())
-            vals, nulls = _int_col(ints)
-            if div > 1:
-                vals = vals // div
-            if mul > 1:
-                vals = vals * mul
-            return _varint_frags(vals, nulls)
-
-        return enc_ts
-
-    if sub == "date":
-
-        def enc_date(arr: pa.Array) -> list:
-            vals, nulls = _int_col(arr.cast(pa.int32()))
-            return _varint_frags(vals, nulls)
-
-        return enc_date
-
-    if sub == "double":
-
-        def enc_double(arr: pa.Array) -> list:
-            nulls = np.asarray(arr.is_null()) if arr.null_count else None
-            vals = np.asarray(
-                arr.fill_null(0.0) if arr.null_count else arr, dtype="<f8"
-            )
-            return _fixed_frags(vals.view(np.uint8), 8, nulls)
-
-        return enc_double
-
-    if sub == "float":
-
-        def enc_float(arr: pa.Array) -> list:
-            nulls = np.asarray(arr.is_null()) if arr.null_count else None
-            vals = np.asarray(
-                arr.fill_null(0.0) if arr.null_count else arr, dtype="<f4"
-            )
-            return _fixed_frags(vals.view(np.uint8), 4, nulls)
-
-        return enc_float
-
-    if sub == "boolean":
-        lut = {None: _NULL, True: b"\x02\x01", False: b"\x02\x00"}
-
-        def enc_bool(arr: pa.Array) -> list:
-            return [lut[v] for v in arr.to_pylist()]
-
-        return enc_bool
-
-    if sub == "string":
-
-        def enc_str(arr: pa.Array) -> list:
-            out = []
-            ap = out.append
-            for s in arr.to_pylist():
-                if s is None:
-                    ap(_NULL)
-                else:
-                    b = s.encode("utf-8")
-                    ap(b"\x02" + _len_varint(len(b)) + b)
-            return out
-
-        return enc_str
-
-    if sub == "bytes":
-
-        def enc_bytes(arr: pa.Array) -> list:
-            out = []
-            ap = out.append
-            for b in arr.to_pylist():
-                if b is None:
-                    ap(_NULL)
-                else:
-                    ap(b"\x02" + _len_varint(len(b)) + b)
-            return out
-
-        return enc_bytes
-
-    # rare wire types (cql_varint/cql_decimal/cql_duration, collections,
-    # nested records): exact per-value fallback through avro_codec
-    def enc_fallback(arr: pa.Array) -> list:
-        out = []
-        for v in arr.to_pylist():
-            if v is None:
-                out.append(_NULL)
-            else:
-                ba = bytearray()
-                encode_value(ba, node, v)
-                out.append(bytes(ba))
-        return out
-
-    return enc_fallback
-
-
-def make_batch_encoder(
-    node: tuple,
-) -> Callable[[pa.RecordBatch], list]:
-    """Compile a ``("record", fields)`` node into a RecordBatch encoder
-    returning one Avro-binary blob per row (column order = field order;
-    the batch must carry columns named like the record fields)."""
-    assert node[0] == "record", node
-    field_encoders = [(name, _field_encoder(sub)) for name, sub in node[1]]
-
-    def encode_batch(batch: pa.RecordBatch) -> list:
-        frag_cols = [
-            enc(batch.column(name)) for name, enc in field_encoders
-        ]
-        if len(frag_cols) == 1:
-            return frag_cols[0]
-        join = b"".join
-        return [join(parts) for parts in zip(*frag_cols)]
-
-    return encode_batch
-
-
-# ---------------------------------------------------------------------------
-# fully vectorized encoder: per-field byte segments scattered into one
-# output buffer — no per-row join, output is a pa.BinaryArray directly
-
-
-def vector_encodable(node: tuple) -> bool:
-    """The vector encoder covers every ``("null", T)`` union field:
-    primitives fully vectorized; anything else (collections, CQL
-    logicals, nested records) becomes a per-value byte segment folded
-    into the same scatter assembly — so any schema produced by
-    :func:`avro_codec.avro_schema_for` takes this path."""
-    return node[0] == "record" and all(
+def _union_fields(node: tuple) -> list[tuple[str, object]]:
+    """``(name, T)`` per field of a record whose fields are all
+    ``("null", T)`` unions — every schema :func:`avro_codec.avro_schema_for`
+    emits."""
+    assert node[0] == "record" and all(
         isinstance(sub, tuple) and sub[0] == "null" for _, sub in node[1]
-    )
+    ), node
+    return [(name, sub[1]) for name, sub in node[1]]
+
+
+def _offsets(arr: pa.Array) -> np.ndarray:
+    """The ``n + 1`` value offsets of a string/binary array as int64,
+    read at the array's own width: ``large_string``/``large_binary``
+    (``spark.sql.execution.arrow.useLargeVarTypes``) carry int64
+    offsets, the others int32. Offsets index the unsliced data buffer."""
+    t = arr.type
+    large = pa.types.is_large_string(t) or pa.types.is_large_binary(t)
+    raw = np.frombuffer(arr.buffers()[1], np.int64 if large else np.int32)
+    return raw[arr.offset : arr.offset + len(arr) + 1].astype(np.int64)
+
+
+def _data(arr: pa.Array) -> np.ndarray:
+    """The unsliced data buffer of a string/binary array as uint8."""
+    buf = arr.buffers()[2]
+    return np.empty(0, np.uint8) if buf is None else np.frombuffer(buf, np.uint8)
 
 
 def _varint_mat(
@@ -300,6 +104,8 @@ def _varint_mat(
 def _fixed_mat(
     raw: np.ndarray, width: int, nulls: np.ndarray | None
 ) -> tuple[np.ndarray, np.ndarray]:
+    """(n, width + 1) byte matrix [union prefix + little-endian payload]
+    and per-row lengths; null rows encode as the single byte 0x00."""
     n = len(raw) // width
     mat = np.empty((n, width + 1), dtype=np.uint8)
     mat[:, 0] = _PRESENT
@@ -311,16 +117,31 @@ def _fixed_mat(
     return mat, lens
 
 
+def _int64_of(arr: pa.Array, prim: str) -> np.ndarray:
+    """int64 wire values (nulls as 0) of a varint-encoded field:
+    timestamps as floored epoch millis, dates as epoch days."""
+    if prim == "timestamp-millis":
+        # Arrow timestamps are integral since-epoch; normalize to ms
+        unit = getattr(arr.type, "unit", "us")
+        vals = _int64_of(arr.cast(pa.int64()), "long")
+        if unit == "s":
+            return vals * 1000
+        return vals // {"ms": 1, "us": 1_000, "ns": 1_000_000}[unit]
+    if prim == "date":
+        arr = arr.cast(pa.int32())
+    return np.asarray(arr.fill_null(0) if arr.null_count else arr, dtype=np.int64)
+
+
 def make_vector_encoder(node: tuple) -> Callable:
-    """Compile a flat primitive record into a whole-batch encoder:
-    ``pa.RecordBatch -> pa.BinaryArray`` (one Avro blob per row, no
-    per-row Python). Each field contributes 1-2 byte SEGMENTS (header
-    matrix rows; string/bytes payload slices); per-row output offsets
-    are cumulative segment lengths and every segment is placed with one
-    ragged scatter. ``null_rows`` marks output blobs null (tombstones).
+    """Compile a record into a whole-batch encoder:
+    ``pa.RecordBatch -> pa.BinaryArray`` (one Avro blob per row). Each
+    field contributes 1-2 byte SEGMENTS (header matrix rows;
+    string/bytes payload slices; per-value fragments for rare types);
+    per-row output offsets are cumulative segment lengths and every
+    segment is placed with one ragged scatter. ``null_rows`` marks
+    output blobs null (tombstones).
     """
-    assert vector_encodable(node), node
-    fields = [(name, sub[1]) for name, sub in node[1]]
+    fields = _union_fields(node)
 
     def encode_batch(
         batch: pa.RecordBatch, null_rows: np.ndarray | None = None
@@ -332,111 +153,17 @@ def make_vector_encoder(node: tuple) -> Callable:
         segments: list[tuple[np.ndarray, np.ndarray, np.ndarray]] = []
         for name, prim in fields:
             arr = batch.column(name)
-            if prim in ("long", "int"):
-                vals, nulls = _int_col(arr)
-                mat, lens = _varint_mat(vals, nulls)
-                segments.append(
-                    (mat.ravel(), np.arange(n, dtype=np.int64) * 11, lens)
-                )
-            elif prim == "timestamp-millis":
-                t = arr.type
-                unit = getattr(t, "unit", "us")
-                div = {"s": 1, "ms": 1, "us": 1_000, "ns": 1_000_000}[unit]
-                mul = 1000 if unit == "s" else 1
-                vals, nulls = _int_col(arr.cast(pa.int64()))
-                if div > 1:
-                    vals = vals // div
-                if mul > 1:
-                    vals = vals * mul
-                mat, lens = _varint_mat(vals, nulls)
-                segments.append(
-                    (mat.ravel(), np.arange(n, dtype=np.int64) * 11, lens)
-                )
-            elif prim == "date":
-                vals, nulls = _int_col(arr.cast(pa.int32()))
-                mat, lens = _varint_mat(vals, nulls)
-                segments.append(
-                    (mat.ravel(), np.arange(n, dtype=np.int64) * 11, lens)
-                )
-            elif prim in ("double", "float"):
-                width = 8 if prim == "double" else 4
-                nulls = (
-                    np.asarray(arr.is_null()) if arr.null_count else None
-                )
-                raw = np.asarray(
-                    arr.fill_null(0.0) if arr.null_count else arr,
-                    dtype="<f8" if prim == "double" else "<f4",
-                ).view(np.uint8)
-                mat, lens = _fixed_mat(raw, width, nulls)
-                segments.append(
-                    (
-                        mat.ravel(),
-                        np.arange(n, dtype=np.int64) * (width + 1),
-                        lens,
-                    )
-                )
-            elif prim == "boolean":
-                nulls = (
-                    np.asarray(arr.is_null()) if arr.null_count else None
-                )
-                vals = np.asarray(
-                    arr.fill_null(False) if arr.null_count else arr
-                ).astype(np.uint8)
-                mat = np.empty((n, 2), dtype=np.uint8)
-                mat[:, 0] = _PRESENT
-                mat[:, 1] = vals
-                lens = np.full(n, 2, dtype=np.int64)
-                if nulls is not None and nulls.any():
-                    mat[nulls, 0] = 0
-                    lens[nulls] = 1
-                segments.append(
-                    (mat.ravel(), np.arange(n, dtype=np.int64) * 2, lens)
-                )
-            elif prim not in ("string", "bytes"):
-                # collections / CQL logicals / nested records: per-value
-                # fragments folded into the same scatter machinery; the
-                # all-null fast path (the events-topic MutationValue
-                # ``columns`` field on the wire) stays fully vectorized
-                if arr.null_count == n:
-                    seg = np.zeros(n, dtype=np.uint8)  # 0x00 per row
-                    segments.append(
-                        (
-                            seg,
-                            np.arange(n, dtype=np.int64),
-                            np.ones(n, dtype=np.int64),
-                        )
-                    )
-                else:
-                    fnode = ("null", prim)
-                    frags = []
-                    for v in arr.to_pylist():
-                        if v is None:
-                            frags.append(_NULL)
-                        else:
-                            ba = bytearray()
-                            encode_value(ba, fnode, v)
-                            frags.append(bytes(ba))
-                    data = np.frombuffer(b"".join(frags), dtype=np.uint8)
-                    lens = np.fromiter(
-                        (len(f) for f in frags), dtype=np.int64, count=n
-                    )
-                    ends = np.cumsum(lens)
-                    segments.append((data, ends - lens, lens))
-            else:  # string / bytes
-                if arr.offset != 0:  # pragma: no cover — normalize slice
-                    arr = pa.concat_arrays([arr])
-                bufs = arr.buffers()
-                sdata = (
-                    np.frombuffer(bufs[2], dtype=np.uint8)
-                    if bufs[2] is not None
-                    else np.empty(0, np.uint8)
-                )
-                soff = np.frombuffer(bufs[1], dtype=np.int32).astype(
-                    np.int64
-                )[: n + 1]
-                nulls = (
-                    np.asarray(arr.is_null()) if arr.null_count else None
-                )
+            nulls = np.asarray(arr.is_null()) if arr.null_count else None
+            if prim in ("long", "int", "timestamp-millis", "date"):
+                mat, lens = _varint_mat(_int64_of(arr, prim), nulls)
+            elif prim in ("double", "float", "boolean"):
+                if arr.null_count:
+                    arr = arr.fill_null(False if prim == "boolean" else 0.0)
+                dtype = {"double": "<f8", "float": "<f4", "boolean": np.uint8}
+                vals = np.asarray(arr, dtype=dtype[prim])
+                mat, lens = _fixed_mat(vals.view(np.uint8), vals.itemsize, nulls)
+            elif prim in ("string", "bytes"):
+                soff = _offsets(arr)
                 slen = soff[1:] - soff[:-1]
                 if nulls is not None:
                     slen = np.where(nulls, 0, slen)
@@ -444,7 +171,34 @@ def make_vector_encoder(node: tuple) -> Callable:
                 segments.append(
                     (hdr.ravel(), np.arange(n, dtype=np.int64) * 11, hlens)
                 )
-                segments.append((sdata, soff[:-1].copy(), slen))
+                segments.append((_data(arr), soff[:-1], slen))
+                continue
+            elif arr.null_count == n:
+                # collections / CQL logicals / nested records, all null
+                # (the events-topic MutationValue ``columns`` field on
+                # the wire): one 0x00 per row, fully vectorized
+                mat, lens = np.zeros((n, 1), np.uint8), np.ones(n, np.int64)
+            else:
+                # collections / CQL logicals / nested records: per-value
+                # fragments folded into the same scatter machinery
+                fnode = ("null", prim)
+                frags = []
+                for v in arr.to_pylist():
+                    if v is None:
+                        frags.append(_NULL)
+                    else:
+                        ba = bytearray()
+                        encode_value(ba, fnode, v)
+                        frags.append(bytes(ba))
+                data = np.frombuffer(b"".join(frags), dtype=np.uint8)
+                lens = np.fromiter(
+                    (len(f) for f in frags), dtype=np.int64, count=n
+                )
+                segments.append((data, np.cumsum(lens) - lens, lens))
+                continue
+            segments.append(
+                (mat.ravel(), np.arange(n, dtype=np.int64) * mat.shape[1], lens)
+            )
         if null_rows is not None and null_rows.any():
             segments = [
                 (d, s, np.where(null_rows, 0, l)) for d, s, l in segments
@@ -490,110 +244,8 @@ def make_vector_encoder(node: tuple) -> Callable:
 
 
 # ---------------------------------------------------------------------------
-# compiled decoder
-
-
-def _field_decoder(node: Any) -> Callable[[bytes, int], tuple[Any, int]]:
-    """Compile one field node into a direct (buf, pos) -> (value, pos)
-    parser — no per-row schema dispatch for the union + primitive case."""
-    if isinstance(node, tuple) and node[0] == "null":
-        sub = node[1]
-        if sub in ("long", "int"):
-
-            def dec_int(buf: bytes, pos: int):
-                idx, pos = read_long(buf, pos)
-                if idx == 0:
-                    return None, pos
-                return read_long(buf, pos)
-
-            return dec_int
-
-        if sub == "string":
-
-            def dec_str(buf: bytes, pos: int):
-                idx, pos = read_long(buf, pos)
-                if idx == 0:
-                    return None, pos
-                b, pos = read_bytes(buf, pos)
-                return b.decode("utf-8"), pos
-
-            return dec_str
-
-        if sub == "bytes":
-
-            def dec_bytes(buf: bytes, pos: int):
-                idx, pos = read_long(buf, pos)
-                if idx == 0:
-                    return None, pos
-                return read_bytes(buf, pos)
-
-            return dec_bytes
-
-        if sub == "double":
-
-            def dec_double(buf: bytes, pos: int):
-                idx, pos = read_long(buf, pos)
-                if idx == 0:
-                    return None, pos
-                return _struct.unpack_from("<d", buf, pos)[0], pos + 8
-
-            return dec_double
-
-        if sub == "float":
-
-            def dec_float(buf: bytes, pos: int):
-                idx, pos = read_long(buf, pos)
-                if idx == 0:
-                    return None, pos
-                return _struct.unpack_from("<f", buf, pos)[0], pos + 4
-
-            return dec_float
-
-        if sub == "boolean":
-
-            def dec_bool(buf: bytes, pos: int):
-                idx, pos = read_long(buf, pos)
-                if idx == 0:
-                    return None, pos
-                return buf[pos] == 1, pos + 1
-
-            return dec_bool
-
-    # everything else: exact recursive fallback
-    def dec_fallback(buf: bytes, pos: int):
-        return decode_value(buf, pos, node)
-
-    return dec_fallback
-
-
-# ---------------------------------------------------------------------------
-# fully vectorized decoder: numpy varint scans + ragged gathers straight into
-# arrow buffers — zero per-row Python for flat primitive records
-
-_VEC_TYPES = frozenset(
-    [
-        "long",
-        "int",
-        "string",
-        "bytes",
-        "double",
-        "float",
-        "boolean",
-        "timestamp-millis",
-        "date",
-    ]
-)
-
-
-def vector_decodable(node: tuple) -> bool:
-    """True for every ``("null", T)``-union record (anything
-    :func:`avro_codec.avro_schema_for` emits): primitive fields decode
-    fully vectorized, other fields take a per-row parse INSIDE the same
-    position-tracked walk (null unions — e.g. the events-topic
-    MutationValue ``columns`` — cost one vectorized byte check).
-    Same predicate as :func:`vector_encodable` — delegated so the two
-    directions cannot silently diverge."""
-    return vector_encodable(node)
+# vector decoder: numpy varint scans + ragged gathers straight into arrow
+# buffers — no per-row Python for primitive fields
 
 
 def _vec_varint(data: np.ndarray, pos: np.ndarray, active: np.ndarray):
@@ -642,15 +294,17 @@ def _bitmap(mask: np.ndarray) -> pa.Buffer:
 
 
 def make_vector_decoder(node: tuple) -> Callable[[pa.Array], dict]:
-    """Compile a flat primitive record into a whole-column decoder:
-    ``pa.BinaryArray -> {field: pa.Array}`` with NO per-row Python.
-    Varints decode as (n, 10) byte-plane gathers; string/bytes payloads
-    are ragged-gathered into a single buffer and wrapped as arrow
-    arrays via ``from_buffers``. Byte-layout semantics are pinned
-    identical to :func:`avro_codec.decode_record` by the property tests.
+    """Compile a record into a whole-column decoder:
+    ``pa.BinaryArray -> {field: pa.Array | list}``. Varints decode as
+    (n, 10) byte-plane gathers; string/bytes payloads are ragged-gathered
+    into a single buffer and wrapped as arrow arrays via
+    ``from_buffers``; rare types (collections, CQL logicals, nested
+    records) parse per present row into a plain list. Null blobs
+    (tombstones) decode to all-null rows. Byte-layout semantics are
+    pinned identical to :func:`avro_codec.decode_record` by the property
+    tests, including strict exact consumption of every blob.
     """
-    assert vector_decodable(node), node
-    fields = [(name, sub[1]) for name, sub in node[1]]
+    fields = _union_fields(node)
 
     def decode_column(arr: pa.Array) -> dict:
         n = len(arr)
@@ -659,23 +313,11 @@ def make_vector_decoder(node: tuple) -> Callable[[pa.Array], dict]:
             # gather; plain empty lists convert via the caller's typed
             # pa.array() path
             return {name: [] for name, _ in fields}
-        if arr.offset != 0:
-            # sliced arrays: normalize once (rare — mapInArrow batches
-            # arrive at offset 0)
-            arr = pa.concat_arrays([arr])  # pragma: no cover
-        bufs = arr.buffers()
         data = np.concatenate(
-            [
-                np.frombuffer(bufs[2], dtype=np.uint8)
-                if bufs[2] is not None
-                else np.empty(0, np.uint8),
-                np.zeros(16, np.uint8),  # varint-gather pad
-            ]
+            [_data(arr), np.zeros(16, np.uint8)]  # varint-gather pad
         )
         fallback_buf: bytes | None = None  # lazy, see fallback branch
-        offsets = np.frombuffer(bufs[1], dtype=np.int32).astype(np.int64)[
-            : n + 1
-        ]
+        offsets = _offsets(arr)
         row_valid = (
             np.ones(n, dtype=bool)
             if arr.null_count == 0
@@ -694,44 +336,18 @@ def make_vector_decoder(node: tuple) -> Callable[[pa.Array], dict]:
                 )
             present = row_valid & (ub != 0)
             pos = np.where(row_valid, pos + 1, pos)
-            nulls = ~present
             if prim in ("long", "int", "timestamp-millis", "date"):
                 vals, pos = _vec_varint(data, pos, present)
                 if prim == "timestamp-millis":
-                    out[name] = pa.Array.from_buffers(
-                        pa.timestamp("us"),
-                        n,
-                        [
-                            _bitmap(present),
-                            pa.py_buffer((vals * 1000).tobytes()),
-                        ],
-                    )
-                elif prim == "date":
-                    out[name] = pa.Array.from_buffers(
-                        pa.date32(),
-                        n,
-                        [
-                            _bitmap(present),
-                            pa.py_buffer(
-                                vals.astype(np.int32).tobytes()
-                            ),
-                        ],
-                    )
-                elif prim == "int":
-                    out[name] = pa.Array.from_buffers(
-                        pa.int32(),
-                        n,
-                        [
-                            _bitmap(present),
-                            pa.py_buffer(vals.astype(np.int32).tobytes()),
-                        ],
-                    )
+                    atype, vals = pa.timestamp("us"), vals * 1000
+                elif prim == "long":
+                    atype = pa.int64()
                 else:
-                    out[name] = pa.Array.from_buffers(
-                        pa.int64(),
-                        n,
-                        [_bitmap(present), pa.py_buffer(vals.tobytes())],
-                    )
+                    atype = pa.date32() if prim == "date" else pa.int32()
+                    vals = vals.astype(np.int32)
+                out[name] = pa.Array.from_buffers(
+                    atype, n, [_bitmap(present), pa.py_buffer(vals.tobytes())]
+                )
             elif prim in ("double", "float"):
                 width = 8 if prim == "double" else 4
                 m = data[
@@ -805,29 +421,3 @@ def make_vector_decoder(node: tuple) -> Callable[[pa.Array], dict]:
         return out
 
     return decode_column
-
-
-def make_batch_decoder(
-    node: tuple,
-) -> Callable[[list], dict[str, list]]:
-    """Compile a record node into ``list[bytes|None] -> {field: column}``;
-    null blobs (tombstones) decode to all-null rows."""
-    assert node[0] == "record", node
-    names = [name for name, _ in node[1]]
-    decoders = [_field_decoder(sub) for _, sub in node[1]]
-
-    def decode_batch(blobs: list) -> dict[str, list]:
-        cols: list[list] = [[] for _ in names]
-        for blob in blobs:
-            if blob is None:
-                for c in cols:
-                    c.append(None)
-                continue
-            buf = bytes(blob)
-            pos = 0
-            for c, dec in zip(cols, decoders):
-                v, pos = dec(buf, pos)
-                c.append(v)
-        return dict(zip(names, cols))
-
-    return decode_batch

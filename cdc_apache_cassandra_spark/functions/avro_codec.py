@@ -15,13 +15,14 @@ defined in commons/.../CqlLogicalTypes.java:29-62:
 - ``cql_duration``: record{months: int, days: int, nanoseconds: long}
   (CqlLogicalTypes.java:50-62; NativeAvroConverter.java:412-436).
 
-This container carries neither spark-avro nor an avro Python package, so
-the codec implements the Avro 1.11 binary spec directly (zigzag varints,
+The codec implements the Avro 1.11 binary spec directly (zigzag varints,
 length-prefixed bytes, union index prefixes, block-coded arrays/maps) —
-~150 lines, no dependencies, byte-compatible with any Avro reader given
-the same writer schema. It runs inside Arrow-batched pandas UDFs
-(wire_format.py), so Python costs are paid per record batch, not per
-field crossing.
+no dependencies, byte-compatible with any Avro reader given the same
+writer schema. It is the per-record REFERENCE: the vectorized batch
+codec (avro_batch.py) that every wire record takes is pinned
+byte-identical to it, calls :func:`encode_value`/:func:`decode_value`
+for the rare field types, and the quarantine decode (wire_format.py)
+re-parses a failing batch row by row through :func:`decode_record`.
 
 Schema derivation maps Spark types to Avro per SURVEY §1.2: every
 non-key field is a ``union[null, T]`` with null default
@@ -138,51 +139,6 @@ def _node(dt: T.DataType) -> Any:
     raise TypeError(f"no Avro mapping for Spark type {dt}")
 
 
-class JvmIncompatibleSchema(TypeError):
-    """Raised when a wire schema uses CQL logical types
-    (cql_varint/cql_decimal/cql_duration) that spark-avro's serializer
-    cannot emit byte-compatibly — those need the reference's custom
-    NativeAvroConverter conversions (CqlLogicalTypes.java:109-160), so
-    the pure-Python codec stays authoritative for them."""
-
-
-def avro_json_schema(node: Any, name: str = "record0") -> Any:
-    """Codec schema node -> Avro JSON schema (as plain dicts/lists; dump
-    with ``json.dumps``). This is the writer schema handed to spark-avro's
-    ``to_avro``/``from_avro`` on clusters that carry the jar — the JVM
-    serializer given this schema emits the same Avro binary bytes as
-    :func:`encode_record` (union order, zigzag varints, logical-type
-    encodings are all fixed by the Avro spec)."""
-    if isinstance(node, str):
-        if node == "timestamp-millis":
-            return {"type": "long", "logicalType": "timestamp-millis"}
-        if node == "date":
-            return {"type": "int", "logicalType": "date"}
-        if node in ("cql_varint", "cql_decimal", "cql_duration"):
-            raise JvmIncompatibleSchema(node)
-        return node  # primitive
-    if node[0] == "null":
-        return ["null", avro_json_schema(node[1], name)]
-    if node[0] == "record":
-        return {
-            "type": "record",
-            "name": name,
-            "fields": [
-                {
-                    "name": fname,
-                    "type": avro_json_schema(sub, f"{name}_{fname}"),
-                    "default": None,
-                }
-                for fname, sub in node[1]
-            ],
-        }
-    if node[0] == "array":
-        return {"type": "array", "items": avro_json_schema(node[1], name)}
-    if node[0] == "map":
-        return {"type": "map", "values": avro_json_schema(node[1], name)}
-    raise TypeError(f"unhandled avro node {node!r}")
-
-
 # ---------------------------------------------------------------------------
 # value codec
 
@@ -217,7 +173,7 @@ def encode_value(out: bytearray, node: Any, v: Any) -> None:
         # datetime -> epoch millis (NativeAvroConverter.java:118-120).
         # Derive millis from INTEGER microseconds with floor division —
         # matching JVM Instant.toEpochMilli and the vectorized codec
-        # (avro_batch.py vals // div): int(ts.timestamp()*1000) truncates
+        # (avro_batch._int64_of): int(ts.timestamp()*1000) truncates
         # toward zero, so a pre-epoch timestamp with sub-ms components
         # (e.g. -0.5 ms) would encode as 0 instead of -1.
         import datetime
@@ -370,9 +326,8 @@ def decode_record(node: tuple, blob: bytes) -> dict:
     """Decode one record blob with STRICT exact-consumption: trailing
     bytes mean the blob was not produced for this schema (truncated
     writes surface inside decode_value; padding/garbage surfaces here).
-    Every decode path shares this contract — the vectorized decoder,
-    the Arrow strict path, and the pandas cross-check codec must all
-    accept and reject the same inputs."""
+    The vectorized decoder (avro_batch.make_vector_decoder) shares this
+    contract: both accept and reject the same inputs."""
     buf = bytes(blob)
     value, end = decode_value(buf, 0, node)
     if end != len(buf):

@@ -5,27 +5,26 @@ writetime / segpos / token (AbstractPulsarMutationSender.java:190-193,
 surfaces exactly (key binary, value binary, headers); this module encodes
 our mutation events into that shape and back.
 
-Three codecs behind one seam (reference key.converter/value.converter —
+Two codecs behind one seam (reference key.converter/value.converter —
 encoding choice is config, not architecture):
 
 - ``avro`` (default, like the reference's NativeAvroConverter): Avro
-  binary records via functions/avro_codec.py — a dependency-free
-  implementation of the Avro 1.11 binary spec with the reference's CQL
-  logical types (CqlLogicalTypes.java:29-62). Runs through
-  ``mapInArrow`` with the vectorized batch codec
-  (functions/avro_batch.py): varints for whole int64 columns are
-  computed as numpy byte planes, rows are assembled with one
-  ``b"".join`` — no per-record dict materialization, and nullable
-  int64 columns stay exact (the pandas bridge would round them through
-  float64 above 2**53). On a cluster with spark-avro, the same seam
-  swaps in the JVM ``to_avro``/``from_avro`` (detected by
-  :func:`wire_codec`).
-- ``avro-pandas``: the original Arrow-batched pandas-UDF form of the
-  same codec, kept as an independently-implemented cross-check — the
-  round-trip tests assert both paths emit identical wire bytes.
-- ``json``: UTF-8 JSON bytes with explicit nulls — JVM-side
-  (``to_json``/``from_json``), byte-stable, test-inspectable
-  (reference NativeJsonConverter).
+  binary records with the reference's CQL logical types
+  (CqlLogicalTypes.java:29-62), encoded and decoded in one
+  ``mapInArrow`` pass by the vectorized batch codec
+  (functions/avro_batch.py). Its byte layout is pinned to the
+  per-record reference codec in functions/avro_codec.py, which the
+  quarantine decode also uses to re-parse a failing batch row by row.
+  Nullable int64 columns stay exact and NaN stays distinct from null.
+- ``json`` (reference NativeJsonConverter): UTF-8 JSON bytes with
+  explicit nulls — JVM-side (``to_json``/``from_json``), byte-stable,
+  test-inspectable.
+
+Both codecs share one encode (events -> key, value, writetime, segpos,
+token) and one decode; the events-topic functions are a MutationValue
+projection around that pair. This module only frames rows; Avro layout
+knowledge lives in avro_codec (the reference) and avro_batch (the fast
+path).
 
 Tombstone rule: DELETE ⇒ value bytes NULL (CassandraSource.java:554).
 """
@@ -34,149 +33,47 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cdc_apache_cassandra_spark.functions.avro_batch import (
-    make_batch_decoder,
-    make_batch_encoder,
     make_vector_decoder,
     make_vector_encoder,
-    vector_decodable,
-    vector_encodable,
 )
 from cdc_apache_cassandra_spark.functions.avro_codec import (
     avro_schema_for,
     decode_record,
-    encode_record,
 )
 from cdc_apache_cassandra_spark.functions.hashing import wire_token_expr
 
 DEFAULT_CODEC = "avro"
 #: every codec the dispatch functions accept; anything else raises
-#: (a typo silently falling into the pandas else-branch would let a
+#: (a typo silently falling into another branch would let a
 #: producer/consumer pair diverge without an error)
-KNOWN_CODECS = ("avro", "avro-jvm", "avro-pandas", "json")
+KNOWN_CODECS = ("avro", "json")
 
 
-def _check_codec(codec: str) -> None:
+def _check_codec(codec: str, on_error: str = "raise") -> None:
     if codec not in KNOWN_CODECS:
         raise ValueError(
             f"unknown wire codec {codec!r}; expected one of {KNOWN_CODECS}"
         )
-
-
-def wire_codec() -> str:
-    """'avro-jvm' when the spark-avro EXPRESSIONS are actually on the JVM
-    classpath, else 'avro' (the built-in vectorized codec). The Python
-    wrapper ``pyspark.sql.avro.functions`` always imports — the real
-    discriminator is the jar's ``CatalystDataToAvro`` expression class,
-    probed through the active session's JVM. JSON stays available as an
-    explicit choice."""
-    try:
-        from pyspark.sql import SparkSession
-        from pyspark.sql.avro.functions import to_avro  # noqa: F401
-
-        spark = SparkSession.getActiveSession()
-        if spark is None:
-            return "avro"
-        # Probe through Spark's own classloader chain, NOT
-        # java.lang.Class.forName (which uses the app classloader and
-        # misses jars added via --packages/addJar — those live on
-        # Spark's MutableURLClassLoader; r3 ADVICE).
-        spark._jvm.org.apache.spark.util.Utils.classForName(
-            "org.apache.spark.sql.avro.CatalystDataToAvro", True, False
+    if on_error not in ("raise", "quarantine"):
+        raise ValueError(
+            f"unknown on_error {on_error!r}; expected 'raise' or 'quarantine'"
         )
-        return "avro-jvm"
-    except Exception:
-        return "avro"
+    if on_error == "quarantine" and codec != "avro":
+        raise ValueError(
+            f"on_error='quarantine' needs codec='avro', not {codec!r}"
+        )
 
 
 def _json_bytes(cols: list[str]) -> Column:
     return F.encode(
         F.to_json(F.struct(*cols), {"ignoreNullFields": "false"}), "UTF-8"
     )
-
-
-def _null_safe(pdf: pd.DataFrame) -> pd.DataFrame:
-    """KNOWN LIMITATION of the avro-pandas cross-check codec: the
-    Arrow->pandas bridge materializes float/double columns as float64
-    where SQL NULL and a genuine NaN VALUE are the same bit pattern, so
-    this codec encodes NaN as Avro null (code-review r4). The DEFAULT
-    ``avro`` codec runs on Arrow validity buffers and preserves the
-    distinction (pinned by test_vector_codec_preserves_nan_vs_null);
-    byte-identity between the two paths is asserted on NaN-free data.
-    int64 above 2**53 has the same bridge-rounding caveat — both are
-    reasons the vectorized codec is the default and this one is the
-    cross-check."""
-    return pdf.astype(object).where(pdf.notna(), None)
-
-
-def _avro_bytes(df: DataFrame, cols: list[str]) -> Column:
-    """Arrow-batched Avro encode of a struct of columns."""
-    node = avro_schema_for(
-        T.StructType([df.schema[c] for c in cols])
-    )
-
-    @F.pandas_udf("binary")
-    def enc(pdf: pd.DataFrame) -> pd.Series:
-        rows = _null_safe(pdf).to_dict("records")
-        return pd.Series([encode_record(node, r) for r in rows])
-
-    return enc(F.struct(*cols))
-
-
-def _avro_struct(col: Column, schema: T.StructType) -> Column:
-    """Arrow-batched Avro decode back to typed columns."""
-    node = avro_schema_for(schema)
-
-    @F.pandas_udf(schema)
-    def dec(s: pd.Series) -> pd.DataFrame:
-        out = [
-            {f.name: None for f in schema.fields}
-            if blob is None
-            else decode_record(node, bytes(blob))
-            for blob in s
-        ]
-        return pd.DataFrame(out, columns=[f.name for f in schema.fields])
-
-    return dec(col)
-
-
-def _jvm_avro_bytes(df: DataFrame, cols: list[str]) -> Column:
-    """JVM-side Avro encode via spark-avro's ``to_avro`` with an explicit
-    writer schema derived from the same schema model the Python codec
-    uses — Avro binary is fully determined by (writer schema, values),
-    so the two paths emit identical bytes. Raises
-    :class:`~...avro_codec.JvmIncompatibleSchema` for CQL logical types
-    (cql_varint/cql_decimal/cql_duration), which only the Python codec
-    can encode in the reference's custom layout."""
-    import json as _json
-
-    from pyspark.sql.avro.functions import to_avro
-
-    from cdc_apache_cassandra_spark.functions.avro_codec import (
-        avro_json_schema,
-    )
-
-    node = avro_schema_for(T.StructType([df.schema[c] for c in cols]))
-    return to_avro(F.struct(*cols), _json.dumps(avro_json_schema(node)))
-
-
-def _jvm_avro_struct(col: Column, schema: T.StructType) -> Column:
-    import json as _json
-
-    from pyspark.sql.avro.functions import from_avro
-
-    from cdc_apache_cassandra_spark.functions.avro_codec import (
-        avro_json_schema,
-    )
-
-    node = avro_schema_for(schema)
-    return from_avro(col, _json.dumps(avro_json_schema(node)))
 
 
 def _ordered_unique(*col_lists: list[str]) -> list[str]:
@@ -197,52 +94,51 @@ def _pa_type(dt: T.DataType) -> pa.DataType:
     return to_arrow_type(dt)
 
 
-def _encode_arrow(
+def _encode(
     events: DataFrame,
     key_cols: list[str],
     value_cols: list[str],
     op_col: str | None,
+    codec: str,
 ) -> DataFrame:
-    """Vectorized wire encode: one mapInArrow pass computes key/value
-    Avro blobs per RecordBatch; writetime/segpos/token are built
-    JVM-side and pass through untouched."""
-    key_node = avro_schema_for(
-        T.StructType([events.schema[c] for c in key_cols])
-    )
-    val_node = avro_schema_for(
-        T.StructType([events.schema[c] for c in value_cols])
-    )
-    data_cols = _ordered_unique(
-        key_cols, value_cols, [op_col] if op_col else []
-    )
-    pre = events.select(
-        *data_cols,
+    """events -> (key, value, writetime, segpos, token). ``op_col`` =
+    'DELETE' rows get a null value (tombstone); ``None`` keeps every
+    value. The Avro codec computes key/value blobs in one mapInArrow
+    pass; writetime/segpos/token are built JVM-side and pass through
+    untouched."""
+    _check_codec(codec)
+    props = [
         F.col("writetime"),
         F.concat_ws(":", F.col("segment"), F.col("position")).alias("segpos"),
         wire_token_expr(events.schema, key_cols).alias("token"),
+    ]
+    if codec == "json":
+        value = _json_bytes(value_cols)
+        if op_col is not None:
+            value = F.when(
+                F.col(op_col) == "DELETE", F.lit(None).cast("binary")
+            ).otherwise(value)
+        return events.select(
+            _json_bytes(key_cols).alias("key"), value.alias("value"), *props
+        )
+    enc_key, enc_val = (
+        make_vector_encoder(
+            avro_schema_for(T.StructType([events.schema[c] for c in cols]))
+        )
+        for cols in (key_cols, value_cols)
+    )
+    pre = events.select(
+        *_ordered_unique(key_cols, value_cols, [op_col] if op_col else []),
+        *props,
     )
     out_schema = T.StructType(
         [
             T.StructField("key", T.BinaryType()),
             T.StructField("value", T.BinaryType()),
-            T.StructField(
-                "writetime", pre.schema["writetime"].dataType
-            ),
+            T.StructField("writetime", pre.schema["writetime"].dataType),
             T.StructField("segpos", T.StringType()),
             T.StructField("token", pre.schema["token"].dataType),
         ]
-    )
-    key_is_vec = vector_encodable(key_node)
-    val_is_vec = vector_encodable(val_node)
-    enc_key = (
-        make_vector_encoder(key_node)
-        if key_is_vec
-        else make_batch_encoder(key_node)
-    )
-    enc_val = (
-        make_vector_encoder(val_node)
-        if val_is_vec
-        else make_batch_encoder(val_node)
     )
 
     def encode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -255,51 +151,41 @@ def _encode_arrow(
                 if op_col is not None
                 else None
             )
-            if key_is_vec:
-                keys = enc_key(b)
-            else:
-                keys = pa.array(enc_key(b), pa.binary())
-            if val_is_vec:
-                vals = enc_val(b, null_rows=tombs)
-            else:
-                raw = enc_val(b)
-                if tombs is not None:
-                    raw = [
-                        None if t else v for t, v in zip(tombs.tolist(), raw)
-                    ]
-                vals = pa.array(raw, pa.binary())
             yield pa.RecordBatch.from_arrays(
                 [
-                    keys,
-                    vals,
+                    enc_key(b),
+                    enc_val(b, null_rows=tombs),
                     b.column("writetime"),
                     b.column("segpos"),
                     b.column("token"),
                 ],
-                names=["key", "value", "writetime", "segpos", "token"],
+                names=out_schema.fieldNames(),
             )
 
     return pre.mapInArrow(encode, out_schema)
 
 
-def _decode_arrow(
+def _decode(
     wire: DataFrame,
     key_schema: T.StructType,
     value_schema: T.StructType,
-    quarantine: bool = False,
+    codec: str,
+    on_error: str,
 ) -> DataFrame:
-    """Vectorized wire decode: one mapInArrow pass parses key/value
-    blobs back into exact-typed columns + (is_tombstone, writetime,
-    segment, position, token).
+    """(key, value, writetime, segpos, token) -> key columns, value
+    columns, is_tombstone, writetime, segment, position, token.
 
-    ``quarantine=True`` adds a ``decode_error`` string column instead of
+    The Avro codec decodes in one mapInArrow pass. ``on_error=
+    'quarantine'`` adds a ``decode_error`` string column instead of
     failing the batch (the reference's error-topic posture, S10): the
-    fast vectorized decode runs first; if a batch raises, it re-runs
-    per-row with per-blob try/except, nulling the bad row's columns and
+    vectorized decode runs first; if a batch raises, it re-runs per-row
+    with per-blob try/except, nulling the bad row's columns and
     recording the exception. Integrity beyond parseability rides on the
     md5 digest the pipeline already carries — a corrupted blob that
     still parses is caught by the digest mismatch upstream, same as the
     reference."""
+    _check_codec(codec, on_error)
+    meta = ["is_tombstone", "writetime", "segment", "position", "token"]
     pre = wire.select(
         "key",
         "value",
@@ -309,23 +195,24 @@ def _decode_arrow(
         F.split(F.col("segpos"), ":")[1].cast("bigint").alias("position"),
         "token",
     )
+    if codec == "json":
+        out = pre.select(
+            F.from_json(F.decode(F.col("key"), "UTF-8"), key_schema).alias("_k"),
+            F.from_json(
+                F.decode(F.col("value"), "UTF-8"), value_schema
+            ).alias("_v"),
+            *meta,
+        )
+        return out.select(
+            *[F.col(f"_k.{f.name}").alias(f.name) for f in key_schema.fields],
+            *[F.col(f"_v.{f.name}").alias(f.name) for f in value_schema.fields],
+            *meta,
+        )
+    quarantine = on_error == "quarantine"
     key_node = avro_schema_for(key_schema)
     val_node = avro_schema_for(value_schema)
-    # flat primitive records decode with zero per-row Python (numpy
-    # varint planes + ragged gathers into arrow buffers); anything with
-    # collections/CQL logicals takes the compiled per-row parser
-    dec_key = (
-        make_vector_decoder(key_node)
-        if vector_decodable(key_node)
-        else make_batch_decoder(key_node)
-    )
-    dec_val = (
-        make_vector_decoder(val_node)
-        if vector_decodable(val_node)
-        else make_batch_decoder(val_node)
-    )
-    key_is_vec = vector_decodable(key_node)
-    val_is_vec = vector_decodable(val_node)
+    dec_key = make_vector_decoder(key_node)
+    dec_val = make_vector_decoder(val_node)
     meta_fields = [
         T.StructField("is_tombstone", T.BooleanType(), False),
         T.StructField("writetime", pre.schema["writetime"].dataType),
@@ -360,31 +247,15 @@ def _decode_arrow(
     ]]
 
     def decode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # strict exact-consumption decode — the shared contract in
-        # avro_codec.decode_record (identical for every codec path)
-        from cdc_apache_cassandra_spark.functions.avro_codec import (
-            decode_record,
-        )
-
         def as_arrow(v, t: pa.DataType) -> pa.Array:
             if isinstance(v, pa.Array):
                 return v if v.type == t else v.cast(t)
             return pa.array(v, type=t)
 
-        def decode_batch(b: pa.RecordBatch):
-            kcols = dec_key(
-                b.column("key") if key_is_vec
-                else b.column("key").to_pylist()
-            )
-            vcols = dec_val(
-                b.column("value") if val_is_vec
-                else b.column("value").to_pylist()
-            )
-            return {**kcols, **vcols}, None
-
         def decode_batch_quarantined(b: pa.RecordBatch):
-            """Per-row re-parse with per-blob try/except; bad rows null
-            out and carry the exception text."""
+            """Per-row re-parse through the strict reference decoder
+            with per-blob try/except; bad rows null out and carry the
+            exception text."""
             knames = [f.name for f in key_schema.fields]
             vnames = [f.name for f in value_schema.fields]
             cols: dict[str, list] = {c: [] for c in knames + vnames}
@@ -417,32 +288,19 @@ def _decode_arrow(
             return cols, errs
 
         for b in batches:
-            errs = None
+            try:
+                merged = {**dec_key(b.column("key")), **dec_val(b.column("value"))}
+                errs = [None] * b.num_rows
+            except Exception:
+                if not quarantine:
+                    raise
+                merged, errs = decode_batch_quarantined(b)
+            arrays = [as_arrow(merged[name], t) for name, t in typed]
+            arrays += [b.column(c) for c in meta]
             if quarantine:
-                try:
-                    merged, errs = decode_batch(b)
-                except Exception:
-                    merged, errs = decode_batch_quarantined(b)
-            else:
-                merged, errs = decode_batch(b)
-            arrays = [
-                as_arrow(merged[name], t) for name, t in typed
-            ] + [
-                b.column("is_tombstone"),
-                b.column("writetime"),
-                b.column("segment"),
-                b.column("position"),
-                b.column("token"),
-            ]
-            if quarantine:
-                arrays.append(
-                    pa.array(
-                        errs if errs is not None else [None] * b.num_rows,
-                        pa.string(),
-                    )
-                )
+                arrays.append(pa.array(errs, pa.string()))
             yield pa.RecordBatch.from_arrays(
-                arrays, names=[f.name for f in out_schema.fields]
+                arrays, names=out_schema.fieldNames()
             )
 
     return pre.mapInArrow(decode, out_schema)
@@ -458,28 +316,7 @@ def to_wire_records(
     """mutation events -> (key BINARY, value BINARY|null, writetime,
     segpos, token) — the exact column set a kafka-format writeStream
     needs, with the reference's three message properties."""
-    _check_codec(codec)
-    if codec == "avro":
-        return _encode_arrow(events, key_cols, value_cols, op_col)
-    if codec == "avro-jvm":
-        key_bytes = _jvm_avro_bytes(events, key_cols)
-        value_bytes = _jvm_avro_bytes(events, value_cols)
-    elif codec == "json":
-        key_bytes = _json_bytes(key_cols)
-        value_bytes = _json_bytes(value_cols)
-    else:
-        key_bytes = _avro_bytes(events, key_cols)
-        value_bytes = _avro_bytes(events, value_cols)
-    value = F.when(
-        F.col(op_col) == "DELETE", F.lit(None).cast("binary")
-    ).otherwise(value_bytes)
-    return events.select(
-        key_bytes.alias("key"),
-        value.alias("value"),
-        F.col("writetime"),
-        F.concat_ws(":", F.col("segment"), F.col("position")).alias("segpos"),
-        wire_token_expr(events.schema, key_cols).alias("token"),
-    )
+    return _encode(events, key_cols, value_cols, op_col, codec)
 
 
 #: MutationValue schema — the EVENTS-topic value payload
@@ -506,10 +343,10 @@ def to_event_topic_records(
     MutationValue{md5Digest, nodeId, columns=null} — the compact
     PK+digest event the agent publishes
     (AbstractPulsarMutationSender.java:190-193,243-270), as opposed to
-    :func:`to_wire_records`, which is the DATA-topic full-row shape."""
+    :func:`to_wire_records`, which is the DATA-topic full-row shape.
+    Deletes keep their value: the events topic carries no tombstones."""
     mv = events.select(
         *key_cols,
-        "op",
         "writetime",
         "segment",
         "position",
@@ -517,33 +354,7 @@ def to_event_topic_records(
         F.col(node_col).cast("string").alias("nodeId"),
         F.lit(None).cast(T.ArrayType(T.StringType())).alias("columns"),
     )
-    _check_codec(codec)
-    if codec == "avro":
-        return _encode_arrow(
-            mv, key_cols, ["md5Digest", "nodeId", "columns"], op_col=None
-        )
-    if codec == "avro-jvm":
-        key_bytes = _jvm_avro_bytes(mv, key_cols)
-        value_bytes = _jvm_avro_bytes(mv, ["md5Digest", "nodeId", "columns"])
-    elif codec == "json":
-        key_bytes = _json_bytes(key_cols)
-        value_bytes = F.encode(
-            F.to_json(
-                F.struct("md5Digest", "nodeId", "columns"),
-                {"ignoreNullFields": "false"},
-            ),
-            "UTF-8",
-        )
-    else:
-        key_bytes = _avro_bytes(mv, key_cols)
-        value_bytes = _avro_bytes(mv, ["md5Digest", "nodeId", "columns"])
-    return mv.select(
-        key_bytes.alias("key"),
-        value_bytes.alias("value"),
-        F.col("writetime"),
-        F.concat_ws(":", F.col("segment"), F.col("position")).alias("segpos"),
-        wire_token_expr(events.schema, key_cols).alias("token"),
-    )
+    return _encode(mv, key_cols, MUTATION_VALUE_SCHEMA.fieldNames(), None, codec)
 
 
 def from_event_topic_records(
@@ -555,52 +366,19 @@ def from_event_topic_records(
     """Inverse of :func:`to_event_topic_records`: typed PK columns +
     (digest, node_id) from the MutationValue — what the connector needs
     to dedup and bind the read-after-event lookup (F12).
-    ``on_error='quarantine'`` (avro) appends ``decode_error`` instead of
-    failing the batch — same error-sink posture as
+    ``on_error='quarantine'`` (avro codec only) appends ``decode_error``
+    instead of failing the batch — same error-sink posture as
     :func:`from_wire_records`."""
-    _check_codec(codec)
-    if codec == "avro":
-        dec = _decode_arrow(
-            wire, key_schema, MUTATION_VALUE_SCHEMA,
-            quarantine=(on_error == "quarantine"),
-        )
-        return dec.select(
-            *[f.name for f in key_schema.fields],
-            F.col("md5Digest").alias("digest"),
-            F.col("nodeId").alias("node_id"),
-            "writetime",
-            "segment",
-            "position",
-            "token",
-            *(["decode_error"] if on_error == "quarantine" else []),
-        )
-    if codec == "avro-jvm":
-        key = _jvm_avro_struct(F.col("key"), key_schema)
-        value = _jvm_avro_struct(F.col("value"), MUTATION_VALUE_SCHEMA)
-    elif codec == "json":
-        key = F.from_json(F.decode(F.col("key"), "UTF-8"), key_schema)
-        value = F.from_json(
-            F.decode(F.col("value"), "UTF-8"), MUTATION_VALUE_SCHEMA
-        )
-    else:
-        key = _avro_struct(F.col("key"), key_schema)
-        value = _avro_struct(F.col("value"), MUTATION_VALUE_SCHEMA)
-    out = wire.select(
-        key.alias("_k"),
-        value.alias("_v"),
-        "writetime",
-        F.split(F.col("segpos"), ":")[0].cast("bigint").alias("segment"),
-        F.split(F.col("segpos"), ":")[1].cast("bigint").alias("position"),
-        "token",
-    )
-    return out.select(
-        *[F.col(f"_k.{f.name}").alias(f.name) for f in key_schema.fields],
-        F.col("_v.md5Digest").alias("digest"),
-        F.col("_v.nodeId").alias("node_id"),
+    dec = _decode(wire, key_schema, MUTATION_VALUE_SCHEMA, codec, on_error)
+    return dec.select(
+        *key_schema.fieldNames(),
+        F.col("md5Digest").alias("digest"),
+        F.col("nodeId").alias("node_id"),
         "writetime",
         "segment",
         "position",
         "token",
+        *(["decode_error"] if on_error == "quarantine" else []),
     )
 
 
@@ -618,37 +396,7 @@ def from_wire_records(
     ``on_error='quarantine'`` (avro codec only) adds a ``decode_error``
     column instead of failing the job on malformed blobs — route
     ``decode_error IS NOT NULL`` rows to the error sink (S10) and keep
-    the stream alive, the reference's archive/error-topic posture."""
-    _check_codec(codec)
-    if codec == "avro":
-        return _decode_arrow(
-            wire, key_schema, value_schema,
-            quarantine=(on_error == "quarantine"),
-        )
-    if codec == "avro-jvm":
-        key = _jvm_avro_struct(F.col("key"), key_schema)
-        value = _jvm_avro_struct(F.col("value"), value_schema)
-    elif codec == "json":
-        key = F.from_json(F.decode(F.col("key"), "UTF-8"), key_schema)
-        value = F.from_json(F.decode(F.col("value"), "UTF-8"), value_schema)
-    else:
-        key = _avro_struct(F.col("key"), key_schema)
-        value = _avro_struct(F.col("value"), value_schema)
-    out = wire.select(
-        key.alias("_k"),
-        value.alias("_v"),
-        F.col("value").isNull().alias("is_tombstone"),
-        "writetime",
-        F.split(F.col("segpos"), ":")[0].cast("bigint").alias("segment"),
-        F.split(F.col("segpos"), ":")[1].cast("bigint").alias("position"),
-        "token",
-    )
-    return out.select(
-        *[F.col(f"_k.{f.name}").alias(f.name) for f in key_schema.fields],
-        *[F.col(f"_v.{f.name}").alias(f.name) for f in value_schema.fields],
-        "is_tombstone",
-        "writetime",
-        "segment",
-        "position",
-        "token",
-    )
+    the stream alive, the reference's archive/error-topic posture.
+    ``on_error`` other than 'raise'/'quarantine', or quarantine with
+    JSON, raises ``ValueError``."""
+    return _decode(wire, key_schema, value_schema, codec, on_error)

@@ -1,9 +1,11 @@
 """Wire-format round trip: events -> (key/value bytes + properties) ->
 typed columns, with tombstones and the writetime/segpos/token properties
 (reference SEPARATED KeyValue encoding + message props). Parameterized
-over BOTH codecs (json + the built-in Avro binary codec), plus golden
+over both codecs (json + the vectorized Avro binary codec), plus golden
 byte pins for the §1.2 CQL logical-type encodings
-(CqlLogicalTypes.java:29-62)."""
+(CqlLogicalTypes.java:29-62) and property/fuzz tests pinning the
+vectorized Avro codec (functions/avro_batch.py) to the per-record
+reference codec (functions/avro_codec.py)."""
 
 import datetime
 import json
@@ -21,9 +23,9 @@ from cdc_apache_cassandra_spark.functions.avro_codec import (
 )
 from cdc_apache_cassandra_spark.sources.event_source import mutation_events
 from cdc_apache_cassandra_spark.sources.wire_format import (
+    from_event_topic_records,
     from_wire_records,
     to_wire_records,
-    wire_codec,
 )
 
 KEY_SCHEMA = T.StructType([T.StructField("pk", T.LongType())])
@@ -37,11 +39,7 @@ VALUE_SCHEMA = T.StructType(
 )
 VALUE_COLS = [f.name for f in VALUE_SCHEMA.fields]
 
-CODECS = ["json", "avro", "avro-pandas"]
-
-
-def test_codec_reported(spark):
-    assert wire_codec() in ("avro", "avro-jvm")
+CODECS = ["json", "avro"]
 
 
 @pytest.mark.parametrize("codec", CODECS)
@@ -330,34 +328,48 @@ def test_event_topic_mutation_value_round_trip(spark, sf_dir, codec):
     assert per.filter(F.col("count") != 2).count() == 0
 
 
-# --- arrow (vectorized) vs pandas codec: independent-implementation pins -----
+# --- vectorized Avro path vs the per-record reference codec ------------------
 
 
 def test_arrow_and_pandas_paths_emit_identical_wire_bytes(spark, sf_dir):
-    """The mapInArrow batch encoder (functions/avro_batch.py) and the
-    pandas-UDF per-record encoder are two implementations of the same
-    Avro 1.11 binary layout — their wire bytes must be identical for
-    every event, key and value alike."""
+    """The mapInArrow vector encoder (functions/avro_batch.py) behind
+    ``to_wire_records(codec="avro")`` and the per-record reference
+    encoder ``encode_record`` are two implementations of the same Avro
+    1.11 binary layout — their wire bytes must be identical for every
+    event, key and value alike, and DELETE events carry a null value
+    (tombstone)."""
+    from collections import Counter
+
     ev = mutation_events(spark, sf_dir)
-    a = (
-        to_wire_records(ev, ["pk"], VALUE_COLS, codec="avro")
+    got = Counter(
+        (r["segpos"], bytes(r["key"]),
+         None if r["value"] is None else bytes(r["value"]))
+        for r in to_wire_records(ev, ["pk"], VALUE_COLS, codec="avro")
         .select("key", "value", "segpos")
         .collect()
     )
-    b = (
-        to_wire_records(ev, ["pk"], VALUE_COLS, codec="avro-pandas")
-        .select("key", "value", "segpos")
-        .collect()
+    key_node = avro_schema_for(KEY_SCHEMA)
+    val_node = avro_schema_for(VALUE_SCHEMA)
+    want = Counter(
+        (
+            f"{r['segment']}:{r['position']}",
+            encode_record(key_node, {"pk": r["pk"]}),
+            None
+            if r["op"] == "DELETE"
+            else encode_record(val_node, {c: r[c] for c in VALUE_COLS}),
+        )
+        for r in ev.select(
+            "pk", *VALUE_COLS, "op", "segment", "position"
+        ).collect()
     )
-    ka = {r["segpos"]: (bytes(r["key"]), None if r["value"] is None else bytes(r["value"])) for r in a}
-    kb = {r["segpos"]: (bytes(r["key"]), None if r["value"] is None else bytes(r["value"])) for r in b}
-    assert ka == kb
+    assert any(v is None for _, _, v in want)
+    assert got == want
 
 
 def test_arrow_path_keeps_nullable_int64_exact_above_2_53(spark):
-    """A nullable int64 column forces the pandas bridge through float64,
-    which rounds values above 2**53 before they reach the encoder. The
-    arrow path must round-trip them bit-exactly."""
+    """An Arrow->pandas bridge turns a nullable int64 column into
+    float64, which rounds values above 2**53. The Arrow codec must
+    round-trip them bit-exactly."""
     big = 2**53 + 1  # not representable in float64
     rows = [
         (1, big, "a", 10, 1, 1, "INSERT"),
@@ -381,18 +393,16 @@ def test_arrow_path_keeps_nullable_int64_exact_above_2_53(spark):
 
 def test_batch_codec_property_identity():
     """Hypothesis sweep: the vectorized batch encoder is byte-identical
-    to encode_record for the hot-path field types, and the compiled
-    batch decoder inverts it exactly."""
+    to encode_record for the hot-path field types, and the vectorized
+    decoder inverts it exactly — over regular and large-offset
+    (``large_string``/``large_binary``, int64 offsets) Arrow inputs."""
     import pyarrow as pa
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
     from cdc_apache_cassandra_spark.functions.avro_batch import (
-        make_batch_decoder,
-        make_batch_encoder,
         make_vector_decoder,
         make_vector_encoder,
-        vector_decodable,
     )
 
     schema = T.StructType(
@@ -404,25 +414,25 @@ def test_batch_codec_property_identity():
         ]
     )
     node = avro_schema_for(schema)
-    enc = make_batch_encoder(node)
-    dec = make_batch_decoder(node)
-    assert vector_decodable(node)
     vdec = make_vector_decoder(node)
     venc = make_vector_encoder(node)
-    pa_schema = pa.schema(
-        [
-            ("a", pa.int64()),
-            ("b", pa.string()),
-            ("c", pa.float64()),
-            ("d", pa.bool_()),
-        ]
-    )
+    pa_schemas = {
+        large: pa.schema(
+            [
+                ("a", pa.int64()),
+                ("b", pa.large_string() if large else pa.string()),
+                ("c", pa.float64()),
+                ("d", pa.bool_()),
+            ]
+        )
+        for large in (False, True)
+    }
     row = st.fixed_dictionaries(
         {
             "a": st.none() | st.integers(-(2**63), 2**63 - 1),
             "b": st.none() | st.text(max_size=50),
-            # NaN excluded: arrow encodes NaN as a double VALUE (correct);
-            # the pandas bridge's notna() masks it to null
+            # NaN excluded: NaN != NaN breaks the row equality below
+            # (test_vector_codec_preserves_nan_vs_null pins NaN)
             "c": st.none()
             | st.floats(allow_nan=False, allow_infinity=True, width=64),
             "d": st.none() | st.booleans(),
@@ -430,89 +440,20 @@ def test_batch_codec_property_identity():
     )
 
     @settings(max_examples=200, deadline=None)
-    @given(st.lists(row, min_size=1, max_size=20))
-    def check(rows):
-        batch = pa.RecordBatch.from_pylist(rows, schema=pa_schema)
-        got = enc(batch)
+    @given(st.lists(row, min_size=1, max_size=20), st.booleans())
+    def check(rows, large):
+        batch = pa.RecordBatch.from_pylist(rows, schema=pa_schemas[large])
         exp = [encode_record(node, r) for r in rows]
-        assert got == exp
         # scatter-assembled vector encoder: same bytes, no per-row work
         assert venc(batch).to_pylist() == exp
-        cols = dec(got)
-        for i, r in enumerate(rows):
-            assert {k: cols[k][i] for k in cols} == r
         # vectorized decoder (numpy varint planes + arrow buffers) must
-        # agree with the per-row parser exactly, nulls included
-        vcols = vdec(pa.array(got, pa.binary()))
+        # invert the reference bytes exactly, nulls included
+        blobs = pa.array(exp, pa.large_binary() if large else pa.binary())
+        vcols = vdec(blobs)
         for i, r in enumerate(rows):
             assert {k: vcols[k][i].as_py() for k in vcols} == r
 
     check()
-
-
-# --- spark-avro (JVM) branch: schema + byte-compat contract ------------------
-
-
-def test_jvm_writer_schema_golden():
-    """The Avro JSON writer schema handed to spark-avro pins the same
-    layout the Python codec encodes: nullable unions in field order,
-    standard logical types; CQL logicals refuse the JVM path."""
-    from cdc_apache_cassandra_spark.functions.avro_codec import (
-        JvmIncompatibleSchema,
-        avro_json_schema,
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("pk", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("d", T.DateType()),
-            T.StructField("tags", T.ArrayType(T.StringType())),
-        ]
-    )
-    j = avro_json_schema(avro_schema_for(schema))
-    assert [f["name"] for f in j["fields"]] == ["pk", "ts", "d", "tags"]
-    assert j["fields"][0]["type"] == ["null", "long"]
-    assert j["fields"][1]["type"][1] == {
-        "type": "long",
-        "logicalType": "timestamp-millis",
-    }
-    assert j["fields"][2]["type"][1] == {"type": "int", "logicalType": "date"}
-    assert j["fields"][3]["type"][1]["type"] == "array"
-    # CQL logical types stay on the Python codec (NativeAvroConverter's
-    # custom conversions, CqlLogicalTypes.java:109-160)
-    with pytest.raises(JvmIncompatibleSchema):
-        avro_json_schema(
-            avro_schema_for(
-                T.StructType([T.StructField("x", T.DecimalType(10, 2))])
-            )
-        )
-
-
-def test_jvm_codec_byte_identity_when_available(spark, sf_dir):
-    """CONTRACT for clusters carrying spark-avro: the JVM to_avro path
-    and the built-in codec must emit identical wire bytes. Skips (with
-    the reason pinned) where the jar is absent — the byte layout claim
-    is still enforced offline by test_jvm_writer_schema_golden plus the
-    Avro-spec golden pins above, since Avro binary is fully determined
-    by (writer schema, values)."""
-    if wire_codec() != "avro-jvm":
-        pytest.skip(
-            "spark-avro expressions not on the JVM classpath; "
-            "run with --packages org.apache.spark:spark-avro_2.13:<ver>"
-        )
-    ev = mutation_events(spark, sf_dir)
-    a = to_wire_records(ev, ["pk"], VALUE_COLS, codec="avro").select(
-        "segpos", "key", "value"
-    )
-    b = to_wire_records(ev, ["pk"], VALUE_COLS, codec="avro-jvm").select(
-        "segpos", "key", "value"
-    )
-    ka = {r["segpos"]: (bytes(r["key"]), r["value"]) for r in a.collect()}
-    kb = {r["segpos"]: (bytes(r["key"]), r["value"]) for r in b.collect()}
-    assert ka.keys() == kb.keys()
-    for s in ka:
-        assert ka[s][0] == kb[s][0], s
 
 
 def test_quarantine_decode_survives_corrupt_blobs(spark, sf_dir):
@@ -578,10 +519,10 @@ def test_event_topic_quarantine_decode(spark, sf_dir):
 def test_batch_codec_timestamp_identity_including_pre_epoch():
     """ADVICE r3 (medium): the scalar codec must floor timestamps to
     millis from INTEGER microseconds, matching JVM Instant.toEpochMilli
-    and the vectorized path's `vals // div` — truncation toward zero
+    and the vectorized path's floor division — truncation toward zero
     diverges on pre-epoch sub-ms values (-0.5 ms must encode as zigzag
-    -1, not 0). Property sweep pins all three encoders byte-identical
-    and the decoders agree on the ms-floored value."""
+    -1, not 0). Property sweep pins both encoders byte-identical and
+    the vectorized decoder to the ms-floored value."""
     import datetime
 
     import pyarrow as pa
@@ -589,11 +530,8 @@ def test_batch_codec_timestamp_identity_including_pre_epoch():
     from hypothesis import strategies as st
 
     from cdc_apache_cassandra_spark.functions.avro_batch import (
-        make_batch_decoder,
-        make_batch_encoder,
         make_vector_decoder,
         make_vector_encoder,
-        vector_decodable,
     )
 
     schema = T.StructType(
@@ -603,9 +541,6 @@ def test_batch_codec_timestamp_identity_including_pre_epoch():
         ]
     )
     node = avro_schema_for(schema)
-    enc = make_batch_encoder(node)
-    dec = make_batch_decoder(node)
-    assert vector_decodable(node)
     venc = make_vector_encoder(node)
     vdec = make_vector_decoder(node)
     pa_schema = pa.schema([("a", pa.int64()), ("t", pa.timestamp("us"))])
@@ -632,18 +567,13 @@ def test_batch_codec_timestamp_identity_including_pre_epoch():
     @given(st.lists(row, min_size=1, max_size=20))
     def check(rows):
         batch = pa.RecordBatch.from_pylist(rows, schema=pa_schema)
-        got = enc(batch)
         exp = [encode_record(node, r) for r in rows]
-        assert got == exp
         assert venc(batch).to_pylist() == exp
         floored = [
             {"a": r["a"], "t": None if r["t"] is None else ms_floor(r["t"])}
             for r in rows
         ]
-        cols = dec(got)
-        for i, r in enumerate(floored):
-            assert {k: cols[k][i] for k in cols} == r
-        vcols = vdec(pa.array(got, pa.binary()))
+        vcols = vdec(pa.array(exp, pa.binary()))
         for i, r in enumerate(floored):
             got_row = {k: vcols[k][i].as_py() for k in vcols}
             assert got_row == r
@@ -655,7 +585,7 @@ def test_batch_codec_timestamp_identity_including_pre_epoch():
     batch = pa.RecordBatch.from_pylist(
         [{"a": 1, "t": minus_half_ms}], schema=pa_schema
     )
-    assert make_batch_encoder(node)(batch) == [by]
+    assert venc(batch).to_pylist() == [by]
 
 
 def test_tombstone_decode_with_non_nullable_value_schema(spark):
@@ -679,12 +609,88 @@ def test_tombstone_decode_with_non_nullable_value_schema(spark):
     assert got == {1: "x", 2: None}
 
 
+def test_avro_wire_round_trip_with_large_arrow_var_types(spark):
+    """With ``spark.sql.execution.arrow.useLargeVarTypes`` on, mapInArrow
+    hands the codec ``large_string``/``large_binary`` columns with int64
+    offsets. Both directions must read the offsets at that width: an
+    int32 read encodes "abc" as b"\\x02\\x00" and fails the decode with
+    a record length mismatch. The session setting is restored after."""
+
+    def blob(v):
+        return None if v is None else bytes(v)
+
+    conf = "spark.sql.execution.arrow.useLargeVarTypes"
+    prev = spark.conf.get(conf, None)
+    spark.conf.set(conf, "true")
+    try:
+        ev = spark.createDataFrame(
+            [
+                (1, "abc", b"\x01\x02", 10, 1, 1, "INSERT"),
+                (2, None, None, 20, 1, 2, "INSERT"),
+                (3, "", b"", 30, 1, 3, "INSERT"),
+                (4, "x", b"\xff", 40, 1, 4, "DELETE"),
+            ],
+            "pk long, s string, b binary, writetime long, segment long, "
+            "position long, op string",
+        )
+        vs = T.StructType(
+            [T.StructField("s", T.StringType()), T.StructField("b", T.BinaryType())]
+        )
+        wire = to_wire_records(ev, ["pk"], ["s", "b"], codec="avro")
+        got = {
+            r["segpos"]: (bytes(r["key"]), blob(r["value"]))
+            for r in wire.collect()
+        }
+        kn, vn = avro_schema_for(KEY_SCHEMA), avro_schema_for(vs)
+        assert got == {
+            "1:1": (encode_record(kn, {"pk": 1}), b"\x02\x06abc\x02\x04\x01\x02"),
+            "1:2": (encode_record(kn, {"pk": 2}), b"\x00\x00"),
+            "1:3": (encode_record(kn, {"pk": 3}), b"\x02\x00\x02\x00"),
+            "1:4": (encode_record(kn, {"pk": 4}), None),
+        }
+        assert got["1:1"][1] == encode_record(vn, {"s": "abc", "b": b"\x01\x02"})
+        back = from_wire_records(wire, KEY_SCHEMA, vs, codec="avro").collect()
+        assert {r["pk"]: (r["s"], blob(r["b"])) for r in back} == {
+            1: ("abc", b"\x01\x02"),
+            2: (None, None),
+            3: ("", b""),
+            4: (None, None),
+        }
+    finally:
+        if prev is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, prev)
+
+
+def test_on_error_is_validated(spark):
+    """``on_error`` accepts only 'raise' and 'quarantine', and quarantine
+    only with the Avro codec: a typo must not silently mean 'raise', and
+    JSON has no quarantine path that would add ``decode_error``."""
+    ev = spark.createDataFrame(
+        [(1, "x", 10, 1, 1, "INSERT")],
+        "pk long, s string, writetime long, segment long, position long, "
+        "op string",
+    )
+    wire = to_wire_records(ev, ["pk"], ["s"], codec="avro")
+    vs = T.StructType([T.StructField("s", T.StringType())])
+    for decode, args in (
+        (from_wire_records, (wire, KEY_SCHEMA, vs)),
+        (from_event_topic_records, (wire, KEY_SCHEMA)),
+    ):
+        with pytest.raises(ValueError, match="on_error"):
+            decode(*args, on_error="quarantined")
+        with pytest.raises(ValueError, match="quarantine"):
+            decode(*args, codec="json", on_error="quarantine")
+        with pytest.raises(ValueError, match="codec"):
+            decode(*args, codec="protobuf")
+
+
 def test_vector_codec_preserves_nan_vs_null():
     """Code-review r4: the DEFAULT vectorized codec must keep SQL NULL
     and a genuine NaN double distinct — Arrow validity buffers carry the
-    difference. (The avro-pandas cross-check codec CANNOT: the
-    Arrow->pandas bridge collapses both to float64 NaN — documented
-    limitation in wire_format._null_safe.)"""
+    difference (an Arrow->pandas bridge would collapse both to float64
+    NaN)."""
     import math
 
     import pyarrow as pa
@@ -884,9 +890,9 @@ def test_wire_codec_random_schema_fuzz():
     """Hypothesis over RANDOM §1.2 schemas (scalars incl. varint/decimal/
     duration/timestamp/date, arrays, string-keyed maps, nested UDT
     records, every field nullable): encode∘decode identity on the
-    per-row codec AND four-way byte/value equality across the batch
-    paths (fragment encoder, scatter vector encoder, batch decoder,
-    vectorized decoder). Derandomized = a pinned, reproducible corpus.
+    per-row codec AND byte/value equality of the vectorized batch codec
+    with it (vector encoder bytes == reference bytes, vector decoder
+    values == input). Derandomized = a pinned, reproducible corpus.
     The r4 decimal-context corruption (>28 significant digits) is
     exactly the bug class this sweeps for; test_decimal_precision_
     beyond_default_context pins that specific case forever."""
@@ -895,8 +901,6 @@ def test_wire_codec_random_schema_fuzz():
     from hypothesis import strategies as st
 
     from cdc_apache_cassandra_spark.functions.avro_batch import (
-        make_batch_decoder,
-        make_batch_encoder,
         make_vector_decoder,
         make_vector_encoder,
     )
@@ -940,15 +944,12 @@ def test_wire_codec_random_schema_fuzz():
             got = decode_record(node, blob)
             for (nm, sub) in node[1]:
                 assert _fuzz_eq(sub, r[nm], got[nm]), (nm, sub, r[nm], got[nm])
-        # batch tri-path byte equality
+        # vector codec vs reference bytes and vs input values
         batch = pa.RecordBatch.from_pylist(rows, schema=pa_schema)
-        assert make_batch_encoder(node)(batch) == blobs
         assert make_vector_encoder(node)(batch).to_pylist() == blobs
-        cols = make_batch_decoder(node)(blobs)
         vcols = make_vector_decoder(node)(pa.array(blobs, pa.binary()))
         for (nm, sub) in node[1]:
             for i, r in enumerate(rows):
-                assert _fuzz_eq(sub, r[nm], cols[nm][i]), ("batch", nm, i)
                 assert _fuzz_eq(sub, r[nm], vcols[nm][i]), ("vector", nm, i)
 
     check()
