@@ -61,8 +61,10 @@ class CdcPipelineConfig:
             raise ValueError("batch.size must be positive")
         if self.cache_max_digest <= 0:
             raise ValueError("cache.max.digest must be positive")
-        if self.cache_expire_after_ms < 0:
-            raise ValueError("cache.expire.after.ms must be >= 0")
+        # transformWithState reads a zero state TTL as "no TTL": 0 would
+        # silently mean "never expire", the opposite of the reference
+        if self.cache_expire_after_ms <= 0:
+            raise ValueError("cache.expire.after.ms must be positive")
         if self.output_format not in ("struct", "json"):
             raise ValueError(f"unknown output format {self.output_format!r}")
         return self

@@ -11,8 +11,9 @@ Spark mapping:
 - streaming:  ``withWatermark(...).dropDuplicatesWithinWatermark`` — state
               bounded by the watermark just as Caffeine's TTL bounded the
               cache (60 s default, CassandraSourceConnectorConfig.java:205-211).
-- exact-cache refinement (≤N digests per key) lives in
-  ``streaming/state.py`` via applyInPandasWithState.
+- exact-cache refinement (≤N digests per key, processing-time TTL) lives
+  in ``streaming/state.py``: one transformWithState operator for batch
+  and stream.
 
 Scale: dedup shuffles on (pk, digest) — maximal key cardinality, so skew is
 impossible by construction; AQE coalesces post-shuffle partitions.

@@ -892,22 +892,16 @@ FROM events_stream
 
 @register("cdc_dedup_events_tws", sql=_TWS_DEDUP_SQL)
 def cdc_dedup_events_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Replica-fan-in dedup through the ACTUAL transformWithStateInPandas
-    operator (batch mode, RocksDB state store, the vendored protobuf
-    wire shim where the wheel is absent) — not a DataFrame twin. Replica
-    duplicates share the full mutation identity and sort adjacent, so
-    the bounded ≤N-digest cache yields exactly DISTINCT semantics, which
-    is the oracle. Coordinator warm-up quirk documented in
-    streaming/state.py::warm_state_store_coordinator."""
-    from cdc_apache_cassandra_spark.streaming.protoshim import (
-        ensure_protobuf,
-    )
-    from cdc_apache_cassandra_spark.streaming.state import (
-        mutation_cache_dedup_batch_tws,
-    )
+    """Replica-fan-in dedup through the ACTUAL transformWithState
+    mutation cache (batch mode, RocksDB state store, the vendored
+    protobuf wire shim where the wheel is absent) — not a DataFrame
+    twin. Replica duplicates share the full mutation identity and sort
+    adjacent, so the bounded ≤N-digest cache yields exactly DISTINCT
+    semantics, which is the oracle. Coordinator warm-up quirk documented
+    in streaming/state.py::warm_state_store_coordinator."""
+    from cdc_apache_cassandra_spark.streaming.state import mutation_cache_dedup
 
-    ensure_protobuf()
     ev = mutation_events(spark, sf_dir).select(
         "pk", "digest", "writetime", "segment", "position"
     )
-    return mutation_cache_dedup_batch_tws(ev)
+    return mutation_cache_dedup(ev)

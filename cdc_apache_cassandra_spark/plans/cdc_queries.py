@@ -856,7 +856,7 @@ def cdc_streaming_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     item 3) — not the batch twin: mutation events written as commitlog
     segments, replayed by the cdc_commitlog PYTHON DATA SOURCE as a
     Structured Streaming source (one InputPartition per segment, Arrow
-    batches), deduped per-key by the ACTUAL transformWithStateInPandas
+    batches), deduped per-key by the ACTUAL row-mode transformWithState
     MutationCacheProcessor (RocksDB state store; vendored protobuf wire
     shim where the wheel is absent), and committed through
     ``materialize_stream`` — a real ``writeStream.foreachBatch`` query
@@ -876,12 +876,8 @@ def cdc_streaming_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
         materialize_stream,
         read_state,
     )
-    from cdc_apache_cassandra_spark.streaming.protoshim import ensure_protobuf
-    from cdc_apache_cassandra_spark.streaming.state import (
-        mutation_cache_dedup_stream_tws,
-    )
+    from cdc_apache_cassandra_spark.streaming.state import mutation_cache_dedup
 
-    ensure_protobuf()
     root = tempfile.mkdtemp(prefix="cdc_stream_e2e_")
     seg_dir = f"{root}/segments"
     table = f"{root}/table"
@@ -892,9 +888,7 @@ def cdc_streaming_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = (
         spark.readStream.format("cdc_commitlog").option("path", seg_dir).load()
     )
-    deduped = mutation_cache_dedup_stream_tws(
-        stream.drop("node_id"), ttl_ms=None
-    )
+    deduped = mutation_cache_dedup(stream.drop("node_id"), ttl_ms=None)
     q = materialize_stream(deduped, table, ckpt, ["pk"], n_buckets=8)
     try:
         q.processAllAvailable()

@@ -31,7 +31,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cdc_apache_cassandra_spark.operators.dedup import DEFAULT_TTL
+from cdc_apache_cassandra_spark.operators.dedup import (
+    DEFAULT_TTL,
+    dedup_mutations,
+    dedup_mutations_stream,
+)
 from cdc_apache_cassandra_spark.operators.lookup import key_value_records, read_after_event
 
 
@@ -39,16 +43,6 @@ def with_event_time(events: DataFrame, writetime_col: str = "writetime") -> Data
     """Derive the TimestampType event-time column from the µs writetime
     (reference W2: mutation carries Cassandra writetime in µs)."""
     return events.withColumn("event_time", F.timestamp_micros(F.col(writetime_col)))
-
-
-def streaming_dedup(events: DataFrame, ttl: str = DEFAULT_TTL) -> DataFrame:
-    """Watermark-bounded exactly-once-per-(pk,digest) — MutationCache (A1/W1)."""
-    return (
-        with_event_time(events)
-        .withWatermark("event_time", ttl)
-        .dropDuplicatesWithinWatermark(["pk", "digest"])
-        .drop("node_id")
-    )
 
 
 def build_pipeline(
@@ -60,8 +54,10 @@ def build_pipeline(
     streaming: bool = True,
 ) -> DataFrame:
     """events (stream or batch) -> keyed data-topic records with tombstones."""
-    deduped = streaming_dedup(events, ttl) if streaming else (
-        events.drop("node_id").dropDuplicates([*pk_cols, "digest"])
+    deduped = (
+        dedup_mutations_stream(with_event_time(events), ttl, pk_cols)
+        if streaming
+        else dedup_mutations(events, pk_cols)
     )
     enriched = read_after_event(deduped, snapshot, pk_cols, value_cols)
     return key_value_records(enriched, pk_cols, value_cols)

@@ -1,4 +1,4 @@
-"""Exact MutationCache semantics as a custom stateful operator (SURVEY A1/A2
+"""Exact MutationCache semantics as one stateful operator (SURVEY A1/A2
 refinement, §7.2 step 4).
 
 The reference cache (connector/.../MutationCache.java:39-73) keeps, per PK,
@@ -12,11 +12,16 @@ simple dropDuplicates misses:
   last-write-wins).
 - TTL expiry: after 60 s of silence the key's digests are forgotten.
 
-Spark mapping: ``groupBy(pk).applyInPandasWithState`` with a
-``GroupStateTimeout.ProcessingTimeTimeout`` — per-key serial processing
-(the reference's hash(key)%threads executor, A4) falls out of the shuffle.
-The pure-pandas core is shared with a batch ``applyInPandas`` twin so batch
-tests pin the semantics without a streaming harness.
+Spark mapping: ``groupBy(pk).transformWithState`` with the row-mode
+:class:`MutationCacheProcessor`. The digest list lives in a RocksDB
+``ValueState`` with native processing-time TTL — the engine evicts expired
+keys itself, the analogue of Caffeine's expireAfterWrite. One operator
+serves both run modes: streaming inputs run it with timeMode
+"ProcessingTime", batch inputs with timeMode "None", so the batch
+correctness gate exercises the same engine path the stream runs. Per-key
+serial processing (the reference's hash(key)%threads executor, A4) falls
+out of the shuffle. ``_dedup_rows`` is the pure pandas reference the tests
+compare the operator against.
 
 Scale: state per key is ≤N 32-char strings; keys live only TTL long. The
 shuffle on pk is the same one the downstream join needs — Catalyst reuses
@@ -25,16 +30,15 @@ the partitioning.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.streaming.stateful_processor import (
     StatefulProcessor,
     StatefulProcessorHandle,
 )
+
+from cdc_apache_cassandra_spark.streaming.protoshim import ensure_protobuf
 
 DEFAULT_MAX_DIGESTS = 3  # cache.max.digest
 DEFAULT_TTL_MS = 60_000  # cache.expire.after.ms
@@ -60,176 +64,23 @@ def _dedup_rows(
     return pdf[pd.Series(keep_mask, index=pdf.index)], seen
 
 
-def mutation_cache_dedup_batch(
-    events: DataFrame,
-    max_digests: int = DEFAULT_MAX_DIGESTS,
-    pk_col: str = "pk",
-) -> DataFrame:
-    """Batch twin: per-key bounded-cache dedup via applyInPandas."""
-    schema = events.schema
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        out, _ = _dedup_rows(pdf, [], max_digests)
-        return out
-
-    return events.groupBy(pk_col).applyInPandas(fn, schema=schema)
-
-
-def mutation_cache_dedup_stream(
-    events: DataFrame,
-    max_digests: int = DEFAULT_MAX_DIGESTS,
-    ttl_ms: int | None = DEFAULT_TTL_MS,
-    pk_col: str = "pk",
-) -> DataFrame:
-    """Streaming operator via applyInPandasWithState.
-
-    ``ttl_ms=None`` disables the processing-time TTL (NoTimeout). Use None
-    for finite replays/tests: with ProcessingTimeTimeout the engine keeps
-    scheduling empty micro-batches to fire expirations, so
-    ``processAllAvailable`` never settles on a finished source.
-    """
-    out_schema = events.schema
-    with_ttl = ttl_ms is not None
-
-    def fn(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-        seen = list(state.get[0]) if state.exists else []
-        for pdf in pdfs:
-            out, seen = _dedup_rows(pdf, seen, max_digests)
-            if len(out):
-                yield out
-        state.update((seen,))
-        if with_ttl:
-            state.setTimeoutDuration(ttl_ms)
-
-    return events.groupBy(pk_col).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType="seen array<string>",
-        outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.ProcessingTimeTimeout
-            if with_ttl
-            else GroupStateTimeout.NoTimeout
-        ),
-    )
-
-
-def mutation_cache_dedup_stream_event_time(
-    events: DataFrame,
-    max_digests: int = DEFAULT_MAX_DIGESTS,
-    ttl_ms: int = DEFAULT_TTL_MS,
-    pk_col: str = "pk",
-    event_time_col: str = "event_time",
-    watermark_delay: str = "1 minute",
-) -> DataFrame:
-    """Event-time TTL variant: a key's digests expire when the WATERMARK
-    (not the wall clock) passes last-event-time + ttl — the faithful
-    analogue of the reference's expireAfterWrite under event-time replays
-    (a backfilled/stalled stream cannot prematurely forget digests the
-    way a processing-time clock would).
-
-    ``events`` must carry a TimestampType ``event_time_col``; the
-    watermark on it drives both expiry and the timeout firing. Replays
-    with finite sources settle because timeouts fire from data progress,
-    not empty scheduler batches.
-    """
-    out_schema = events.schema
-
-    def fn(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        seen = list(state.get[0]) if state.exists else []
-        max_ts_ms = 0
-        for pdf in pdfs:
-            out, seen = _dedup_rows(pdf, seen, max_digests)
-            # event time in ms for the timeout horizon
-            batch_max = pdf[event_time_col].max()
-            if batch_max is not None:
-                max_ts_ms = max(max_ts_ms, int(batch_max.value // 1_000_000))
-            if len(out):
-                yield out
-        state.update((seen,))
-        # the engine rejects horizons at/behind the watermark — a key whose
-        # events are already older than watermark - ttl expires on the next
-        # possible tick instead
-        horizon = max(max_ts_ms + ttl_ms, state.getCurrentWatermarkMs() + 1)
-        state.setTimeoutTimestamp(horizon)
-
-    return (
-        events.withWatermark(event_time_col, watermark_delay)
-        .groupBy(pk_col)
-        .applyInPandasWithState(
-            fn,
-            outputStructType=out_schema,
-            stateStructType="seen array<string>",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
 class MutationCacheProcessor(StatefulProcessor):
-    """Spark-4 ``transformWithStateInPandas`` form of the mutation cache.
+    """Row-mode ``transformWithState`` processor of the mutation cache.
+    The bounded digest list lives in a ValueState with native TTL
+    (``ttlDurationMs``). ``handleInputRows`` receives plain Rows: no
+    per-key pandas DataFrame construction, which on the streaming gate
+    measured ~3× the task time of the dedup itself (allUpdatesTimeMs
+    174 s → 58 s over 30 k keys at ~1.5 rows each — guide §4: per-key
+    boundary overhead is the operator's floor; pandas-per-tiny-group
+    multiplies it).
 
-    The bounded digest list lives in a ValueState with NATIVE state TTL
-    (``ttlDurationMs``) — the engine evicts expired keys itself, the exact
-    analogue of the reference cache's expireAfterWrite
-    (connector/.../MutationCache.java:41-43) with no hand-rolled timer
-    bookkeeping (contrast mutation_cache_dedup_stream's timeout dance).
-    Same pure core (`_dedup_rows`), so all three operators agree.
-    """
-
-    def __init__(self, max_digests: int = DEFAULT_MAX_DIGESTS,
-                 ttl_ms: int | None = DEFAULT_TTL_MS):
-        self._max_digests = max_digests
-        self._ttl_ms = ttl_ms
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._seen = handle.getValueState(
-            "seen", "seen array<string>", ttlDurationMs=self._ttl_ms
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        # ONE state read per key: ValueState.get() returns None for an
-        # absent key, so the exists() probe was a second full state-server
-        # round trip per key per batch — dropping it cut this operator's
-        # task time by ~35% (guide §4: the per-key Python boundary cost is
-        # the operator's floor; every RPC on top of it multiplies).
-        got = self._seen.get()
-        seen = list(got[0]) if got is not None else []
-        for pdf in rows:
-            out, seen = _dedup_rows(pdf, seen, self._max_digests)
-            if len(out):
-                yield out
-        self._seen.update((seen,))
-
-    def close(self) -> None:
-        pass
-
-
-class MutationCacheRowProcessor(StatefulProcessor):
-    """Row-mode ``transformWithState`` form of the mutation cache — the
-    hot path. Same bounded digest list in a ValueState with native TTL,
-    but ``handleInputRows`` receives plain Rows: no per-key pandas
-    DataFrame construction, which on the streaming gate measured ~3× the
-    task time of the dedup itself (allUpdatesTimeMs 174 s → 58 s over
-    30 k keys at ~1.5 rows each — guide §4: per-key boundary overhead is
-    the operator's floor; pandas-per-tiny-group multiplies it).
-
-    Semantics match :class:`MutationCacheProcessor` exactly on each
-    key's batch: rows sort stably by (writetime, segment, position) —
-    here across the WHOLE key-batch, which is also what the batch twin's
-    ``applyInPandas`` does — then first-seen digests survive against the
-    bounded ``seen`` list (evicting the oldest, as the reference evicts
-    the list head). Column positions are resolved from the input schema
-    at plan time (``sort_idx``/``digest_idx``) so the per-row work is
-    tuple indexing, not name lookups."""
+    Semantics match :func:`_dedup_rows` on each key's batch: rows sort
+    stably by (writetime, segment, position) across the whole key-batch,
+    then first-seen digests survive against the bounded ``seen`` list
+    (evicting the oldest, as the reference evicts the list head). Column
+    positions are resolved from the input schema at plan time
+    (``sort_idx``/``digest_idx``) so the per-row work is tuple indexing,
+    not name lookups."""
 
     def __init__(
         self,
@@ -249,7 +100,11 @@ class MutationCacheRowProcessor(StatefulProcessor):
         )
 
     def handleInputRows(self, key, rows, timerValues):
-        got = self._seen.get()  # one state read; None for an absent key
+        # ONE state read per key: ValueState.get() returns None for an
+        # absent key, so no exists() probe — that would be a second full
+        # state-server round trip per key per batch (~35% of this
+        # operator's task time, measured).
+        got = self._seen.get()
         seen = list(got[0]) if got is not None else []
         iw, isg, ipos = self._sort_idx
         idg = self._digest_idx
@@ -269,44 +124,6 @@ class MutationCacheRowProcessor(StatefulProcessor):
         pass
 
 
-def mutation_cache_dedup(
-    events: DataFrame,
-    max_digests: int = DEFAULT_MAX_DIGESTS,
-    ttl_ms: int | None = DEFAULT_TTL_MS,
-    pk_col: str = "pk",
-    engine: str = "auto",
-) -> DataFrame:
-    """Engine-selecting front door for the streaming mutation cache.
-
-    ``engine='auto'`` picks transformWithStateInPandas (RocksDB store,
-    native TTL — the right operator at scale: changelog checkpointing,
-    bounded executor memory, engine-evicted state) whenever its protobuf
-    worker dependency is satisfiable (real wheel or the vendored wire
-    shim), else falls back to ``applyInPandasWithState``. Both engines
-    share the `_dedup_rows` core, so results are identical — pinned by
-    tests/test_streaming.py. Force a specific engine with
-    ``'tws'`` / ``'pandas-state'``."""
-    if engine == "auto":
-        try:
-            from cdc_apache_cassandra_spark.streaming.protoshim import (
-                ensure_protobuf,
-            )
-
-            ensure_protobuf()
-            engine = "tws"
-        except ImportError:  # pragma: no cover — no wheel, no vendor
-            engine = "pandas-state"
-    if engine == "tws":
-        return mutation_cache_dedup_stream_tws(
-            events, max_digests=max_digests, ttl_ms=ttl_ms, pk_col=pk_col
-        )
-    if engine == "pandas-state":
-        return mutation_cache_dedup_stream(
-            events, max_digests=max_digests, ttl_ms=ttl_ms, pk_col=pk_col
-        )
-    raise ValueError(f"unknown engine {engine!r}")
-
-
 def warm_state_store_coordinator(spark) -> None:
     """transformWithState in BATCH mode still loads executor state
     stores through the driver's StateStoreCoordinator, which Spark only
@@ -317,52 +134,46 @@ def warm_state_store_coordinator(spark) -> None:
     spark._jsparkSession.sessionState().streamingQueryManager().stateStoreCoordinator()
 
 
-def mutation_cache_dedup_batch_tws(
-    events: DataFrame,
-    max_digests: int = DEFAULT_MAX_DIGESTS,
-    pk_col: str = "pk",
-) -> DataFrame:
-    """BATCH run of the transformWithStateInPandas mutation cache — the
-    same StatefulProcessor the streaming path uses, executed by the real
-    engine (RocksDB store) over a bounded input. Lets the correctness
-    gate exercise the Spark-4 stateful operator itself, not a twin."""
-    warm_state_store_coordinator(events.sparkSession)
-    return mutation_cache_dedup_stream_tws(
-        events, max_digests=max_digests, ttl_ms=None, pk_col=pk_col
-    )
-
-
-def mutation_cache_dedup_stream_tws(
+def mutation_cache_dedup(
     events: DataFrame,
     max_digests: int = DEFAULT_MAX_DIGESTS,
     ttl_ms: int | None = DEFAULT_TTL_MS,
     pk_col: str = "pk",
 ) -> DataFrame:
-    """transformWithState variant (Spark 4 stateful-processor API), in
-    ROW mode via :class:`MutationCacheRowProcessor` — value-identical to
-    the pandas-mode :class:`MutationCacheProcessor` (pinned by
-    tests/test_streaming.py) at ~1/3 the per-key task time on replica-
-    scale groups.
+    """The mutation cache over a batch or streaming ``events`` frame
+    carrying ``digest``, ``writetime``, ``segment`` and ``position``.
 
-    Requires the RocksDB state store (the only provider transformWithState
-    supports) — set on the session here; at scale that is also the right
-    store (changelog checkpointing, bounded executor memory). ``ttl_ms``
-    None disables TTL (timeMode "None") so finite replays settle in tests.
+    Runs :class:`MutationCacheProcessor` through ``transformWithState`` on
+    the RocksDB state store (at scale also the right store: changelog
+    checkpointing, bounded executor memory).
 
-    Runtime dependency: the transformWithState Python driver worker needs
-    the ``protobuf`` package. Clusters ship it; this container does not,
-    so the test suite gates on importorskip("google.protobuf") and the
-    applyInPandasWithState operators above remain the default path here.
-    """
+    - Streaming: timeMode "ProcessingTime" with native state TTL of
+      ``ttl_ms``; ``ttl_ms=None`` disables TTL (timeMode "None") so finite
+      replays settle in tests. The session's state store provider is set
+      to RocksDB, the only one streaming transformWithState accepts.
+    - Batch: timeMode "None" after warming the StateStoreCoordinator; a
+      bounded input has no processing-time horizon, so ``ttl_ms`` is
+      ignored. Batch transformWithState runs without the session
+      provider, so it is left alone: it is session-wide, and every later
+      stateful stream of the session would start its stores on RocksDB.
+
+    The transformWithState Python worker needs ``google.protobuf``;
+    :func:`ensure_protobuf` supplies the real wheel or the vendored wire
+    shim (it must also run before the JVM starts for workers to see it)."""
+    ensure_protobuf()
     spark = events.sparkSession
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
+    if events.isStreaming:
+        spark.conf.set(
+            "spark.sql.streaming.stateStore.providerClass",
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        )
+    else:
+        warm_state_store_coordinator(spark)
+        ttl_ms = None
     names = events.schema.names
     sort_idx = tuple(names.index(c) for c in ORDER)
     return events.groupBy(pk_col).transformWithState(
-        MutationCacheRowProcessor(
+        MutationCacheProcessor(
             sort_idx, names.index("digest"), max_digests, ttl_ms
         ),
         outputStructType=events.schema,

@@ -40,6 +40,9 @@ def test_validation():
         CdcPipelineConfig(batch_size=0).validate()
     with pytest.raises(ValueError):
         CdcPipelineConfig(output_format="xml").validate()
+    # a zero TTL would reach transformWithState as "no TTL" (never expire)
+    with pytest.raises(ValueError, match="cache.expire.after.ms must be positive"):
+        CdcPipelineConfig(cache_expire_after_ms=0).validate()
 
 
 def test_ttl_string():
@@ -49,16 +52,14 @@ def test_ttl_string():
 
 def test_config_drives_cache_operator(spark):
     """cache.max.digest flows into the bounded dedup cache."""
-    from cdc_apache_cassandra_spark.streaming.state import (
-        mutation_cache_dedup_batch,
-    )
+    from cdc_apache_cassandra_spark.streaming.state import mutation_cache_dedup
 
     rows = [(1, d, i, 0, i) for i, d in enumerate(["d0", "d1", "d0"])]
     df = spark.createDataFrame(
         rows, "pk long, digest string, writetime long, segment long, position long"
     )
     c1 = from_reference_keys({"cache.max.digest": "1"})
-    out = mutation_cache_dedup_batch(df, max_digests=c1.cache_max_digest)
+    out = mutation_cache_dedup(df, max_digests=c1.cache_max_digest)
     # with a 1-digest cache, d0 re-emits after d1 evicted it
     assert [r["digest"] for r in out.orderBy("writetime").collect()] == [
         "d0", "d1", "d0",

@@ -165,29 +165,3 @@ def test_detached_oneof_child_cannot_corrupt_parent():
     back = sm.StateRequest()
     back.ParseFromString(wire)
     assert back.HasField("stateVariableRequest")
-
-
-def test_auto_engine_prefers_native_tws_when_protobuf_available():
-    """VERDICT r6 item 8: the dedup front door must pick the
-    transformWithStateInPandas (native-TTL RocksDB) path whenever the
-    protobuf worker dependency is satisfiable — which ensure_protobuf
-    guarantees here (real wheel or vendored shim). Pinned by routing,
-    not by running a stream: force a marker exception out of the tws
-    constructor path."""
-    from unittest import mock
-
-    from cdc_apache_cassandra_spark.streaming import state as st
-
-    # ensure_protobuf() succeeded at module import (MODE is set), so
-    # auto MUST route to the tws operator
-    with mock.patch.object(
-        st, "mutation_cache_dedup_stream_tws", side_effect=RuntimeError("tws-route")
-    ):
-        with pytest.raises(RuntimeError, match="tws-route"):
-            st.mutation_cache_dedup(None, engine="auto")
-    # and the explicit fallback still routes to pandas-state
-    with mock.patch.object(
-        st, "mutation_cache_dedup_stream", side_effect=RuntimeError("pandas-route")
-    ):
-        with pytest.raises(RuntimeError, match="pandas-route"):
-            st.mutation_cache_dedup(None, engine="pandas-state")

@@ -4,18 +4,22 @@
 import uuid
 
 import pytest
-from pyspark.sql import functions as F
 
-from cdc_apache_cassandra_spark.operators.dedup import dedup_mutations
+from cdc_apache_cassandra_spark.operators.dedup import (
+    dedup_mutations,
+    dedup_mutations_stream,
+)
 from cdc_apache_cassandra_spark.sources.event_source import mutation_events
 from cdc_apache_cassandra_spark.sources.registry import load_table
 from cdc_apache_cassandra_spark.streaming.pipeline import (
     build_pipeline,
     run_to_memory,
+    with_event_time,
 )
 from cdc_apache_cassandra_spark.streaming.state import (
-    mutation_cache_dedup_batch,
-    mutation_cache_dedup_stream,
+    MutationCacheProcessor,
+    _dedup_rows,
+    mutation_cache_dedup,
 )
 
 VALUE_COLS = ["c_name", "c_nationkey", "c_acctbal", "c_mktsegment"]
@@ -65,14 +69,14 @@ def test_stream_equals_batch(spark, sf_dir, event_dir):
     assert want.exceptAll(got).count() == 0
 
 
-def test_streaming_dedup_suppresses_replicas(spark, sf_dir, event_dir):
+def test_watermark_dedup_suppresses_replicas(spark, sf_dir, event_dir):
     """dropDuplicatesWithinWatermark collapses the RF=2 duplication even
     when replicas arrive in different micro-batches."""
-    from cdc_apache_cassandra_spark.streaming.pipeline import streaming_dedup
-
     stream = _read_stream(spark, event_dir)
     name = f"dedup_out_{uuid.uuid4().hex[:8]}"
-    run_to_memory(streaming_dedup(stream, ttl="365 days"), name)
+    run_to_memory(
+        dedup_mutations_stream(with_event_time(stream), ttl="365 days"), name
+    )
     got = spark.table(name)
     want = dedup_mutations(spark.read.parquet(event_dir))
     assert got.count() == want.count()
@@ -105,10 +109,11 @@ def test_late_events_dropped_by_watermark(spark):
             .option("maxFilesPerTrigger", 1)
             .parquet(f"{d}/*")
         )
-        from cdc_apache_cassandra_spark.streaming.pipeline import streaming_dedup
-
         name = f"late_{uuid.uuid4().hex[:8]}"
-        run_to_memory(streaming_dedup(stream, ttl="60 seconds"), name)
+        run_to_memory(
+            dedup_mutations_stream(with_event_time(stream), ttl="60 seconds"),
+            name,
+        )
         got = spark.table(name).collect()
         digests = sorted(r["digest"] for r in got)
         # the late event may or may not be dropped depending on file order;
@@ -131,7 +136,7 @@ def test_mutation_cache_bounded_eviction(spark):
     df = spark.createDataFrame(
         rows, "pk long, digest string, writetime long, segment long, position long"
     )
-    out = mutation_cache_dedup_batch(df, max_digests=3)
+    out = mutation_cache_dedup(df, max_digests=3)
     a = [r["digest"] for r in out.filter("pk = 1").orderBy("writetime").collect()]
     assert a == ["d0", "d1", "d2", "d3", "d0", "d1"]  # every arrival distinct-in-window
     b = out.filter("pk = 2").collect()
@@ -144,176 +149,52 @@ def test_mutation_cache_suppresses_within_window(spark):
     df = spark.createDataFrame(
         rows, "pk long, digest string, writetime long, segment long, position long"
     )
-    out = mutation_cache_dedup_batch(df, max_digests=3)
+    out = mutation_cache_dedup(df, max_digests=3)
     assert [r["digest"] for r in out.orderBy("writetime").collect()] == ["d0", "d1"]
 
 
-def test_mutation_cache_event_time_ttl(spark, sf_dir, event_dir):
-    """EventTimeTimeout variant: dedups the replay like the batch twin;
-    expiry horizon comes from the watermark, so a finite replay settles."""
-    from pyspark.sql import functions as F
-
-    from cdc_apache_cassandra_spark.streaming.state import (
-        mutation_cache_dedup_stream_event_time,
-    )
-
-    stream = _read_stream(spark, event_dir).select(
-        "pk", "digest", "writetime", "segment", "position"
-    ).withColumn("event_time", F.timestamp_micros(F.col("writetime")))
-    name = f"cache_et_{uuid.uuid4().hex[:8]}"
-    run_to_memory(
-        mutation_cache_dedup_stream_event_time(stream, ttl_ms=60_000), name
-    )
-    got = spark.table(name)
-    batch = spark.read.parquet(event_dir).select(
-        "pk", "digest", "writetime", "segment", "position"
-    )
-    want = mutation_cache_dedup_batch(batch)
-    assert got.count() == want.count()
-    assert got.groupBy("pk", "digest").count().filter("count > 1").count() == 0
-
-
-def test_mutation_cache_stream_matches_batch(spark, sf_dir, event_dir):
-    """The applyInPandasWithState operator dedups the replayed stream to the
-    same per-(pk,digest) cardinality as the batch twin."""
-    stream = _read_stream(spark, event_dir).select(
-        "pk", "digest", "writetime", "segment", "position"
-    )
-    name = f"cache_out_{uuid.uuid4().hex[:8]}"
-    # ttl_ms=None (NoTimeout): a finite replay must settle; see operator doc.
-    run_to_memory(mutation_cache_dedup_stream(stream, ttl_ms=None), name)
-    got = spark.table(name)
-    batch = spark.read.parquet(event_dir).select(
-        "pk", "digest", "writetime", "segment", "position"
-    )
-    want = mutation_cache_dedup_batch(batch)
-    # same digest multiset per key (order across micro-batches may differ)
-    assert got.count() == want.count()
-    assert (
-        got.groupBy("pk", "digest").count()
-        .exceptAll(want.groupBy("pk", "digest").count())
-        .count()
-        == 0
-    )
-
-
 def test_mutation_cache_transform_with_state(spark, sf_dir, event_dir):
-    """The Spark-4 transformWithStateInPandas operator (RocksDB state store,
-    native TTL) dedups the replay to the same per-(pk,digest) multiset as
-    the batch twin — all three cache operators agree.
+    """The transformWithState mutation cache (RocksDB state store, native
+    TTL) dedups the streamed replay to the same per-(pk,digest) multiset
+    as the pure reference ``_dedup_rows`` applied per key.
 
     The transformWithState Python worker speaks protobuf to the JVM;
     real clusters ship the wheel, and in this container the vendored
     wire-format shim (streaming/protoshim.py, activated by conftest
     BEFORE the JVM starts) stands in — so this test runs the ACTUAL
     engine path, RocksDB state store and all, either way."""
+    import pandas as pd
+
     from cdc_apache_cassandra_spark.streaming.protoshim import (
         ensure_protobuf,
     )
 
     assert ensure_protobuf() in ("native", "shim")
-    from cdc_apache_cassandra_spark.streaming.state import (
-        mutation_cache_dedup_stream_tws,
-    )
-
-    stream = _read_stream(spark, event_dir).select(
-        "pk", "digest", "writetime", "segment", "position"
-    )
+    cols = ["pk", "digest", "writetime", "segment", "position"]
+    stream = _read_stream(spark, event_dir).select(*cols)
     name = f"tws_out_{uuid.uuid4().hex[:8]}"
-    run_to_memory(mutation_cache_dedup_stream_tws(stream, ttl_ms=None), name)
-    got = spark.table(name)
-    batch = spark.read.parquet(event_dir).select(
-        "pk", "digest", "writetime", "segment", "position"
+    run_to_memory(mutation_cache_dedup(stream, ttl_ms=None), name)
+    got = spark.table(name).toPandas()
+    pdf = spark.read.parquet(event_dir).select(*cols).toPandas()
+    want = pd.concat(
+        _dedup_rows(g, [], 3)[0] for _, g in pdf.groupby("pk")
     )
-    want = mutation_cache_dedup_batch(batch)
-    assert got.count() == want.count()
-    assert (
-        got.groupBy("pk", "digest").count()
-        .exceptAll(want.groupBy("pk", "digest").count())
-        .count()
-        == 0
-    )
+    assert len(got) == len(want)
 
+    def counts(df):
+        return df.groupby(["pk", "digest"]).size().sort_index()
 
-def test_mutation_cache_processor_logic_with_fake_handle(spark, event_dir):
-    """Drive MutationCacheProcessor (the transformWithStateInPandas
-    StatefulProcessor) through a faked handle/ValueState so its actual
-    init/handleInputRows/close code EXECUTES here, even though the
-    engine-side transformWithState run stays protobuf-gated in this
-    container. Replays the per-key groups across two micro-batches and
-    checks the surviving multiset equals the batch twin's."""
-    import pandas as pd
-
-    from cdc_apache_cassandra_spark.streaming.state import (
-        MutationCacheProcessor,
-        mutation_cache_dedup_batch,
-    )
-
-    class FakeValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-    class FakeHandle:
-        def __init__(self):
-            self.states = {}
-            self.ttls = {}
-
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            self.ttls[name] = ttlDurationMs
-            return self.states.setdefault(name, FakeValueState())
-
-    events = spark.read.parquet(event_dir).select(
-        "pk", "digest", "writetime", "segment", "position"
-    )
-    pdf_all = events.toPandas()
-    got_parts = []
-    for pk, group in pdf_all.groupby("pk"):
-        proc = MutationCacheProcessor(ttl_ms=123456)
-        handle = FakeHandle()
-        proc.init(handle)
-        assert handle.ttls == {"seen": 123456}  # native-TTL plumb-through
-        g = group.sort_values(["segment", "position"], kind="mergesort")
-        # two micro-batches per key: state must carry across them
-        half = len(g) // 2
-        for chunk in (g.iloc[:half], g.iloc[half:]):
-            if len(chunk) == 0:
-                continue
-            got_parts.extend(
-                proc.handleInputRows((pk,), iter([chunk]), None)
-            )
-        proc.close()
-    got = pd.concat(got_parts, ignore_index=True)
-    want = mutation_cache_dedup_batch(events).toPandas()
-    key = ["pk", "digest", "writetime", "segment", "position"]
-    assert (
-        got[key].sort_values(key).reset_index(drop=True).equals(
-            want[key].sort_values(key).reset_index(drop=True)
-        )
-    )
+    assert counts(got).equals(counts(want))
 
 
 def test_mutation_cache_row_processor_matches_pandas(spark, event_dir):
-    """MutationCacheRowProcessor (the row-mode transformWithState hot
-    path) driven through a faked handle yields the SAME surviving
-    multiset as the batch twin — including across two micro-batches per
-    key (state carry) and with the bounded-eviction cache exercised
-    (max_digests=2 on keys with 3+ distinct digests)."""
+    """MutationCacheProcessor driven through a faked handle yields the
+    SAME surviving multiset as the pure reference ``_dedup_rows`` —
+    across two micro-batches per key (the digest list carries between
+    them) and with the bounded-eviction cache exercised (max_digests=2
+    on keys with 3+ distinct digests)."""
     import pandas as pd
     from pyspark.sql import Row
-
-    from cdc_apache_cassandra_spark.streaming.state import (
-        MutationCacheProcessor,
-        MutationCacheRowProcessor,
-    )
 
     class FakeValueState:
         def __init__(self):
@@ -343,18 +224,13 @@ def test_mutation_cache_row_processor_matches_pandas(spark, event_dir):
     for max_digests in (2, 1024):
         got_rows, want_parts = [], []
         for pk, group in pdf_all.groupby("pk"):
-            rproc = MutationCacheRowProcessor(
+            proc = MutationCacheProcessor(
                 sort_idx, digest_idx, max_digests=max_digests, ttl_ms=9876
             )
-            rhandle = FakeHandle()
-            rproc.init(rhandle)
-            assert rhandle.ttls == {"seen": 9876}
-            pproc = MutationCacheProcessor(
-                max_digests=max_digests, ttl_ms=9876
-            )
-            phandle = FakeHandle()
-            # pandas processor probes via .get() returning None when absent
-            pproc.init(phandle)
+            handle = FakeHandle()
+            proc.init(handle)
+            assert handle.ttls == {"seen": 9876}
+            seen = []
             g = group.sort_values(["segment", "position"], kind="mergesort")
             half = len(g) // 2
             for chunk in (g.iloc[:half], g.iloc[half:]):
@@ -364,46 +240,66 @@ def test_mutation_cache_row_processor_matches_pandas(spark, event_dir):
                     Row(**{c: chunk.iloc[i][c] for c in cols})
                     for i in range(len(chunk))
                 ]
-                got_rows.extend(rproc.handleInputRows((pk,), iter(rows), None))
-                want_parts.extend(
-                    pproc.handleInputRows((pk,), iter([chunk]), None)
-                )
-            rproc.close()
-            pproc.close()
+                got_rows.extend(proc.handleInputRows((pk,), iter(rows), None))
+                kept, seen = _dedup_rows(chunk, seen, max_digests)
+                want_parts.append(kept)
+            proc.close()
         got = pd.DataFrame([r.asDict() for r in got_rows], columns=cols)
         want = pd.concat(want_parts, ignore_index=True)[cols]
         assert (
             got.sort_values(cols).reset_index(drop=True).astype(str).equals(
                 want.sort_values(cols).reset_index(drop=True).astype(str)
             )
-        ), f"row/pandas divergence at max_digests={max_digests}"
+        ), f"processor/reference divergence at max_digests={max_digests}"
 
 
-def test_engine_selector_prefers_tws_and_engines_agree(spark, event_dir):
-    """mutation_cache_dedup(engine='auto') selects transformWithState
-    when its protobuf dependency is satisfiable (always true here: real
-    wheel or vendored shim), and both engines converge the same replay
-    to the same multiset."""
-    import uuid as _uuid
+def test_mutation_cache_state_carries_across_micro_batches(spark, tmp_path):
+    """Eviction across micro-batches through the real RocksDB ValueState:
+    one key's digests d0 | d1 | d0 arrive in three files, one per
+    micro-batch. A 1-digest cache has evicted d0 by the third batch and
+    re-emits it (3 rows); a 3-digest cache still holds d0 and suppresses
+    it (2 rows). The batch run over the same rows agrees."""
+    import os
 
-    from cdc_apache_cassandra_spark.streaming.state import (
-        mutation_cache_dedup,
-    )
+    import pandas as pd
 
-    stream = _read_stream(spark, event_dir).select(
-        "pk", "digest", "writetime", "segment", "position"
-    )
-    names = {}
-    for engine in ("auto", "pandas-state"):
-        name = f"sel_{engine.replace('-', '_')}_{_uuid.uuid4().hex[:8]}"
-        run_to_memory(
-            mutation_cache_dedup(stream, ttl_ms=None, engine=engine), name
-        )
-        names[engine] = name
-    a = spark.table(names["auto"])
-    b = spark.table(names["pandas-state"])
-    assert a.count() == b.count()
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    cols = ["pk", "digest", "writetime", "segment", "position"]
+    d = str(tmp_path / "src")
+    os.makedirs(d)
+    for i, digest in enumerate(["d0", "d1", "d0"]):
+        path = f"{d}/part-{i}.parquet"
+        pd.DataFrame([(1, digest, i, 0, i)], columns=cols).to_parquet(path)
+        # the file source orders new files by modification time
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
+    schema = spark.read.parquet(d).schema
+    # one key: one state partition is enough, and each micro-batch opens a
+    # RocksDB store per shuffle partition
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try:
+        for max_digests, kept in ((1, 3), (3, 2)):
+            stream = (
+                spark.readStream.schema(schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(d)
+            )
+            name = f"carry_{max_digests}_{uuid.uuid4().hex[:8]}"
+            run_to_memory(
+                mutation_cache_dedup(stream, max_digests=max_digests, ttl_ms=None),
+                name,
+            )
+            got = [
+                r["digest"]
+                for r in spark.table(name).orderBy("writetime").collect()
+            ]
+            assert len(got) == kept, (max_digests, got)
+            batch = mutation_cache_dedup(
+                spark.read.parquet(d), max_digests=max_digests
+            )
+            want = [r["digest"] for r in batch.orderBy("writetime").collect()]
+            assert got == want
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def test_ddl_restart_listener_one_logical_stream(spark, tmp_path):
@@ -462,31 +358,3 @@ def test_ddl_restart_listener_one_logical_stream(spark, tmp_path):
     assert len(rows) == 3 and merged.count() == 3  # no dup, no loss
     assert rows[1].v2 is None and rows[2].v2 is None
     assert rows[3].v2 == "X"
-
-
-def test_mutation_cache_event_time_custom_column_name(spark, sf_dir, event_dir):
-    """The event-time operator must honor ``event_time_col`` — the timeout
-    horizon reads the CALLER'S column, not a hardcoded name (regression:
-    the inner fn indexed pdf["event_time"] literally, so any other name
-    KeyError'd on the executor)."""
-    from cdc_apache_cassandra_spark.streaming.state import (
-        mutation_cache_dedup_stream_event_time,
-    )
-
-    stream = _read_stream(spark, event_dir).select(
-        "pk", "digest", "writetime", "segment", "position"
-    ).withColumn("mutation_ts", F.timestamp_micros(F.col("writetime")))
-    name = f"cache_etc_{uuid.uuid4().hex[:8]}"
-    run_to_memory(
-        mutation_cache_dedup_stream_event_time(
-            stream, ttl_ms=60_000, event_time_col="mutation_ts"
-        ),
-        name,
-    )
-    got = spark.table(name)
-    batch = spark.read.parquet(event_dir).select(
-        "pk", "digest", "writetime", "segment", "position"
-    )
-    want = mutation_cache_dedup_batch(batch)
-    assert got.count() == want.count()
-    assert got.groupBy("pk", "digest").count().filter("count > 1").count() == 0
