@@ -347,7 +347,6 @@ _STALE_READ_MARKERS = (
     "FILE_NOT_EXIST",
     "PATH_NOT_FOUND",
     "FileNotFoundException",
-    "does not exist",
 )
 
 
@@ -448,7 +447,7 @@ def active_view(state: DataFrame) -> DataFrame:
     return state.filter("op <> 'DELETE'")
 
 
-def _write_bucket_split(merged: DataFrame, out_dir: str) -> None:
+def _write_bucket_split(merged: DataFrame, out_dir: str) -> dict:
     """Stage a merge/compact output with each bucket's rows SPLIT into an
     active file and a tombstone file, then flatten the split back into
     the flat ``__bucket=<b>/`` layout every reader already knows:
@@ -471,7 +470,13 @@ def _write_bucket_split(merged: DataFrame, out_dir: str) -> None:
     is why the split does NOT stay as a directory level).
 
     Stores without an ``op`` column (custom reducers) write everything
-    as one active file — their exporters pass a custom view anyway."""
+    as one active file — their exporters pass a custom view anyway.
+
+    Returns what was staged, from the renames themselves (no listing job,
+    no read-back): ``{"<b>": ([active files], [tombs files])}`` for every
+    bucket that received rows. A bucket the reducer emptied gets no
+    directory and so no entry; an all-rows-filtered write returns ``{}``.
+    :func:`_commit_stats` turns this into the manifest's bucket stats."""
     active = (
         F.coalesce(F.col("op") != F.lit("DELETE"), F.lit(False))
         if "op" in merged.columns
@@ -484,29 +489,102 @@ def _write_bucket_split(merged: DataFrame, out_dir: str) -> None:
         .parquet(out_dir)
     )
     dl = _dl()
+    staged = {}
     for bname in dl._io_listdir(out_dir):
         if not bname.startswith("__bucket="):
             continue
         bdir = os.path.join(out_dir, bname)
-        for sub, prefix in (
-            ("__active=true", "active-"),
-            ("__active=false", "tombs-"),
+        sides = staged[bname[len("__bucket="):]] = ([], [])
+        for sub, prefix, files in (
+            ("__active=true", "active-", sides[0]),
+            ("__active=false", "tombs-", sides[1]),
         ):
             sdir = os.path.join(bdir, sub)
             names = dl._io_listdir(sdir)
             for n in names:
                 if n.endswith(".parquet"):
-                    dl._io_move(
-                        os.path.join(sdir, n), os.path.join(bdir, prefix + n)
-                    )
+                    files.append(os.path.join(bdir, prefix + n))
+                    dl._io_move(os.path.join(sdir, n), files[-1])
             if names:
                 dl._io_rmtree(sdir)
+    return staged
 
 
-#: Observe-based per-commit stats cap: above this many touched buckets
-#: the conditional-aggregate expression list (3 per bucket) stops being
-#: metadata-sized per row and the read-back job is the better trade.
-_OBS_STATS_MAX_BUCKETS = 64
+def _commit_stats(staged: dict) -> dict:
+    """Per-bucket manifest stats of a staged write (see
+    :func:`_write_bucket_split`) from the files' parquet footers alone —
+    the numbers the writer already recorded, so no Spark job re-reads
+    what was just written (Delta's ``add`` stats come from the same
+    place). ``rows`` counts both sides; ``tombstones`` and ``min_del_wt``
+    (the oldest DELETE writetime, what lets :func:`compact` GC
+    incrementally) come from the tombs files, see :func:`_tombs_stats`.
+    Stores without ``op`` write no tombs file: 0 tombstones, no
+    ``min_del_wt``. Buckets without rows stay out of the result."""
+    dl = _dl()
+    stats = {}
+    for b, (active, tombs) in staged.items():
+        rows = sum(dl._io_parquet_file(f).metadata.num_rows for f in active)
+        dels, min_wt = 0, None
+        for f in tombs:
+            n, d, wt = _tombs_stats(dl._io_parquet_file(f))
+            rows, dels = rows + n, dels + d
+            if wt is not None and (min_wt is None or wt < min_wt):
+                min_wt = wt
+        if rows:
+            stats[b] = {"rows": rows, "tombstones": dels, "min_del_wt": min_wt}
+    return stats
+
+
+def _tombs_stats(pf) -> tuple[int, int, object]:
+    """(rows, DELETE rows, min DELETE writetime or None) of one tombs
+    file. The split sends ``op = 'DELETE'`` AND null ``op`` here, so the
+    footer answers exactly when ``op`` has no nulls: every row is a
+    DELETE and the ``writetime`` chunk minimum is theirs. Only a file
+    with null-``op`` rows (or without chunk statistics) reads its
+    ``op``/``writetime`` columns, through the same IO seam. Columns are
+    matched top-level (:func:`delta_log.footer_leaf_index`): a nested
+    ``payload.writetime`` is never taken for ``writetime``."""
+    dl = _dl()
+    md = pf.metadata
+    iop = dl.footer_leaf_index(md, "op")
+    iwt = dl.footer_leaf_index(md, "writetime")
+    chunks = [md.row_group(r) for r in range(md.num_row_groups)]
+    op_st = [c.column(iop).statistics for c in chunks]
+    wt_st = [c.column(iwt).statistics for c in chunks] if iwt is not None else []
+    if all(
+        s is not None and s.has_null_count and s.null_count == 0 for s in op_st
+    ) and all(s is not None and s.has_min_max for s in wt_st):
+        return md.num_rows, md.num_rows, min((s.min for s in wt_st), default=None)
+    import pyarrow.compute as pc
+
+    t = pf.read(columns=["op"] + (["writetime"] if iwt is not None else []))
+    dels = pc.fill_null(pc.equal(t["op"], "DELETE"), False)
+    wt = pc.min(pc.filter(t["writetime"], dels)).as_py() if iwt is not None else None
+    return md.num_rows, pc.sum(dels).as_py() or 0, wt
+
+
+def _adopt_buckets(
+    manifest: dict, version: int, dirname: str, rewritten, stats: dict
+) -> None:
+    """Point every ``rewritten`` bucket that still holds rows at the new
+    ``version`` (staged under ``dirname``) with its fresh stats; a bucket
+    the rewrite emptied has no staged files, so it leaves the map (a
+    pointer at a nonexistent path would fail every later read). Then
+    prune ``dirs`` to the versions live buckets still reference."""
+    manifest["version"] = version
+    manifest.setdefault("dirs", {})[str(version)] = dirname
+    for b in rewritten:
+        k = str(b)
+        if k in stats:
+            manifest["buckets"][k] = version
+            manifest.setdefault("stats", {})[k] = stats[k]
+        else:
+            manifest["buckets"].pop(k, None)
+            manifest.get("stats", {}).pop(k, None)
+    live_versions = {manifest["buckets"][k] for k in manifest["buckets"]}
+    manifest["dirs"] = {
+        v: d for v, d in manifest["dirs"].items() if int(v) in live_versions
+    }
 
 
 def merge_into(
@@ -648,31 +726,6 @@ def merge_into(
         # sliver into every bucket — the small-files anti-pattern).
         merged = merged.repartition(len(touched), F.col("__bucket"))
 
-    # Per-bucket stats observed DURING the staging write (guide §1.4/§2.3:
-    # the read-back job this replaces re-read every just-written byte as a
-    # second Spark job per commit). Bounded: 3 aggregate expressions per
-    # touched bucket, only up to _OBS_STATS_MAX_BUCKETS — a wide commit
-    # (compact-sized) falls back to the column-pruned read-back.
-    obs = None
-    has_ops = "op" in unioned.columns
-    has_wt = has_ops and "writetime" in unioned.columns
-    if len(touched) <= _OBS_STATS_MAX_BUCKETS:
-        from pyspark.sql import Observation
-
-        exprs = []
-        for b in touched:
-            inb = F.col("__bucket") == F.lit(b)
-            exprs.append(F.count(F.when(inb, True)).alias(f"r{b}"))
-            if has_ops:
-                delb = inb & (F.col("op") == "DELETE")
-                exprs.append(F.count(F.when(delb, True)).alias(f"t{b}"))
-                if has_wt:
-                    exprs.append(
-                        F.min(F.when(delb, F.col("writetime"))).alias(f"m{b}")
-                    )
-        obs = Observation()
-        merged = merged.observe(obs, *exprs)
-
     version = manifest["version"] + 1
     old_dirs = _live_dirs(manifest)
     # WRITER-UNIQUE directory: two in-flight committers stage disjoint
@@ -681,7 +734,7 @@ def merge_into(
     dirname = f"__ver={version}-{uuid.uuid4().hex[:8]}"
     out_dir = os.path.join(path, dirname)
     try:
-        _write_bucket_split(merged, out_dir)
+        staged = _write_bucket_split(merged, out_dir)
     except Exception:
         # A competing commit may have PRUNED the old bucket files this
         # merge was reading mid-job — surface that as the conflict it
@@ -689,8 +742,6 @@ def merge_into(
         _conflict_if_moved(store, path, manifest, out_dir=out_dir)
         raise
 
-    manifest["version"] = version
-    manifest.setdefault("dirs", {})[str(version)] = dirname
     # Record the TABLE-WIDE schema (Spark StructType JSON): the merged
     # schema of the touched buckets reconciled with what was recorded
     # before — it only ever widens (additive evolution), so scan planning
@@ -712,36 +763,10 @@ def merge_into(
                 ]
             ),
         )
-    if obs is not None:
-        # observed during the write — no read-back job; a bucket whose
-        # rows the reducer emptied observes 0 and leaves the map below
-        vals = obs.get
-        stats = {}
-        for b in touched:
-            r = int(vals[f"r{b}"] or 0)
-            if r:
-                stats[str(b)] = {
-                    "rows": r,
-                    "tombstones": int(vals[f"t{b}"] or 0) if has_ops else 0,
-                    "min_del_wt": vals[f"m{b}"] if has_wt else None,
-                }
-    else:
-        stats = _bucket_stats(spark, path, out_dir)
-    for b in touched:
-        k = str(b)
-        if k in stats:
-            manifest["buckets"][k] = version
-            manifest.setdefault("stats", {})[k] = stats[k]
-        else:
-            # the reducer emptied this bucket — partitionBy wrote no
-            # directory for it, so the bucket must leave the map (a
-            # pointer at a nonexistent path would fail every later read)
-            manifest["buckets"].pop(k, None)
-            manifest.get("stats", {}).pop(k, None)
-    live_versions = {manifest["buckets"][k] for k in manifest["buckets"]}
-    manifest["dirs"] = {
-        v: d for v, d in manifest["dirs"].items() if int(v) in live_versions
-    }
+    # Per-bucket stats from the staged files' footers: no Spark job, the
+    # same path for narrow and wide commits. A bucket the reducer emptied
+    # staged no files and leaves the map.
+    _adopt_buckets(manifest, version, dirname, touched, _commit_stats(staged))
     try:
         store.commit(path, manifest, tag)
     except CommitConflict:
@@ -798,65 +823,6 @@ def merge_into_retrying(
             if attempt == max_attempts or not _is_stale_read_error(e):
                 raise
     raise AssertionError("unreachable")
-
-
-def _bucket_stats(spark: SparkSession, base: str, ver_dir: str) -> dict:
-    """Per-bucket stats for the buckets just written under ``ver_dir`` —
-    read BACK from the committed files (columnar, bucket-local; avoids
-    re-running the merge pipeline) and reduced to ≤ touched-bucket rows
-    before the driver sees anything. ``min_del_wt`` (oldest tombstone
-    writetime, null when the bucket holds none) is what lets
-    :func:`compact` GC incrementally instead of rewriting the table.
-
-    Cost note (considered, kept): the read-back touches only 2 columns
-    (op, writetime) + the partition column of the touched buckets —
-    a column-pruned fraction of the bytes just written. Computing the
-    same aggregate from the ``merged`` DataFrame instead would re-run
-    the whole merge pipeline (union + LWW window) a second time, which
-    measures strictly worse; the caller-side persist the gate queries
-    use is the general mitigation."""
-    try:
-        df = spark.read.option("basePath", base).option("mergeSchema", "true").parquet(ver_dir)
-    except Exception as e:
-        # ONLY the all-rows-filtered write (just _SUCCESS in the dir, no
-        # parquet to infer from) maps to 'no buckets'. Anything else —
-        # transient IO, listing failures — must PROPAGATE: compact()
-        # derives the committed bucket map from these stats, and
-        # swallowing a real error there would commit an empty manifest
-        # and prune every live version directory (data loss).
-        if "infer schema" in str(e).lower():
-            return {}
-        raise
-    # custom-reducer tables (e.g. a persisted ANN index) carry no
-    # op/writetime columns — no tombstone concept, so the GC stats are
-    # identically empty rather than an unresolved-column failure
-    has_ops = "op" in df.columns
-    has_wt = has_ops and "writetime" in df.columns
-    rows = (
-        df.groupBy("__bucket")
-        .agg(
-            F.count("*").alias("rows"),
-            (
-                F.sum(F.when(F.col("op") == "DELETE", 1).otherwise(0))
-                if has_ops
-                else F.lit(0)
-            ).alias("tombstones"),
-            (
-                F.min(F.when(F.col("op") == "DELETE", F.col("writetime")))
-                if has_wt
-                else F.lit(None).cast("long")
-            ).alias("min_del_wt"),
-        )
-        .collect()
-    )
-    return {
-        str(r["__bucket"]): {
-            "rows": r["rows"],
-            "tombstones": r["tombstones"],
-            "min_del_wt": r["min_del_wt"],
-        }
-        for r in rows
-    }
 
 
 def _prune_superseded(path: str, old_dirs: set[str], new_dirs: set[str]) -> None:
@@ -1030,14 +996,14 @@ def compact(
     dirname = f"__ver={version}-{uuid.uuid4().hex[:8]}"
     out_dir = os.path.join(path, dirname)
     try:
-        _write_bucket_split(state, out_dir)
+        staged = _write_bucket_split(state, out_dir)
     except Exception:
         # same prune-under-reader race as merge_into: a concurrent merge
         # commit may delete the version dirs this compaction was reading
         _conflict_if_moved(store, path, manifest, out_dir=out_dir)
         raise
 
-    stats = _bucket_stats(spark, path, out_dir)
+    stats = _commit_stats(staged)
     if targets is None:
         buckets = {b: version for b in stats}
         new_manifest = {
@@ -1069,25 +1035,9 @@ def compact(
             ),
         )
     else:
+        # a target whose every row was an expired tombstone is gone
         new_manifest = manifest
-        new_manifest["version"] = version
-        new_manifest.setdefault("dirs", {})[str(version)] = dirname
-        for b in targets:
-            k = str(b)
-            if k in stats:  # bucket still has rows
-                new_manifest["buckets"][k] = version
-                new_manifest.setdefault("stats", {})[k] = stats[k]
-            else:  # every row was an expired tombstone — bucket is gone
-                new_manifest["buckets"].pop(k, None)
-                new_manifest.get("stats", {}).pop(k, None)
-        live_versions = {
-            new_manifest["buckets"][k] for k in new_manifest["buckets"]
-        }
-        new_manifest["dirs"] = {
-            v: d
-            for v, d in new_manifest["dirs"].items()
-            if int(v) in live_versions
-        }
+        _adopt_buckets(new_manifest, version, dirname, targets, stats)
     try:
         store.commit(path, new_manifest, tag)
     except CommitConflict:
@@ -1125,11 +1075,11 @@ def point_read(
         return None
     n_buckets = manifest["n_buckets"]
     bucket_cols = bucket_cols or pk_cols
-    # table schema from one live bucket's footer (not a full-store listing)
+    # table schema: the recorded one, or (legacy store) one live
+    # bucket's footer — never a full-store listing
     one = _bucket_paths(path, manifest)[:1]
     schema = (
-        spark.read.option("basePath", path).option("mergeSchema", "true")
-        .parquet(*one)
+        _read_bucket_files(spark, path, manifest, one)
         .drop("__ver", "__bucket")
         .schema
     )
@@ -1191,11 +1141,7 @@ def point_read(
     paths = _bucket_paths(path, manifest, routed)
     if not paths:
         return spark.createDataFrame([], schema=schema)
-    df = (
-        spark.read.option("basePath", path).option("mergeSchema", "true")
-        .parquet(*paths)
-        .drop("__ver", "__bucket")
-    )
+    df = _read_bucket_files(spark, path, manifest, paths).drop("__ver", "__bucket")
     return df.join(F.broadcast(kdf), on=pk_cols, how="left_semi")
 
 

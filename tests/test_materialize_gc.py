@@ -154,3 +154,155 @@ def test_point_read_lists_only_routed_bucket(spark, store):
         for r in one.select(F.input_file_name()).distinct().collect()
     }
     assert len(dirs) == 1  # exactly one __bucket directory listed
+
+
+def _reference_stats(spark, path):
+    """Per-bucket stats recomputed from the committed files with a Spark
+    ``groupBy("__bucket")`` — the meaning every commit's manifest stats
+    must carry, whichever way the commit derived them."""
+    from pyspark.sql import functions as F
+
+    from cdc_apache_cassandra_spark.streaming.materialize import _bucket_paths
+
+    m = _manifest(path)
+    if not m["buckets"]:
+        return {}
+    df = (
+        spark.read.option("basePath", path).option("mergeSchema", "true")
+        .parquet(*_bucket_paths(path, m))
+    )
+    is_del = F.col("op") == "DELETE" if "op" in df.columns else F.lit(False)
+    min_wt = (
+        F.min(F.when(is_del, F.col("writetime")))
+        if "writetime" in df.columns and "op" in df.columns
+        else F.lit(None).cast("long")
+    )
+    rows = (
+        df.groupBy("__bucket")
+        .agg(
+            F.count("*").alias("rows"),
+            F.count(F.when(is_del, True)).alias("tombstones"),
+            min_wt.alias("min_del_wt"),
+        )
+        .collect()
+    )
+    return {
+        str(r["__bucket"]): {
+            "rows": r["rows"],
+            "tombstones": r["tombstones"],
+            "min_del_wt": r["min_del_wt"],
+        }
+        for r in rows
+    }
+
+
+def _assert_stats_match_files(spark, path):
+    m = _manifest(path)
+    assert set(m.get("stats", {})) == set(m["buckets"])
+    assert m.get("stats", {}) == _reference_stats(spark, path)
+    return m
+
+
+def test_manifest_stats_match_committed_files(spark, tmp_path):
+    """Manifest stats == a groupBy over the committed files, on both
+    sides of a narrow (few buckets) and a wide (>64 buckets) commit,
+    with DELETE and null-op rows sharing one bucket, through incremental
+    and full compaction."""
+    from pyspark.sql import functions as F
+
+    n = 72
+    # keys grouped by the bucket merge_into will route them to
+    by_bucket = {}
+    for r in (
+        spark.range(260)
+        .select(
+            F.col("id").alias("pk"),
+            F.pmod(F.xxhash64("id"), F.lit(n)).cast("int").alias("b"),
+        )
+        .collect()
+    ):
+        by_bucket.setdefault(r.b, []).append(r.pk)
+    k, shared = next((str(b), ks) for b, ks in by_bucket.items() if len(ks) >= 3)
+    path = str(tmp_path / "t")
+    os.makedirs(path)
+    # wide: 260 keys touch >64 of the 72 buckets
+    wide = [
+        ("DELETE" if i % 7 == 0 else None if i % 11 == 0 else "INSERT",
+         i, 10 + i, f"v{i}", "x", 0, i)
+        for i in range(260)
+    ]
+    merge_into(spark, path, spark.createDataFrame(wide, SCHEMA), ["pk"], n_buckets=n)
+    m = _assert_stats_match_files(spark, path)
+    assert len(m["buckets"]) > 64
+    # narrow: one bucket gets a DELETE, a null op and an insert
+    a, b, c = shared[:3]
+    narrow = [
+        ("DELETE", a, 1000, None, None, 1, 0),
+        (None, b, 1001, "n", None, 1, 1),
+        ("INSERT", c, 1002, "i", None, 1, 2),
+    ]
+    merge_into(spark, path, spark.createDataFrame(narrow, SCHEMA), ["pk"])
+    m = _assert_stats_match_files(spark, path)
+    assert m["stats"][k]["tombstones"] >= 1 and m["stats"][k]["min_del_wt"] is not None
+    compact(spark, path, ["pk"], tombstone_horizon=100, only_expired=True)
+    _assert_stats_match_files(spark, path)
+    compact(spark, path, ["pk"], tombstone_horizon=200)
+    _assert_stats_match_files(spark, path)
+
+
+def test_manifest_stats_without_op_or_writetime(spark, tmp_path):
+    """Custom-reducer stores: no ``op`` column (no tombstones, and a
+    bucket the reducer empties leaves the map), and ``op`` without
+    ``writetime`` (tombstones counted, no oldest writetime)."""
+    from pyspark.sql import functions as F
+
+    no_op = str(tmp_path / "no_op")
+    os.makedirs(no_op)
+
+    def keep_positive_min(df):
+        return df.groupBy("k").agg(F.min("v").alias("v")).filter("v >= 0")
+
+    def merge(path, rows, schema, reducer):
+        merge_into(
+            spark, path, spark.createDataFrame(rows, schema), ["k"],
+            n_buckets=8, reducer=reducer, kind="custom",
+        )
+
+    merge(no_op, [(i, i) for i in range(6)], "k long, v long", keep_positive_min)
+    before = _assert_stats_match_files(spark, no_op)
+    assert all(s["tombstones"] == 0 and s["min_del_wt"] is None
+               for s in before["stats"].values())
+    # key 0 (alone in its bucket of 8) goes negative: the reducer empties
+    # that bucket, which leaves the map
+    merge(no_op, [(0, -1)], "k long, v long", keep_positive_min)
+    after = _assert_stats_match_files(spark, no_op)
+    assert sum(s["rows"] for s in after["stats"].values()) == 5
+    assert len(after["buckets"]) == len(before["buckets"]) - 1
+
+    no_wt = str(tmp_path / "no_wt")
+    os.makedirs(no_wt)
+
+    def max_op(df):
+        return df.groupBy("k").agg(F.max("op").alias("op"))
+
+    merge(
+        no_wt,
+        [(0, "DELETE"), (1, None), (2, "INSERT"), (3, "DELETE"), (4, None)],
+        "k long, op string",
+        max_op,
+    )
+    m = _assert_stats_match_files(spark, no_wt)
+    assert sum(s["tombstones"] for s in m["stats"].values()) == 2
+    assert all(s["min_del_wt"] is None for s in m["stats"].values())
+
+
+def test_full_compact_of_only_expired_tombstones_empties_store(spark, tmp_path):
+    path = str(tmp_path / "t")
+    os.makedirs(path)
+    rows = [("DELETE", i, 5, None, None, 0, i) for i in range(4)]
+    merge_into(spark, path, spark.createDataFrame(rows, SCHEMA), ["pk"], n_buckets=4)
+    _assert_stats_match_files(spark, path)
+    compact(spark, path, ["pk"], tombstone_horizon=50)
+    m = _assert_stats_match_files(spark, path)
+    assert m["buckets"] == {}
+    assert read_state(spark, path) is None

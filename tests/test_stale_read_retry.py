@@ -26,6 +26,8 @@ def test_stale_read_error_classifier():
         assert M._is_stale_read_error(e), e
     assert not M._is_stale_read_error(RuntimeError("java.io.IOException: disk full"))
     assert not M._is_stale_read_error(ValueError("store at /t is bucketed on ..."))
+    # a custom reducer's own error that merely says "does not exist"
+    assert not M._is_stale_read_error(ValueError("partition key does not exist"))
 
 
 def _run_retrying(monkeypatch, spark, failures, max_attempts=5):
@@ -63,10 +65,25 @@ def test_mixed_conflict_and_stale_read_converges(monkeypatch, spark):
     assert (attempts, n) == (3, 3)
 
 
-def test_non_stale_error_propagates_immediately(monkeypatch, spark):
-    boom = RuntimeError("java.io.IOException: disk full")
-    with pytest.raises(RuntimeError, match="disk full"):
-        _run_retrying(monkeypatch, spark, [boom])
+@pytest.mark.parametrize(
+    "boom",
+    [
+        RuntimeError("java.io.IOException: disk full"),
+        ValueError("partition key does not exist"),
+    ],
+    ids=["disk_full", "reducer_error"],
+)
+def test_non_stale_error_propagates_immediately(monkeypatch, spark, boom):
+    calls = {"n": 0}
+
+    def fake_merge_into(*a, **k):
+        calls["n"] += 1
+        raise boom
+
+    monkeypatch.setattr(M, "merge_into", fake_merge_into)
+    with pytest.raises(type(boom), match=str(boom)):
+        M.merge_into_retrying(spark, "/nonexistent", None, ["pk"], max_attempts=5)
+    assert calls["n"] == 1  # one attempt, no retry
 
 
 def test_stale_read_on_last_attempt_propagates_original(monkeypatch, spark):
