@@ -12,8 +12,6 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
-
 
 @dataclass(frozen=True)
 class CdcPipelineConfig:
@@ -29,9 +27,10 @@ class CdcPipelineConfig:
     # connector: cache.max.capacity (32767) -> no-op: Spark state is
     # watermark-bounded, not entry-bounded (documented deviation)
     cache_max_capacity: int = 32_767
-    # connector: query.executors (10, adaptive) -> shuffle parallelism
-    # inside a batch (AQE) + the per-trigger admission policy's max
-    # level (streaming/adaptive.py:AdaptiveParallelism)
+    # connector: query.executors (10, adaptive) -> the per-trigger
+    # admission policy's max level (streaming/adaptive.py:
+    # AdaptiveParallelism); shuffle and state partitions follow the
+    # session's cores, not this count
     query_executors: int = 10
     # connector: query.minMobileAvgLatency (10 ms) / query.
     # maxMobileAvgLatency (100 ms) -> the adaptive policy's grow/shrink
@@ -73,14 +72,6 @@ class CdcPipelineConfig:
     def ttl(self) -> str:
         """Watermark-delay string for dropDuplicatesWithinWatermark."""
         return f"{self.cache_expire_after_ms // 1000} seconds"
-
-    def apply(self, spark: SparkSession) -> SparkSession:
-        """Apply the Spark-mappable knobs to a session."""
-        spark.conf.set("spark.sql.shuffle.partitions", str(max(
-            self.query_executors, int(spark.conf.get(
-                "spark.sql.shuffle.partitions", "8"))
-        )))
-        return spark
 
 
 def from_reference_keys(d: dict[str, str]) -> CdcPipelineConfig:

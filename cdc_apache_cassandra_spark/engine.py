@@ -62,7 +62,6 @@ class CdcEngine:
         self._manifest_store = None
         self._prev_log_store = None
         self.config = (config or CdcPipelineConfig()).validate()
-        self.config.apply(spark)
 
     @classmethod
     def from_config_keys(

@@ -9,8 +9,8 @@ backoffInMs 100, maxBackoffInSec 3600).
 Spark mapping: task parallelism inside a micro-batch is Spark's job
 (AQE), but per-TRIGGER admission is ours — the analogue of the
 reference's pool size is how much source data one cycle admits
-(``maxFilesPerTrigger`` / ``maxOffsetsPerTrigger``) and how many shuffle
-partitions the batch plans for. :class:`AdaptiveParallelism` is the
+(``maxFilesPerTrigger`` / ``maxOffsetsPerTrigger``); shuffle partitions
+follow the session's cores. :class:`AdaptiveParallelism` is the
 policy, kept semantically exact to the reference (same circular window,
 same integer division, same ±1 grow/shrink bounds, same 10%% error
 shrink, same ``backoff_ms << attempt`` jittered wait) so its behavior is
@@ -149,9 +149,6 @@ class AdaptiveParallelism:
     def recommend_max_files(self, files_per_level: int = 1) -> int:
         """Admission bound for the next availableNow cycle."""
         return max(1, self.level * files_per_level)
-
-    def recommend_shuffle_partitions(self, per_level: int = 4) -> int:
-        return max(1, self.level * per_level)
 
 
 class AdaptiveLatencyListener(StreamingQueryListener):

@@ -67,6 +67,7 @@ from pyspark.sql import types as T
 from cdc_apache_cassandra_spark.streaming.materialize import (
     CommitConflict,
     _bucket_paths,
+    _by_bucket,
     _read_bucket_files,
     _read_manifest,
     _stored_schema,
@@ -2137,7 +2138,7 @@ def _stage_buckets(
             to_stage = _to_physical(to_stage, mapped_fields)
         if rewrite:
             (
-                to_stage.repartition(len(rewrite), F.col("__bucket"))
+                _by_bucket(to_stage, len(rewrite))
                 .write.mode("overwrite")
                 .partitionBy("__bucket")
                 .parquet(staging)

@@ -98,6 +98,20 @@ def _bucket_expr(pk_cols: list[str], n_buckets: int):
     return F.pmod(F.xxhash64(*pk_cols), F.lit(n_buckets)).cast("int")
 
 
+def _by_bucket(df: DataFrame, n: int) -> DataFrame:
+    """Hash-partition ``df`` on ``__bucket`` for a bucket-layout write of
+    ``n`` buckets: one task per bucket, at most one task per core. Hash
+    partitioning keeps each bucket in exactly one task, and the
+    ``partitionBy`` writer writes one file per partition value per task,
+    so every bucket dir still gets one file per side (what linking,
+    :func:`_commit_stats` and the export's ``_staged_file`` rely on).
+    The task count follows the cores, not the bucket count: per-task
+    cost, not per-file cost, dominates these writes (on 4 cores, 128
+    tasks of ~31 rows took 5.0 s; 4 tasks took 2.5 s)."""
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(max(1, min(n, cores)), F.col("__bucket"))
+
+
 def _check_store_for_path(path: str, store: "ManifestStore | None") -> None:
     """URI table roots have no local manifest file EVER (the HTTP
     mirror skips them by design), so the local-filesystem CAS can
@@ -715,16 +729,17 @@ def merge_into(
         lww_keys = ["__bucket", *pk_cols] if bucketed else pk_cols
         reducer = lambda df: last_write_wins(df, pk_cols=lww_keys)  # noqa: E731
     if bucketed:
-        merged = reducer(unioned.repartition(len(touched), F.col("__bucket")))
+        merged = reducer(_by_bucket(unioned, len(touched)))
     else:
         merged = reducer(unioned)
         merged = merged.withColumn(
             "__bucket", _bucket_expr(bucket_cols, n_buckets)
         )
-        # Repartition by bucket: one task per touched bucket ⇒ one file
-        # per bucket dir (without it, every shuffle partition writes a
-        # sliver into every bucket — the small-files anti-pattern).
-        merged = merged.repartition(len(touched), F.col("__bucket"))
+        # Repartition by bucket: one task per bucket, at most one task
+        # per core ⇒ one file per bucket dir (without it, every shuffle
+        # partition writes a sliver into every bucket — the small-files
+        # anti-pattern).
+        merged = _by_bucket(merged, len(touched))
 
     version = manifest["version"] + 1
     old_dirs = _live_dirs(manifest)
@@ -980,17 +995,20 @@ def compact(
 
     state = last_write_wins(state, pk_cols=pk_cols)
     if tombstone_horizon is not None:
+        # only DELETE rows expire: a null op compares null, and must
+        # keep its row as the incremental mode does
         state = state.filter(
-            (F.col("op") != "DELETE") | (F.col("writetime") >= tombstone_horizon)
+            F.coalesce(F.col("op") != "DELETE", F.lit(True))
+            | (F.col("writetime") >= tombstone_horizon)
         )
     if targets is None:
         state = state.withColumn(
             "__bucket", _bucket_expr(bucket_cols or pk_cols, n_buckets)
         )
-        state = state.repartition(n_buckets, F.col("__bucket"))
+        state = _by_bucket(state, n_buckets)
     else:
         # already carries __bucket from the partitioned read
-        state = state.repartition(len(targets), F.col("__bucket"))
+        state = _by_bucket(state, len(targets))
     version = manifest["version"] + 1
     old_dirs = _live_dirs(manifest)
     dirname = f"__ver={version}-{uuid.uuid4().hex[:8]}"

@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from cdc_apache_cassandra_spark.config import CdcPipelineConfig
 from cdc_apache_cassandra_spark.engine import CdcEngine
 from cdc_apache_cassandra_spark.operators.dedup import dedup_mutations
 from cdc_apache_cassandra_spark.operators.lww import last_write_wins
@@ -49,6 +50,21 @@ def test_records_json_mode_from_reference_keys(spark):
     recs = eng.to_records(ev, snap, ["pk"], list(VALUE_COLS))
     assert dict(recs.dtypes) == {"key": "string", "value": "string"}
     assert recs.filter(F.col("value").isNull()).count() > 0  # tombstones
+
+
+def test_engine_leaves_shuffle_partitions_alone(spark):
+    """``query.executors`` sizes the admission policy only: building an
+    engine must not raise the session's shuffle (and so state) partition
+    count to it — 10 state stores on a 4-core session cost every later
+    stateful stream per-task overhead."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "3")  # below the default query_executors (10)
+    try:
+        CdcEngine(spark, CdcPipelineConfig())
+        assert spark.conf.get(key) == "3"
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_unknown_config_key_rejected(spark):

@@ -455,3 +455,102 @@ def test_point_read_boolean_key_falls_back_to_jvm(spark, tmp_path):
     assert [r.v for r in got.collect()] == ["yes"]
     got_f = point_read(spark, path, ["flag"], [False])
     assert [r.v for r in got_f.collect()] == ["no"]
+
+
+def test_core_sized_writes_keep_one_file_per_bucket(spark, tmp_path, monkeypatch):
+    """Bucket-layout writes run at most one task per core, however many
+    buckets they touch. Hash partitioning on ``__bucket`` keeps each
+    bucket in one task, so after a merge touching more buckets than
+    cores, a full compact and a staged export, every bucket dir still
+    holds one active file and at most one tombs file, and every staged
+    export bucket one file — the layout linking and commit stats rely on."""
+    import uuid
+
+    from cdc_apache_cassandra_spark.streaming import delta_log
+    from cdc_apache_cassandra_spark.streaming import materialize as mat
+
+    sc = spark.sparkContext
+    cores = sc.defaultParallelism
+    n_buckets = 32
+    tasks = []  # write-stage task count of every staged write
+
+    def in_job_group(fn):
+        # the last job of the group is the write; its last stage writes
+        def run(*args, **kwargs):
+            group = f"layout-{uuid.uuid4().hex[:8]}"
+            sc.setJobGroup(group, fn.__name__)
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+                tracker = sc.statusTracker()
+                job = max(tracker.getJobIdsForGroup(group))
+                stage = max(tracker.getJobInfo(job).stageIds)
+                tasks.append(tracker.getStageInfo(stage).numTasks)
+
+        return run
+
+    staged = {}  # export bucket -> the parquet files its staging dir holds
+    orig_staged_file = delta_log._staged_file
+
+    def staged_file(staging, bucket):
+        bdir = os.path.join(staging, f"__bucket={bucket}")
+        staged[bucket] = [n for n in os.listdir(bdir) if n.endswith(".parquet")]
+        return orig_staged_file(staging, bucket)
+
+    monkeypatch.setattr(mat, "_write_bucket_split", in_job_group(mat._write_bucket_split))
+    monkeypatch.setattr(delta_log, "_stage_buckets", in_job_group(delta_log._stage_buckets))
+    monkeypatch.setattr(delta_log, "_staged_file", staged_file)
+
+    keys = spark.range(640).withColumnRenamed("id", "pk")
+    bucket_of = dict(
+        keys.select("pk", mat._bucket_expr(["pk"], n_buckets)).collect()
+    )
+    chosen = sorted(set(bucket_of.values()))[:24]
+    base = [("INSERT", pk, 1, f"v{pk}", "x", 0, pk) for pk in range(640)]
+    update = []
+    for pk, b in bucket_of.items():
+        if b not in chosen:
+            continue
+        if pk % 5 == 0:
+            update.append(("DELETE", pk, 2, None, None, 1, pk))
+        elif pk % 5 == 1:
+            update.append(("UPDATE", pk, 2, f"u{pk}", "y", 1, pk))
+        elif pk % 5 == 2:
+            update.append(("INSERT", pk, 0, "stale", "z", 1, pk))  # loses
+    lww = {}
+    for r in base + update:
+        if r[1] not in lww or r[2] > lww[r[1]][2]:
+            lww[r[1]] = r
+    want = sorted((r[0], r[1], r[2], r[3]) for r in lww.values())
+    live = [r for r in want if r[0] != "DELETE"]
+
+    def check_layout(path):
+        m = json.load(open(os.path.join(path, MANIFEST)))
+        assert len(m["buckets"]) == n_buckets
+        for b, v in m["buckets"].items():
+            names = os.listdir(os.path.join(path, mat.version_dir(m, v), f"__bucket={b}"))
+            assert len([n for n in names if n.startswith("active-")]) == 1, names
+            assert len([n for n in names if n.startswith("tombs-")]) <= 1, names
+        got = read_state(spark, path).select("op", "pk", "writetime", "v")
+        assert sorted(map(tuple, got.collect())) == want
+
+    path = str(tmp_path / "t")
+    os.makedirs(path)
+    merge_into(spark, path, spark.createDataFrame(base, SCHEMA), ["pk"], n_buckets=n_buckets)
+    merge_into(spark, path, spark.createDataFrame(update, SCHEMA), ["pk"])
+    check_layout(path)
+    compact(spark, path, ["pk"])
+    check_layout(path)
+
+    out = str(tmp_path / "delta")
+    delta_log.delta_export(
+        spark, path, out, active_view_fn=lambda df: df.filter(F.col("op") != "DELETE")
+    )
+    # base merge (32 buckets), update (24), compact (32), export (32)
+    assert len(tasks) == 4 and all(0 < t <= cores for t in tasks), tasks
+    assert len(staged) == n_buckets
+    assert all(len(names) == 1 for names in staged.values()), staged
+    got = delta_log.read_delta(spark, out).select("op", "pk", "writetime", "v")
+    assert sorted(map(tuple, got.collect())) == live

@@ -131,6 +131,31 @@ def test_incremental_compact_drops_fully_expired_bucket(spark, tmp_path):
     assert read_state(spark, path) is None
 
 
+def test_compact_modes_keep_null_op_rows(spark, tmp_path):
+    """Only DELETE rows expire. A null-``op`` row compares null against
+    'DELETE'; the full rewrite's horizon filter must keep it, as the
+    incremental mode does (the stats count only DELETE as tombstones)."""
+    import shutil
+
+    path = str(tmp_path / "t")
+    os.makedirs(path)
+    rows = [("INSERT", 1, 10, "a", "x", 0, 0), (None, 2, 10, "b", "x", 0, 1)]
+    merge_into(spark, path, spark.createDataFrame(rows, SCHEMA), ["pk"], n_buckets=1)
+    clone = str(tmp_path / "clone")
+    shutil.copytree(path, clone)
+    compact(spark, path, ["pk"], tombstone_horizon=50, only_expired=True)
+    compact(spark, clone, ["pk"], tombstone_horizon=50)
+    for p in (path, clone):
+        got = sorted(r["pk"] for r in read_state(spark, p).collect())
+        assert got == [1, 2], p
+    # an expired DELETE makes the incremental mode rewrite the bucket too:
+    # it drops the DELETE and still keeps the null-op row
+    dels = spark.createDataFrame([("DELETE", 3, 10, None, None, 0, 2)], SCHEMA)
+    merge_into(spark, path, dels, ["pk"])
+    compact(spark, path, ["pk"], tombstone_horizon=50, only_expired=True)
+    assert sorted(r["pk"] for r in read_state(spark, path).collect()) == [1, 2]
+
+
 def test_point_read_routes_to_single_bucket(spark, store):
     got = point_read(spark, store, ["pk"], [3, 7, 12])
     rows = {r.pk: r for r in got.collect()}

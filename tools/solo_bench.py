@@ -6,7 +6,9 @@ attribution for bench regressions). Usage:
 Prints one JSON line per query: best/median of N reps (default 3,
 $SPARK_GRAFT_BENCH_REPS), plus the top stages by wall time from the
 Spark status API for the LAST rep — enough to attribute a regression to
-a stage without the UI.
+a stage without the UI. Each stage row carries ``numTasks``, its wall
+time and the task totals ``executorRunTime`` and ``executorCpuTime``
+(both in ms), which tell per-task overhead from compute.
 """
 
 from __future__ import annotations
@@ -56,9 +58,15 @@ def main():
                 # completed stages of this app; filter by submission
                 # time inside this rep's window)
                 try:
+                    # the 5-argument stageList (statuses, details,
+                    # withSummaries, quantiles, taskStatuses): py4j
+                    # cannot resolve the Scala default arguments
                     store = sc._jsc.sc().statusStore()
                     empty = spark._jvm.java.util.ArrayList()
-                    it = store.stageList(empty).iterator()
+                    quantiles = sc._gateway.new_array(spark._jvm.double, 0)
+                    it = store.stageList(
+                        empty, False, False, quantiles, empty
+                    ).iterator()
                     t0_ms = int(t0 * 1000)
                     rows = []
                     while it.hasNext():
@@ -80,7 +88,12 @@ def main():
                                 "stage": s.stageId(),
                                 "name": str(s.name())[:80],
                                 "tasks": s.numCompleteTasks(),
+                                "numTasks": s.numTasks(),
                                 "wall_ms": dur,
+                                "executorRunTime": s.executorRunTime(),
+                                "executorCpuTime": round(
+                                    s.executorCpuTime() / 1e6
+                                ),
                                 "shuffle_read_mb": round(
                                     s.shuffleReadBytes() / 1e6, 1
                                 ),
