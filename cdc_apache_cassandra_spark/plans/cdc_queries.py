@@ -1183,8 +1183,9 @@ def cdc_delta_change_feed_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The change feed consumed as a STRUCTURED STREAMING SOURCE (r5
     verdict item 4): the same two-commit export as cdc_delta_change_feed,
     but tailed through ``readStream.format("cdc_delta_changes")`` — log
-    versions as offsets, one InputPartition per changed bucket (the
-    exporter's add tags co-locate each key's pre/post files),
+    versions as offsets, changed buckets packed whole into at most one
+    InputPartition per core (the exporter's add tags co-locate each
+    key's pre/post files),
     classification computed inside the partitions, and the consumer's
     durable cursor recorded in the log itself
     (delta_log.record_consumer_offset — what cleanup retention respects).

@@ -47,23 +47,31 @@ unit; DV masks, column mapping (name + id mode) and foreign partition
 values ride the same per-file loader the pk-diff mode uses.
 
 Offsets ARE Delta versions: a micro-batch covers the net row-level change
-between two log versions, classified exactly like
-``delta_log.delta_changes`` (insert / delete / update_preimage /
+between two log versions (insert / delete / update_preimage /
 update_postimage + ``_commit_version``; unchanged bucket-rewrite
 neighbors cancel under null-safe full-row equality). Net-effect is
 per-BATCH: with ``maxVersionsPerBatch=1`` every version's own diff is
 emitted; with a larger window intermediate states inside the window
 collapse — the same contract Delta CDF batch reads have over a range.
 
+This module holds the engine's ONE pk-diff classifier. The batch feed
+(``delta_log.delta_changes``) and the export-time CDF writer plan with
+:func:`plan_pk_diff`, the same planner the stream runs, and classify
+the partitions through :func:`run_pk_diff`, one batch task each.
+
 Distribution: the exporter tags every ``add`` with its store bucket, and
 a bucket's keys never migrate, so each bucket's (pre-file, post-file)
-pair is classified INDEPENDENTLY — one InputPartition per changed
-bucket, pandas/Arrow inside the partition, nothing row-sized on the
-driver. Driver work per trigger is log replay (metadata-sized). Files
-from foreign writers without bucket tags fall back to one GROUP (any
-key may pair across them) — but any group whose file bytes exceed
-``maxBytesPerPartition`` (default 512 MiB) splits into N
-sub-partitions, each classifying its own key slice of both sides.
+pair classifies INDEPENDENTLY. Whole buckets are packed into at most one
+partition per core (``session.default_parallelism()``), each under
+``maxBytesPerPartition``: a Python task costs far more than a small
+bucket's classification, and a pk merge over several buckets classifies
+each key exactly as its bucket alone would. pandas/Arrow run inside the
+partition, nothing row-sized on the driver. Driver work per trigger is
+log replay (metadata-sized). Files from foreign writers without bucket
+tags fall back to one GROUP (any key may pair across them) — but any
+group whose file bytes exceed ``maxBytesPerPartition`` (default 512
+MiB) splits into N sub-partitions, each classifying its own key slice
+of both sides.
 Preferred split: key RANGES cut from the adds' file-level min/max
 stats — numeric values as-is; fixed-width ISO-8601 timestamp/date
 strings (the form Delta stats JSON uses, and among the most common
@@ -81,11 +89,10 @@ group.
 Exact-type classification: partitions convert Arrow → pandas with
 ``ArrowDtype`` (int64 keys stay int64 — no float64 round-trip that would
 corrupt keys past 2^53 — and null keys match null keys in the outer
-merge, the null-safe join the classification needs). NaN matches Spark's
-``eqNullSafe`` (NaN equals NaN) at top level AND nested inside
+merge, the null-safe join the classification needs). NaN equals NaN,
+as in Spark's ``eqNullSafe``, at top level AND nested inside
 list/struct/map values — an unchanged NaN row cancels instead of
-emitting a spurious update pair, exactly as the batch CDF path
-(``delta_log.delta_changes``) classifies it.
+emitting a spurious update pair.
 
 Resume: Spark checkpoints the version offset (restart replays nothing —
 pinned in tests/test_change_feed_source.py). ``consumerId`` additionally
@@ -107,6 +114,10 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     InputPartition,
 )
+
+#: default bound on the file bytes one partition classifies (option
+#: ``maxBytesPerPartition``)
+_MAX_BYTES = 512 << 20
 
 CDF_FIELDS = [
     T.StructField("_change_type", T.StringType(), True),
@@ -134,6 +145,9 @@ _ISO_TS_RE = _re.compile(
     r"(Z|\+00:00)?$"
 )
 _ISO_DATE_RE = _re.compile(r"^\d{4}-\d{2}-\d{2}$")
+# a timestamp string that names its zone: ``Z`` or a numeric offset
+# after the time of day
+_ZONED_TS_RE = _re.compile(r":\d{2}(\.\d+)?(Z|[+-]\d{2}(:?\d{2})?)$")
 
 
 def _stat_key(v, ceil: bool = False):
@@ -393,9 +407,9 @@ def _table_schema(
 class _ChangePartition(InputPartition):
     # pre/post: (absolute file path, deletionVector descriptor | None,
     # partition-values dict | None)
-    # per side — read() filters DV-masked rows by file ordinal, so a
-    # file re-added under a new DV classifies as exactly the newly
-    # masked rows' deletes (batch-CDF parity).
+    # per side — the loader filters DV-masked rows by file ordinal, so
+    # a file re-added under a new DV classifies as exactly the newly
+    # masked rows' deletes.
     def __init__(
         self,
         pre: list[tuple],
@@ -409,10 +423,17 @@ class _ChangePartition(InputPartition):
         ids: dict | None = None,
         cdc_change: str | None = None,
         commit_ts: int | None = None,
+        root: str | None = None,
+        pk_cols: list[str] | None = None,
     ):
         self.pre = pre
         self.post = post
         self.to_version = to_version
+        # the table root (deletion-vector files resolve against it) and
+        # the classification key: a partition carries all it needs, so
+        # the stream's read() and a batch task classify it alike
+        self.root = root
+        self.pk_cols = pk_cols or []
         # readChangeFeed mode (None = pk-diff classification): 'cdc' =
         # the entries are CHANGE-DATA files whose rows carry their
         # stored _change_type; 'insert'/'delete' = synthesized from a
@@ -431,32 +452,791 @@ class _ChangePartition(InputPartition):
         # numeric min/max for the leading pk column): this partition
         # classifies keys with lo <= pk[0] < hi (None = unbounded; null
         # keys belong to the first range). pre/post are ALREADY pruned
-        # to the files whose stats overlap the range, and read() prunes
-        # row groups by footer stats — per-split IO tracks the range's
-        # bytes instead of N× full-group re-reads (VERDICT r7 item 8).
-        # key_kind names the normalized key space the bounds live in
-        # ('num' = values as-is, 'ts' = epoch micros, 'date' = epoch
-        # days — VERDICT r8 item 4); read() casts the pk column to the
-        # same space (Arrow cast, no Python loop) before slicing.
+        # to the files whose stats overlap the range, and the loader
+        # prunes row groups by footer stats — per-split IO tracks the
+        # range's bytes instead of N× full-group re-reads (VERDICT r7
+        # item 8). key_kind names the normalized key space the bounds
+        # live in ('num' = values as-is, 'ts' = epoch micros, 'date' =
+        # epoch days — VERDICT r8 item 4); the classifier casts the pk
+        # column to the same space (Arrow cast, no Python loop) before
+        # slicing.
         self.key_range = key_range
         self.key_kind = key_kind
         # logical -> PHYSICAL top-level name map when the table uses
-        # column mapping (name mode); None = identity. read() selects
+        # column mapping (name mode); None = identity. The loader selects
         # by physical name and grafts logical names back zero-copy.
         self.phys = phys
         # logical -> delta.columnMapping.id when the table uses ID-mode
-        # mapping: read() resolves each FILE's column names from its
+        # mapping: the loader resolves each FILE's column names from its
         # parquet field ids (PARQUET:field_id), physicalName fallback.
         self.ids = ids
         # rows decoded from parquet before range filtering — an
-        # IN-PROCESS TEST OBSERVABLE ONLY (set by read()): under real
+        # IN-PROCESS TEST OBSERVABLE ONLY (set by the loader): under real
         # Spark execution partitions are pickled to worker processes,
         # so a driver-side reference never sees this increment. Do not
         # build driver-side metrics on it.
         self.rows_loaded = 0
 
 
-class ChangeFeedStreamReader(DataSourceStreamReader):
+def _file_names(partition: _ChangePartition, pf) -> dict:
+    """logical top-level name -> THIS file's column name. Name
+    mode: the metaData's physicalName map (identical across
+    files). ID mode: resolved per file from the parquet schema's
+    PARQUET:field_id metadata — the spec's resolution rule (file
+    column names are arbitrary under id mapping); physicalName
+    is the fallback for a file written before ids were stamped."""
+    if partition.ids:
+        by_id = {}
+        for fld in pf.schema_arrow:
+            fid = (fld.metadata or {}).get(b"PARQUET:field_id")
+            if fid is not None:
+                by_id[int(fid)] = fld.name
+        base = partition.phys or {}
+        return {
+            ln: by_id.get(node["id"], base.get(ln, ln))
+            for ln, node in partition.ids.items()
+        }
+    return partition.phys or {}
+
+
+def _row_groups_in_range(partition: _ChangePartition, pf) -> list[int] | None:
+    """Row-group indexes whose footer stats can intersect this
+    partition's key range; None = read everything (no range, or
+    the column's stats are unusable). Exactness mirrors
+    _file_stats: numeric parquet stats are exact, so a pruned
+    row group provably holds no key in [lo, hi)."""
+    if partition.key_range is None:
+        return None
+    lo, hi = partition.key_range
+    md = pf.metadata
+    # footers carry PHYSICAL names under column mapping; resolve
+    # by full dotted path (a nested leaf sharing the bare name
+    # must not be mistaken for the top-level key column)
+    from cdc_apache_cassandra_spark.streaming.delta_log import (
+        footer_leaf_index,
+    )
+
+    col0 = partition.pk_cols[0]
+    pcol0 = _file_names(partition, pf).get(col0, col0)
+    idx = footer_leaf_index(md, pcol0)
+    if idx is None:
+        return None
+    keep = []
+    for g in range(md.num_row_groups):
+        st = md.row_group(g).column(idx).statistics
+        if st is None or not st.has_min_max:
+            keep.append(g)
+            continue
+        nulls = 1 if st.null_count is None else st.null_count
+        if lo is None and nulls:
+            keep.append(g)
+            continue
+        mn = _footer_key(st.min, partition.key_kind)
+        mx = _footer_key(st.max, partition.key_kind)
+        if mn is None or mx is None:
+            keep.append(g)  # unusable stats: never prune on them
+            continue
+        if (hi is None or mn < hi) and (lo is None or mx >= lo):
+            keep.append(g)
+    return keep
+
+
+def _partition_values(sval: str | None, n: int, typ):
+    """``n`` copies of one partition column's add-action value — a
+    string per spec — as an Arrow array of ``typ``. A zone-less
+    timestamp (``YYYY-MM-DD HH:MM:SS[.ffffff]``) is session-local time,
+    and the engine's session zone is UTC: it parses naive and is taken
+    as UTC, as the JVM scan's cast reads it. Arrow parses every other
+    value directly (dates, numerics, booleans, ``Z``/offset-suffixed
+    ISO-8601 timestamps)."""
+    import pyarrow as pa
+
+    if sval is None:
+        return pa.nulls(n, type=typ)
+    arr = pa.array([sval] * n, type=pa.string())
+    if (
+        pa.types.is_timestamp(typ)
+        and typ.tz is not None
+        and not _ZONED_TS_RE.search(sval)
+    ):
+        return arr.cast(pa.timestamp(typ.unit)).cast(typ)
+    return arr.cast(typ)
+
+
+def _load_file(partition: _ChangePartition, entry, table_fields, table_schema):
+    """ONE add's rows as an Arrow table in the LOGICAL schema: row
+    groups pruned to the partition's key range (when set), rows
+    masked by the file's deletion vector filtered by FILE ordinal
+    (offset-aware under row-group pruning), column-mapping physical
+    names grafted back (zero-copy), foreign partition-column values
+    attached from the add action, pre-DDL columns as typed nulls.
+    Every data byte goes through the _io_* pyarrow seam (one cached
+    filesystem client per authority — never a JVM parquet scan, and
+    never pq.read_table's own per-path URI resolution). Shared by
+    the pk-diff classifier and the readChangeFeed CDF path."""
+    import pyarrow as pa
+
+    from cdc_apache_cassandra_spark.streaming.delta_log import (
+        _io_parquet_file,
+    )
+
+    # entries are (path, dv, pv) from _entry; the cdc mode's
+    # oversized-file split appends a 4th element — the row-group
+    # indexes this partition owns
+    p, dv, pv, *rest = entry
+    rgs = rest[0] if rest else None
+    pf = _io_parquet_file(p)
+    keep = (
+        None
+        if partition.key_range is None
+        else _row_groups_in_range(partition, pf)
+    )
+    if rgs is not None:
+        # the split's row groups; intersect with any key-range
+        # pruning (cdc mode never sets key_range today, but the
+        # composition must stay sound if it ever does). keep now
+        # reflects exactly the groups read, so the DV ordinal
+        # offsets below stay correct.
+        keep = rgs if keep is None else [g for g in keep if g in set(rgs)]
+    if keep is None:
+        t = pf.read()
+    elif keep:
+        t = pf.read_row_groups(keep)
+    else:
+        t = pf.schema_arrow.empty_table()
+    partition.rows_loaded += t.num_rows
+    if dv is not None and t.num_rows:
+        # rows masked by the file's deletion vector are not
+        # part of this side's logical state — filter by FILE
+        # ordinal (offset by the skipped row groups' counts
+        # when footer pruning kept a subset)
+        import numpy as np
+
+        from cdc_apache_cassandra_spark.streaming.delta_log import (
+            _io_read_bytes,
+        )
+        from cdc_apache_cassandra_spark.streaming.deletion_vectors import (
+            load_dv_indexes,
+        )
+
+        idx = load_dv_indexes(partition.root, dv, _io_read_bytes)
+        md = pf.metadata
+        counts = [md.row_group(g).num_rows for g in range(md.num_row_groups)]
+        offsets = np.concatenate(([0], np.cumsum(counts)))
+        groups = range(md.num_row_groups) if keep is None else keep
+        positions = np.concatenate(
+            [np.arange(offsets[g], offsets[g + 1]) for g in groups]
+        )
+        t = t.filter(pa.array(~np.isin(positions, idx)))
+    present = set(t.column_names)
+    arrays = []
+    nm = _file_names(partition, pf)
+    for f in table_fields:
+        pn = nm.get(f.name, f.name)
+        if pn not in present:
+            if pv and f.name in pv:
+                # PARTITION column: the value lives in the
+                # add action, not the parquet — a constant
+                # per file
+                arrays.append(
+                    _partition_values(pv[f.name], t.num_rows, f.type)
+                )
+                continue
+            # pre-DDL files: typed nulls
+            arrays.append(pa.nulls(t.num_rows, type=f.type))
+            continue
+        col = t.column(pn).combine_chunks()
+        if partition.ids:
+            # ID mode: realign nested structs by parquet
+            # field id (the JVM path's rule) — positional
+            # grafting would silently swap reordered fields
+            node = partition.ids.get(f.name) or {}
+            col = _align_by_id(col, f.type, node.get("children"))
+            arrays.append(col)
+            continue
+        # name-mapped files: graft the LOGICAL names onto
+        # the physical type (zero-copy, names only); type
+        # promotions stay with the cast below
+        nt = _renamed_type(col.type, f.type)
+        arrays.append(col.view(nt) if nt != col.type else col)
+    t = pa.table({f.name: a for f, a in zip(table_fields, arrays)})
+    return t.cast(table_schema)
+
+
+def _classify(partition: _ChangePartition, out_schema):
+    """The engine's one pk-diff classifier: Arrow record batches of
+    ``out_schema`` (the table's columns + ``_change_type`` +
+    ``_commit_version``) for one planned partition. An outer merge on
+    the pk pairs the pre image (``partition.pre``'s rows) with the post
+    image (``partition.post``'s):
+
+      post only                          -> ``insert``
+      pre only                           -> ``delete`` (pre row emitted)
+      both, rows null-safe identical     -> no change (bucket-rewrite
+                                            neighbors cancel here)
+      both, differing                    -> ``update_preimage`` +
+                                            ``update_postimage``
+
+    Row equality is null-safe and NaN equals NaN, nested values
+    included."""
+    if not partition.pre and not partition.post:
+        return
+    import pandas as pd
+    import pyarrow as pa
+
+    pk_cols = partition.pk_cols
+    table_fields = [
+        f for f in out_schema if f.name not in ("_change_type", "_commit_version")
+    ]
+    table_schema = pa.schema(table_fields)
+    cols = [f.name for f in table_fields]
+
+    col0 = pk_cols[0]
+
+    def key_numeric(series: pd.Series) -> pd.Series:
+        """The pk column in the partition's normalized key space
+        ('ts' → epoch micros, 'date' → epoch days) — a single Arrow
+        cast, nulls preserved as NaN. Timestamps store epoch micros
+        regardless of tz, matching _stat_key's UTC normalization."""
+        if partition.key_kind == "num":
+            return series
+        arr = pa.chunked_array([pa.Array.from_pandas(series)])
+        if pa.types.is_timestamp(arr.type):
+            if arr.type.unit != "us":
+                arr = arr.cast(pa.timestamp("us", tz=arr.type.tz))
+            arr = arr.cast(pa.int64())
+        elif pa.types.is_date(arr.type):
+            arr = arr.cast(pa.date32()).cast(pa.int32())
+        # ArrowDtype keeps int64 exact (a float64 round-trip would
+        # blur micros past 2^53) and nulls as pd.NA — the existing
+        # masks fillna(False), so NA rows fall to the null branch
+        out = arr.to_pandas(types_mapper=pd.ArrowDtype)
+        out.index = series.index
+        return out
+
+    def key_slice(frame: pd.DataFrame) -> pd.DataFrame:
+        """Keep only this sub-partition's key slice — range mode
+        (lo <= pk[0] < hi; null keys in the first range) or hash
+        mode. Both sides slice with the same predicate, so a key's
+        pre and post rows always land in the same sub-partition."""
+        if not len(frame):
+            return frame
+        if partition.key_range is not None:
+            lo, hi = partition.key_range
+            if lo is None and hi is None:
+                return frame
+            v = key_numeric(frame[col0])
+            if lo is None:
+                m = v.isna() | (v < hi).fillna(False)
+            elif hi is None:
+                m = (v >= lo).fillna(False)
+            else:
+                m = ((v >= lo) & (v < hi)).fillna(False)
+            return frame[m]
+        if partition.split_count <= 1:
+            return frame
+        h = pd.util.hash_pandas_object(
+            frame[pk_cols].astype(object), index=False
+        ).to_numpy()
+        return frame[(h % partition.split_count) == partition.split_idx]
+
+    def load(paths) -> pd.DataFrame:
+        # per-file decode/graft/DV-filter lives in _load_file (the
+        # _io_* pyarrow seam); slice PER FILE: a split partition
+        # holds at most one file plus its own key slice in memory,
+        # never the group
+        frames = [
+            key_slice(
+                _load_file(partition, e, table_fields, table_schema)
+                .to_pandas(types_mapper=pd.ArrowDtype)
+            )
+            for e in paths
+        ]
+        if not frames:
+            return pa.Table.from_pylist([], schema=table_schema).to_pandas(
+                types_mapper=pd.ArrowDtype
+            )
+        return pd.concat(frames, ignore_index=True)
+
+    pre = load(partition.pre)
+    post = load(partition.post)
+    value_cols = [c for c in cols if c not in pk_cols]
+    m = pre.merge(
+        post,
+        on=pk_cols,
+        how="outer",
+        suffixes=("__pre", "__post"),
+        indicator=True,
+    )
+    if value_cols:
+        same = None
+        for c in value_cols:
+            a, b = m[f"{c}__pre"], m[f"{c}__post"]
+            try:
+                eq = a == b
+            except Exception:
+                # nested types (struct/list/map): Arrow has no
+                # 'equal' kernel — convert through to_pylist so
+                # elements are plain dict/list/tuple (deep __eq__;
+                # astype(object) would yield np.ndarray elements for
+                # list columns, whose == raises). NaN nested inside
+                # a list/struct never equals itself under Python ==
+                # (an unchanged row would emit a spurious update
+                # pair), so canonicalize every nested NaN to one
+                # identity-equal sentinel first — matching the
+                # top-level columns, where the isna() term cancels
+                # unchanged NaNs. Bounded by the partition's rows.
+                def canon(v):
+                    if isinstance(v, float) and v != v:
+                        return _NAN_SENTINEL
+                    if isinstance(v, list):
+                        return [canon(x) for x in v]
+                    if isinstance(v, tuple):
+                        return tuple(canon(x) for x in v)
+                    if isinstance(v, dict):
+                        return {k: canon(x) for k, x in v.items()}
+                    return v
+
+                def plain(s):
+                    arr = pa.chunked_array([pa.Array.from_pandas(s)])
+                    return pd.Series(
+                        [canon(v) for v in arr.to_pylist()],
+                        index=s.index,
+                        dtype=object,
+                    )
+
+                eq = plain(a) == plain(b)
+            eq = eq.fillna(False) | (a.isna() & b.isna())
+            if a.dtype.kind == "f":
+                # NaN equals NaN (Spark's eqNullSafe rule), or an
+                # unchanged NaN row would emit a spurious update pair
+                eq |= (a != a).fillna(False) & (b != b).fillna(False)
+            same = eq if same is None else (same & eq)
+    else:
+        same = pd.Series(True, index=m.index)
+
+    def emit(mask, side: str, change: str) -> pd.DataFrame:
+        sel = m[mask]
+        out = pd.DataFrame(index=sel.index)
+        for c in cols:
+            out[c] = sel[c] if c in pk_cols else sel[f"{c}__{side}"]
+        out["_change_type"] = change
+        return out
+
+    parts = [
+        emit(m["_merge"] == "right_only", "post", "insert"),
+        emit(m["_merge"] == "left_only", "pre", "delete"),
+        emit((m["_merge"] == "both") & ~same, "pre", "update_preimage"),
+        emit((m["_merge"] == "both") & ~same, "post", "update_postimage"),
+    ]
+    out = pd.concat(parts, ignore_index=True)
+    out["_commit_version"] = partition.to_version
+    result = pa.Table.from_pandas(out, preserve_index=False).select(
+        out_schema.names
+    ).cast(out_schema)
+    yield from result.to_batches()
+
+
+class _FilePlanner:
+    """Driver-side planning over one table's files (metadata only): the
+    column-mapping and partition-column plan, the entries partitions
+    carry, and the pk-diff partitions with their bucket packing and
+    key-range / key-hash splits. Holds ``path`` (the table root),
+    ``pk_cols``, ``schema`` and ``max_bytes``; ``_setup_mapping`` fills
+    ``_phys``, ``_ids`` and ``_part_cols``."""
+
+    def _part(self, pre: list, post: list, to_version: int, **kw):
+        return _ChangePartition(
+            pre,
+            post,
+            to_version,
+            phys=self._phys,
+            ids=self._ids,
+            root=self.path,
+            pk_cols=self.pk_cols,
+            **kw,
+        )
+
+    def _entry(self, path: str, add: dict):
+        """One partition entry for an add: (absolute path, DV
+        descriptor, partition-values dict) — the third element None for
+        unpartitioned tables, else {logical name: string value} pulled
+        from add.partitionValues (physical-name keys tolerated)."""
+        pv = None
+        if self._part_cols:
+            from cdc_apache_cassandra_spark.streaming.delta_log import (
+                _partition_value_of,
+            )
+
+            pv = {
+                c: _partition_value_of(add, ph, c)
+                for c, ph in self._part_cols
+            }
+        return (path, add.get("deletionVector"), pv)
+
+    def _setup_mapping(self, meta: dict | None) -> None:
+        """Resolve the table's column-mapping + partition-column plan
+        (driver-side, metadata-sized) — partitions carry the resulting
+        ``self._phys`` / ``self._ids``, entries the ``self._part_cols``
+        values. Name mode: files carry PHYSICAL names; stats and
+        footers key on them, and the loader grafts the logical names
+        back on (zero-copy view). ID mode: per-file
+        PARQUET:field_id resolution. Unknown modes refuse loudly via
+        _mapping_plan — same posture as read_delta. The to-side meta
+        rules: on a mapping upgrade existing columns get physicalName
+        == their logical name, so pre-upgrade files read unchanged."""
+        from cdc_apache_cassandra_spark.streaming.delta_log import (
+            _mapping_plan,
+        )
+
+        plan = _mapping_plan(meta) if meta else None
+        phys_of = plan.phys_of if plan else None
+        self._phys = (
+            None
+            if not phys_of or all(k == v for k, v in phys_of.items())
+            else phys_of
+        )
+        self._ids = plan.id_of if plan else None
+        # foreign PARTITIONED tables: partition column values live in
+        # add.partitionValues (the spec keeps them out of the parquet);
+        # carry (logical, physical) pairs so each entry ships its values
+        phys_all = phys_of or {}
+        self._part_cols = [
+            (c, phys_all.get(c, c))
+            for c in ((meta or {}).get("partitionColumns") or [])
+        ]
+
+    def _diff_partitions(
+        self, files_from: dict, files_to: dict, to_v: int
+    ) -> list[_ChangePartition]:
+        """The pk-diff partitions between two replayed file maps: the
+        files the diff removed are the pre image, the files it added
+        the post image, keyed by (path, deletion vector) so a file
+        re-added under a new DV classifies as exactly the newly masked
+        rows' deletes. Entries carry the DV descriptor (the loader
+        filters the masked rows out of whichever side the file is on)
+        and, for partitioned tables, the add's partition values."""
+        import os
+
+        from cdc_apache_cassandra_spark.streaming.delta_log import (
+            _file_identity,
+        )
+
+        id_from, id_to = _file_identity(files_from), _file_identity(files_to)
+        # bucket tag -> [pre (path, add) entries, post entries, bytes]
+        groups: dict[str | None, list] = {}
+        for side, ids, other in ((0, id_from, id_to), (1, id_to, id_from)):
+            for k in sorted(ids.keys() - other.keys(), key=repr):
+                p, a = ids[k]
+                g = groups.setdefault(
+                    (a.get("tags") or {}).get("bucket"), [[], [], 0]
+                )
+                g[side].append((os.path.join(self.path, p), a))
+                g[2] += int(a.get("size") or 0)
+        if None in groups and len(groups) > 1:
+            # untagged (foreign) files can pair with ANY bucket's keys —
+            # classification is only key-local if all files land together
+            pre = [e for g in groups.values() for e in g[0]]
+            post = [e for g in groups.values() for e in g[1]]
+            size = sum(g[2] for g in groups.values())
+            groups = {None: [pre, post, size]}
+        parts, whole = [], []
+        for _, (pre_e, post_e, size) in sorted(
+            groups.items(), key=lambda kv: (kv[0] is None, kv[0])
+        ):
+            n = min(64, max(1, -(-size // self.max_bytes))) if size else 1
+            if n <= 1:
+                whole.append((size, pre_e, post_e))
+                continue
+            # oversized group (pathological bucket / untagged fallback).
+            # Preferred split: key RANGES from the adds' file-level
+            # min/max stats — each sub-partition reads ONLY the files
+            # (and, in the loader, only the row groups) overlapping its
+            # range, so per-split IO tracks the range's bytes instead
+            # of N× full-group re-reads (VERDICT r7 item 8). Sound for
+            # the same reason the hash split is: both sides slice by
+            # the SAME key predicate, so a key's pre and post rows land
+            # together and the union is byte-identical.
+            split = self._range_splits(pre_e + post_e, n)
+            if split is not None:
+                ranges, kind = split
+                # parse each add's stats ONCE (not once per range):
+                # driver-CPU on the hot planning path
+                pre_s = [(p, a, self._file_stats(a)) for p, a in pre_e]
+                post_s = [(p, a, self._file_stats(a)) for p, a in post_e]
+                for lo, hi in ranges:
+                    r_pre = [
+                        self._entry(p, a)
+                        for p, a, st in pre_s
+                        if _overlaps(st, lo, hi)
+                    ]
+                    r_post = [
+                        self._entry(p, a)
+                        for p, a, st in post_s
+                        if _overlaps(st, lo, hi)
+                    ]
+                    if r_pre or r_post:
+                        parts.append(
+                            self._part(
+                                r_pre,
+                                r_post,
+                                to_v,
+                                key_range=(lo, hi),
+                                key_kind=kind,
+                            )
+                        )
+                continue
+            # fallback (stats missing/non-numeric): key-hash split — the
+            # slice happens after decode, so N× splits cost N× IO; 64
+            # bounds that at two orders of magnitude parallelism.
+            pre = [self._entry(p, a) for p, a in pre_e]
+            post = [self._entry(p, a) for p, a in post_e]
+            for i in range(n):
+                parts.append(
+                    self._part(pre, post, to_v, split_idx=i, split_count=n)
+                )
+        return parts + self._pack(whole, to_v) or [self._part([], [], to_v)]
+
+    def _pack(self, groups: list, to_v: int) -> list[_ChangePartition]:
+        """Whole bucket groups ``(bytes, pre, post)`` packed into at most
+        one partition per core — more only where ``max_bytes`` forces
+        it — largest group first onto the lightest partition. A Python
+        task costs far more than a small bucket's classification, and a
+        key never leaves its bucket, so a merge over several buckets
+        classifies each key exactly as its bucket alone would."""
+        from cdc_apache_cassandra_spark.session import default_parallelism
+
+        slots = default_parallelism()
+        bins: list[list] = []  # [bytes, pre entries, post entries]
+        for size, pre, post in sorted(groups, key=lambda g: -g[0]):
+            light = min(bins, key=lambda b: b[0], default=None)
+            if len(bins) < slots or light[0] + size > self.max_bytes:
+                bins.append([size, list(pre), list(post)])
+            else:
+                light[0] += size
+                light[1] += pre
+                light[2] += post
+        return [
+            self._part(
+                [self._entry(*e) for e in pre],
+                [self._entry(*e) for e in post],
+                to_v,
+            )
+            for _, pre, post in bins
+        ]
+
+    def _schema_kind(self) -> str | None:
+        """The range-split key kind the LEADING pk column's declared
+        type admits — 'num' | 'ts' | 'date' | None (not splittable:
+        strings can hold anything, decimals/binary/complex have no
+        normalized key space here). Stats whose parsed kind disagrees
+        with the schema are refused in _range_splits."""
+        schema = getattr(self, "schema", None)
+        if schema is None:
+            return None
+        dt = schema[self.pk_cols[0]].dataType
+        if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
+            return "ts"
+        if isinstance(dt, T.DateType):
+            return "date"
+        if isinstance(
+            dt,
+            (
+                T.ByteType,
+                T.ShortType,
+                T.IntegerType,
+                T.LongType,
+                T.FloatType,
+                T.DoubleType,
+            ),
+        ):
+            return "num"
+        return None
+
+    def _file_stats(self, add: dict):
+        """(min, max, may_have_nulls, kind) of the LEADING pk column
+        from the add action's stats in ``_stat_key``'s normalized key
+        space, or None when unusable. Free-form strings are refused
+        (engines may truncate string min/max, and a truncated max
+        under-reports the file's range — pruning on it would LOSE
+        rows); fixed-width ISO-8601 timestamps/dates are accepted with
+        the max padded up by its precision gap (VERDICT r8 item 4).
+        Numeric stats are exact. Under column mapping, stats key on
+        PHYSICAL names — translate."""
+        phys = getattr(self, "_phys", None) or {}
+        col = phys.get(self.pk_cols[0], self.pk_cols[0])
+        raw = add.get("stats")
+        if not raw:
+            return None
+        try:
+            s = json.loads(raw) if isinstance(raw, str) else raw
+        except (TypeError, ValueError):
+            return None
+        lo = _stat_key((s.get("minValues") or {}).get(col))
+        hi = _stat_key((s.get("maxValues") or {}).get(col), ceil=True)
+        if lo is None or hi is None or lo[1] != hi[1]:
+            return None
+        nc = (s.get("nullCount") or {}).get(col)
+        return lo[0], hi[0], (nc is None or bool(nc)), lo[1]
+
+    # max files whose parquet FOOTERS the planner may read to refine cut
+    # points (metadata-sized IO, driver/planner-side): file-level
+    # add.stats are free but give at most one cut candidate per file, so
+    # a group of few huge files (the verdict-r7-item-8 shape: one
+    # many-row-group file) needs row-group mins to split at all. Many-
+    # file groups never need footers — their file mins already cut.
+    _FOOTER_BUDGET = 16
+
+    def _range_splits(self, entries, n: int):
+        """Up to ``n`` key ranges [(lo, hi)) with None-unbounded ends,
+        cut at byte quantiles over (min, bytes) units — files from the
+        adds' stats, refined to ROW GROUPS from parquet footers when
+        the file mins alone cannot yield enough distinct cuts. Returns
+        ``(ranges, kind)`` with kind ∈ {'num','ts','date'} (the key
+        space the bounds live in — the classifier casts the pk column to
+        match), or None when ANY file of the group lacks usable stats or the
+        group mixes kinds (a single opaque file could hold any key, so
+        every range would have to read it and the split degenerates to
+        the hash path)."""
+        units: list[tuple] = []  # (min_value, bytes)
+        files: list[tuple] = []  # (path, size) for footer refinement
+        # the kind must MATCH the pk column's declared type — stats text
+        # alone is ambiguous: a STRING column holding ISO-timestamp text
+        # would otherwise parse as kind='ts' and the reader's key cast
+        # (built from the real column type) would slice in a different
+        # key space than the planner pruned in (row loss / type errors).
+        allowed = self._schema_kind()
+        if allowed is None:
+            return None  # pk type is not range-splittable -> hash path
+        kind = None
+        for path, add in entries:
+            st = self._file_stats(add)
+            if st is None or st[3] != allowed:
+                return None
+            kind = st[3]
+            units.append((st[0], int(add.get("size") or 0)))
+            files.append((path, int(add.get("size") or 0)))
+        if len({mn for mn, _ in units}) < n and len(files) <= self._FOOTER_BUDGET:
+            refined: list[tuple] = []
+            for (path, size), file_unit in zip(files, units):
+                rg = self._row_group_units(path, size, kind)
+                # a file whose footer can't refine keeps its file-level
+                # unit — its bytes must still weight the quantiles
+                refined.extend(rg if rg else [file_unit])
+            units = refined
+        units.sort()
+        total = sum(sz for _, sz in units) or 1
+        target = total / n
+        cuts: list = []
+        acc = 0
+        for mn, sz in units:
+            # a cut must be strictly inside the key space: above the
+            # previous cut AND above the global min (a cut at the global
+            # min yields an empty first range and one range carrying the
+            # whole group — worse than the hash fallback)
+            if (
+                len(cuts) < n - 1
+                and acc >= target * (len(cuts) + 1)
+                and mn > (cuts[-1] if cuts else units[0][0])
+            ):
+                cuts.append(mn)
+            acc += sz
+        if not cuts:
+            return None  # degenerate stats (e.g. all units share one min)
+        bounds = [None, *cuts, None]
+        return list(zip(bounds, bounds[1:])), kind
+
+    def _row_group_units(
+        self, path: str, file_size: int, kind: str = "num"
+    ) -> list[tuple]:
+        """(min, bytes) per row group of ``path`` from its footer; []
+        when the footer or its stats are unusable (the caller then keeps
+        file-level units). Metadata-sized read — the footer, not data —
+        through the delta_log URI seam, so URI table roots resolve the
+        same way every other footer read does."""
+        from cdc_apache_cassandra_spark.streaming.delta_log import (
+            _io_parquet_file,
+        )
+
+        phys = getattr(self, "_phys", None) or {}
+        col = phys.get(self.pk_cols[0], self.pk_cols[0])
+        try:
+            md = _io_parquet_file(path).metadata
+        except Exception:
+            return []
+        idx = next(
+            (
+                i
+                for i in range(md.num_columns)
+                if md.schema.column(i).name == col
+            ),
+            None,
+        )
+        if idx is None:
+            return []
+        out = []
+        for g in range(md.num_row_groups):
+            st = md.row_group(g).column(idx).statistics
+            if st is None or not st.has_min_max:
+                return []
+            mn = _footer_key(st.min, kind)
+            if mn is None:
+                return []
+            # total_byte_size ~ uncompressed; proportionality is all the
+            # quantile cut needs, and it never divides by file count
+            out.append((mn, md.row_group(g).total_byte_size or file_size))
+        return out
+
+    def _stats_overlap(self, add: dict, lo, hi) -> bool:
+        return _overlaps(self._file_stats(add), lo, hi)
+
+
+def plan_pk_diff(
+    root: str,
+    files_from: dict,
+    files_to: dict,
+    meta: dict,
+    pk_cols: list[str],
+    to_version: int,
+) -> list[_ChangePartition]:
+    """The pk-diff partitions between two replayed file maps of the
+    table at ``root`` — the planner the stream, the batch feed and the
+    CDF writer share. ``meta`` is the to-side metaData: its schema is
+    the output's, and its column mapping and partition columns decide
+    how every file reads."""
+    planner = _FilePlanner()
+    planner.path, planner.pk_cols = root, list(pk_cols)
+    planner.max_bytes = _MAX_BYTES
+    planner.schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
+    missing = [c for c in pk_cols if c not in planner.schema.names]
+    if missing:
+        raise ValueError(f"pk columns {missing} not in the table schema")
+    planner._setup_mapping(meta)
+    return planner._diff_partitions(files_from, files_to, to_version)
+
+
+def run_pk_diff(spark, parts: list[_ChangePartition], schema: T.StructType):
+    """Planned pk-diff partitions as one batch DataFrame — ``schema``'s
+    columns + ``_change_type`` + ``_commit_version`` — where task ``i``
+    classifies ``parts[i]`` exactly as the stream's read() does. The
+    partitions ride the task closure (metadata-sized); workers read
+    only data files, through the ``_io_*`` seam."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    out = T.StructType(list(schema.fields) + CDF_FIELDS)
+    arrow_out = to_arrow_schema(out)
+
+    def classify(batches):
+        for batch in batches:
+            for i in batch.column(0).to_pylist():
+                yield from _classify(parts[i], arrow_out)
+
+    return spark.range(len(parts), numPartitions=len(parts)).mapInArrow(
+        classify, out
+    )
+
+
+class ChangeFeedStreamReader(_FilePlanner, DataSourceStreamReader):
     """Offset = {"version": last consumed Delta version}."""
 
     def __init__(self, options, schema: T.StructType):
@@ -555,12 +1335,12 @@ class ChangeFeedStreamReader(DataSourceStreamReader):
         # upper bound on the file bytes one partition classifies: groups
         # above it (a pathological bucket, or the untagged-foreign
         # fallback that would otherwise collapse to ONE partition) split
-        # by key-hash range into ceil(bytes/threshold) sub-partitions.
-        # Default 512 MiB — the store's documented bucket sizing keeps
-        # normal buckets well under it (SCALE.md), so tagged tables
-        # usually plan exactly one partition per changed bucket.
+        # by key range or hash into ceil(bytes/threshold) sub-partitions.
+        # The store's documented bucket sizing keeps normal buckets well
+        # under the default (SCALE.md), so tagged tables pack whole
+        # buckets into at most one partition per core.
         mb = options.get("maxbytesperpartition")
-        self.max_bytes = int(mb) if mb else 512 << 20
+        self.max_bytes = int(mb) if mb else _MAX_BYTES
         self.consumer_id = options.get("consumerid")
         # the log version the pinned schema was read at: the DDL check
         # applies only to ranges ENDING PAST it — schema differences at
@@ -698,8 +1478,8 @@ class ChangeFeedStreamReader(DataSourceStreamReader):
 
     def _check_schema(self, meta: dict | None, to_v: int) -> None:
         """Stop loudly when a range ending PAST the pin sees metaData
-        that widens, retypes, or DROPS columns — a mid-STREAM DDL. Ranges ending
-        at or before ``_pinned_at`` are history: their schema
+        that widens, retypes, or DROPS columns — a mid-STREAM DDL. Ranges
+        ending at or before ``_pinned_at`` are history: their schema
         differences (columns later dropped, types later reverted) read
         under Delta's own rule — the pinned (newest) schema wins, typed
         nulls for columns a file lacks — so a restarted stream can
@@ -719,55 +1499,6 @@ class ChangeFeedStreamReader(DataSourceStreamReader):
                 "resumes exactly where this batch would have started; no "
                 "rows are lost)"
             )
-
-    def _entry(self, path: str, add: dict):
-        """One partition entry for an add: (absolute path, DV
-        descriptor, partition-values dict) — the third element None for
-        unpartitioned tables, else {logical name: string value} pulled
-        from add.partitionValues (physical-name keys tolerated)."""
-        pv = None
-        if self._part_cols:
-            from cdc_apache_cassandra_spark.streaming.delta_log import (
-                _partition_value_of,
-            )
-
-            pv = {
-                c: _partition_value_of(add, ph, c)
-                for c, ph in self._part_cols
-            }
-        return (path, add.get("deletionVector"), pv)
-
-    def _setup_mapping(self, meta: dict | None) -> None:
-        """Resolve the table's column-mapping + partition-column plan
-        for this batch (driver-side, metadata-sized) — read() grafts
-        from the resulting ``self._phys`` / ``self._ids`` /
-        ``self._part_cols``. Name mode: files carry PHYSICAL names;
-        stats and footers key on them, and read() grafts the logical
-        names back on (zero-copy view). ID mode: per-file
-        PARQUET:field_id resolution. Unknown modes refuse loudly via
-        _mapping_plan — same posture as read_delta. The to-side meta
-        rules: on a mapping upgrade existing columns get physicalName
-        == their logical name, so pre-upgrade files read unchanged."""
-        from cdc_apache_cassandra_spark.streaming.delta_log import (
-            _mapping_plan,
-        )
-
-        plan = _mapping_plan(meta) if meta else None
-        phys_of = plan.phys_of if plan else None
-        self._phys = (
-            None
-            if not phys_of or all(k == v for k, v in phys_of.items())
-            else phys_of
-        )
-        self._ids = plan.id_of if plan else None
-        # foreign PARTITIONED tables: partition column values live in
-        # add.partitionValues (the spec keeps them out of the parquet);
-        # carry (logical, physical) pairs so each entry ships its values
-        phys_all = phys_of or {}
-        self._part_cols = [
-            (c, phys_all.get(c, c))
-            for c in ((meta or {}).get("partitionColumns") or [])
-        ]
 
     def _cdc_partitions(self, from_v: int, to_v: int, st_to):
         """readChangeFeed planning: classify every window commit with
@@ -823,14 +1554,8 @@ class ChangeFeedStreamReader(DataSourceStreamReader):
 
             def make(entries, v=v, kind=kind):
                 parts.append(
-                    _ChangePartition(
-                        [],
-                        entries,
-                        v,
-                        phys=self._phys,
-                        ids=self._ids,
-                        cdc_change=kind,
-                        commit_ts=ts.get(v),
+                    self._part(
+                        [], entries, v, cdc_change=kind, commit_ts=ts.get(v)
                     )
                 )
 
@@ -949,473 +1674,20 @@ class ChangeFeedStreamReader(DataSourceStreamReader):
             st_from.meta if st_from else None
         )
         self._setup_mapping(meta)
-        f_from = st_from.files if st_from else {}
-        f_to = st_to.files if st_to else {}
-        # the file-diff identity is (path, dv_unique_id) — a delta-spark
-        # DELETE re-adds the SAME parquet path pointed at a (new)
-        # deletion vector, so a path-only diff would classify the commit
-        # as data-free and silently drop the deletes (batch parity:
-        # delta_log.delta_changes keys its diff identically). DV work is
-        # conditional PER ADD — an add without the field keys as
-        # (path, None) at one dict.get, so the common no-DV table pays
-        # nothing (VERDICT r9 item 1). Deliberately NOT gated on the
-        # protocol's deletionVectors flag: a spec-sloppy foreign writer
-        # that attaches a DV without declaring the feature must still
-        # have its deletes seen, not silently dropped
-        # (test_dv_plus_mapping_compose pins the composition).
-        from cdc_apache_cassandra_spark.streaming.deletion_vectors import (
-            dv_unique_id,
+        parts = self._diff_partitions(
+            st_from.files if st_from else {}, st_to.files if st_to else {}, to_v
         )
-
-        def keyed(files: dict) -> dict:
-            return {
-                (
-                    p,
-                    dv_unique_id(dv) if (dv := a.get("deletionVector")) else None,
-                ): p
-                for p, a in files.items()
-            }
-
-        k_from, k_to = keyed(f_from), keyed(f_to)
-        removed = sorted(set(k_from) - set(k_to), key=lambda k: k[0])
-        added = sorted(set(k_to) - set(k_from), key=lambda k: k[0])
-        if removed or added:
+        if any(p.pre or p.post for p in parts):
             self._last_data_version = max(self._last_data_version, to_v)
-        import os
-
-        def bucket_of(p: str, files: dict) -> str | None:
-            tags = files[p].get("tags") or {}
-            return tags.get("bucket")
-
-        # group -> [pre (path, add) entries, post entries, total bytes]
-        groups: dict[str | None, list] = {}
-        for p, _dv in removed:
-            g = groups.setdefault(bucket_of(p, f_from), [[], [], 0])
-            g[0].append((os.path.join(self.path, p), f_from[p]))
-            g[2] += int(f_from[p].get("size") or 0)
-        for p, _dv in added:
-            g = groups.setdefault(bucket_of(p, f_to), [[], [], 0])
-            g[1].append((os.path.join(self.path, p), f_to[p]))
-            g[2] += int(f_to[p].get("size") or 0)
-        if None in groups and len(groups) > 1:
-            # untagged (foreign) files can pair with ANY bucket's keys —
-            # classification is only key-local if all files land together
-            pre = [e for g in groups.values() for e in g[0]]
-            post = [e for g in groups.values() for e in g[1]]
-            size = sum(g[2] for g in groups.values())
-            groups = {None: [pre, post, size]}
-        parts = []
-        for _, (pre_e, post_e, size) in sorted(
-            groups.items(), key=lambda kv: (kv[0] is None, kv[0])
-        ):
-            n = min(64, max(1, -(-size // self.max_bytes))) if size else 1
-            # partition entries carry the DV descriptor (read() filters
-            # the masked rows out of whichever side the file is on) and,
-            # for partitioned tables, the add's partition values
-            pre = [self._entry(p, a) for p, a in pre_e]
-            post = [self._entry(p, a) for p, a in post_e]
-            if n <= 1:
-                parts.append(
-                    _ChangePartition(
-                        pre, post, to_v, phys=self._phys, ids=self._ids
-                    )
-                )
-                continue
-            # oversized group (pathological bucket / untagged fallback).
-            # Preferred split: key RANGES from the adds' file-level
-            # min/max stats — each sub-partition reads ONLY the files
-            # (and, in read(), only the row groups) overlapping its
-            # range, so per-split IO tracks the range's bytes instead
-            # of N× full-group re-reads (VERDICT r7 item 8). Sound for
-            # the same reason the hash split is: both sides slice by
-            # the SAME key predicate, so a key's pre and post rows land
-            # together and the union is byte-identical.
-            split = self._range_splits(pre_e + post_e, n)
-            if split is not None:
-                ranges, kind = split
-                # parse each add's stats ONCE (not once per range):
-                # driver-CPU on the hot planning path
-                pre_s = [(p, a, self._file_stats(a)) for p, a in pre_e]
-                post_s = [(p, a, self._file_stats(a)) for p, a in post_e]
-                for lo, hi in ranges:
-                    r_pre = [
-                        self._entry(p, a)
-                        for p, a, st in pre_s
-                        if _overlaps(st, lo, hi)
-                    ]
-                    r_post = [
-                        self._entry(p, a)
-                        for p, a, st in post_s
-                        if _overlaps(st, lo, hi)
-                    ]
-                    if r_pre or r_post:
-                        parts.append(
-                            _ChangePartition(
-                                r_pre, r_post, to_v,
-                                key_range=(lo, hi), key_kind=kind,
-                                phys=self._phys,
-                                ids=self._ids,
-                            )
-                        )
-                continue
-            # fallback (stats missing/non-numeric): key-hash split — the
-            # slice happens after decode, so N× splits cost N× IO; 64
-            # bounds that at two orders of magnitude parallelism.
-            for i in range(n):
-                parts.append(
-                    _ChangePartition(
-                        pre, post, to_v, i, n,
-                        phys=self._phys, ids=self._ids,
-                    )
-                )
-        return parts or [_ChangePartition([], [], to_v)]
-
-    def _schema_kind(self) -> str | None:
-        """The range-split key kind the LEADING pk column's declared
-        type admits — 'num' | 'ts' | 'date' | None (not splittable:
-        strings can hold anything, decimals/binary/complex have no
-        normalized key space here). Stats whose parsed kind disagrees
-        with the schema are refused in _range_splits."""
-        schema = getattr(self, "schema", None)
-        if schema is None:
-            return None
-        dt = schema[self.pk_cols[0]].dataType
-        if isinstance(dt, (T.TimestampType, T.TimestampNTZType)):
-            return "ts"
-        if isinstance(dt, T.DateType):
-            return "date"
-        if isinstance(
-            dt,
-            (
-                T.ByteType,
-                T.ShortType,
-                T.IntegerType,
-                T.LongType,
-                T.FloatType,
-                T.DoubleType,
-            ),
-        ):
-            return "num"
-        return None
-
-    def _file_stats(self, add: dict):
-        """(min, max, may_have_nulls, kind) of the LEADING pk column
-        from the add action's stats in ``_stat_key``'s normalized key
-        space, or None when unusable. Free-form strings are refused
-        (engines may truncate string min/max, and a truncated max
-        under-reports the file's range — pruning on it would LOSE
-        rows); fixed-width ISO-8601 timestamps/dates are accepted with
-        the max padded up by its precision gap (VERDICT r8 item 4).
-        Numeric stats are exact. Under column mapping, stats key on
-        PHYSICAL names — translate."""
-        phys = getattr(self, "_phys", None) or {}
-        col = phys.get(self.pk_cols[0], self.pk_cols[0])
-        raw = add.get("stats")
-        if not raw:
-            return None
-        try:
-            s = json.loads(raw) if isinstance(raw, str) else raw
-        except (TypeError, ValueError):
-            return None
-        lo = _stat_key((s.get("minValues") or {}).get(col))
-        hi = _stat_key((s.get("maxValues") or {}).get(col), ceil=True)
-        if lo is None or hi is None or lo[1] != hi[1]:
-            return None
-        nc = (s.get("nullCount") or {}).get(col)
-        return lo[0], hi[0], (nc is None or bool(nc)), lo[1]
-
-    # max files whose parquet FOOTERS the planner may read to refine cut
-    # points (metadata-sized IO, driver/planner-side): file-level
-    # add.stats are free but give at most one cut candidate per file, so
-    # a group of few huge files (the verdict-r7-item-8 shape: one
-    # many-row-group file) needs row-group mins to split at all. Many-
-    # file groups never need footers — their file mins already cut.
-    _FOOTER_BUDGET = 16
-
-    def _range_splits(self, entries, n: int):
-        """Up to ``n`` key ranges [(lo, hi)) with None-unbounded ends,
-        cut at byte quantiles over (min, bytes) units — files from the
-        adds' stats, refined to ROW GROUPS from parquet footers when
-        the file mins alone cannot yield enough distinct cuts. Returns
-        ``(ranges, kind)`` with kind ∈ {'num','ts','date'} (the key
-        space the bounds live in — read() casts the pk column to match),
-        or None when ANY file of the group lacks usable stats or the
-        group mixes kinds (a single opaque file could hold any key, so
-        every range would have to read it and the split degenerates to
-        the hash path)."""
-        units: list[tuple] = []  # (min_value, bytes)
-        files: list[tuple] = []  # (path, size) for footer refinement
-        # the kind must MATCH the pk column's declared type — stats text
-        # alone is ambiguous: a STRING column holding ISO-timestamp text
-        # would otherwise parse as kind='ts' and the reader's key cast
-        # (built from the real column type) would slice in a different
-        # key space than the planner pruned in (row loss / type errors).
-        allowed = self._schema_kind()
-        if allowed is None:
-            return None  # pk type is not range-splittable -> hash path
-        kind = None
-        for path, add in entries:
-            st = self._file_stats(add)
-            if st is None or st[3] != allowed:
-                return None
-            kind = st[3]
-            units.append((st[0], int(add.get("size") or 0)))
-            files.append((path, int(add.get("size") or 0)))
-        if len({mn for mn, _ in units}) < n and len(files) <= self._FOOTER_BUDGET:
-            refined: list[tuple] = []
-            for (path, size), file_unit in zip(files, units):
-                rg = self._row_group_units(path, size, kind)
-                # a file whose footer can't refine keeps its file-level
-                # unit — its bytes must still weight the quantiles
-                refined.extend(rg if rg else [file_unit])
-            units = refined
-        units.sort()
-        total = sum(sz for _, sz in units) or 1
-        target = total / n
-        cuts: list = []
-        acc = 0
-        for mn, sz in units:
-            # a cut must be strictly inside the key space: above the
-            # previous cut AND above the global min (a cut at the global
-            # min yields an empty first range and one range carrying the
-            # whole group — worse than the hash fallback)
-            if (
-                len(cuts) < n - 1
-                and acc >= target * (len(cuts) + 1)
-                and mn > (cuts[-1] if cuts else units[0][0])
-            ):
-                cuts.append(mn)
-            acc += sz
-        if not cuts:
-            return None  # degenerate stats (e.g. all units share one min)
-        bounds = [None, *cuts, None]
-        return list(zip(bounds, bounds[1:])), kind
-
-    def _row_group_units(
-        self, path: str, file_size: int, kind: str = "num"
-    ) -> list[tuple]:
-        """(min, bytes) per row group of ``path`` from its footer; []
-        when the footer or its stats are unusable (the caller then keeps
-        file-level units). Metadata-sized read — the footer, not data —
-        through the delta_log URI seam, so URI table roots resolve the
-        same way every other footer read does."""
-        from cdc_apache_cassandra_spark.streaming.delta_log import (
-            _io_parquet_file,
-        )
-
-        phys = getattr(self, "_phys", None) or {}
-        col = phys.get(self.pk_cols[0], self.pk_cols[0])
-        try:
-            md = _io_parquet_file(path).metadata
-        except Exception:
-            return []
-        idx = next(
-            (
-                i
-                for i in range(md.num_columns)
-                if md.schema.column(i).name == col
-            ),
-            None,
-        )
-        if idx is None:
-            return []
-        out = []
-        for g in range(md.num_row_groups):
-            st = md.row_group(g).column(idx).statistics
-            if st is None or not st.has_min_max:
-                return []
-            mn = _footer_key(st.min, kind)
-            if mn is None:
-                return []
-            # total_byte_size ~ uncompressed; proportionality is all the
-            # quantile cut needs, and it never divides by file count
-            out.append((mn, md.row_group(g).total_byte_size or file_size))
-        return out
-
-    def _stats_overlap(self, add: dict, lo, hi) -> bool:
-        return _overlaps(self._file_stats(add), lo, hi)
+        return parts
 
     # -- execution ---------------------------------------------------------
     def read(self, partition: _ChangePartition):
         if partition.cdc_change is not None:
             return self._read_cdc(partition)
-        return self._read_diff(partition)
+        from pyspark.sql.pandas.types import to_arrow_schema
 
-    def _file_names(self, partition: _ChangePartition, pf) -> dict:
-        """logical top-level name -> THIS file's column name. Name
-        mode: the metaData's physicalName map (identical across
-        files). ID mode: resolved per file from the parquet schema's
-        PARQUET:field_id metadata — the spec's resolution rule (file
-        column names are arbitrary under id mapping); physicalName
-        is the fallback for a file written before ids were stamped."""
-        if partition.ids:
-            by_id = {}
-            for fld in pf.schema_arrow:
-                fid = (fld.metadata or {}).get(b"PARQUET:field_id")
-                if fid is not None:
-                    by_id[int(fid)] = fld.name
-            base = partition.phys or {}
-            return {
-                ln: by_id.get(node["id"], base.get(ln, ln))
-                for ln, node in partition.ids.items()
-            }
-        return partition.phys or {}
-
-    def _row_groups_in_range(
-        self, partition: _ChangePartition, pf
-    ) -> list[int] | None:
-        """Row-group indexes whose footer stats can intersect this
-        partition's key range; None = read everything (no range, or
-        the column's stats are unusable). Exactness mirrors
-        _file_stats: numeric parquet stats are exact, so a pruned
-        row group provably holds no key in [lo, hi)."""
-        if partition.key_range is None:
-            return None
-        lo, hi = partition.key_range
-        md = pf.metadata
-        # footers carry PHYSICAL names under column mapping; resolve
-        # by full dotted path (a nested leaf sharing the bare name
-        # must not be mistaken for the top-level key column)
-        from cdc_apache_cassandra_spark.streaming.delta_log import (
-            footer_leaf_index,
-        )
-
-        col0 = self.pk_cols[0]
-        pcol0 = self._file_names(partition, pf).get(col0, col0)
-        idx = footer_leaf_index(md, pcol0)
-        if idx is None:
-            return None
-        keep = []
-        for g in range(md.num_row_groups):
-            st = md.row_group(g).column(idx).statistics
-            if st is None or not st.has_min_max:
-                keep.append(g)
-                continue
-            nulls = 1 if st.null_count is None else st.null_count
-            if lo is None and nulls:
-                keep.append(g)
-                continue
-            mn = _footer_key(st.min, partition.key_kind)
-            mx = _footer_key(st.max, partition.key_kind)
-            if mn is None or mx is None:
-                keep.append(g)  # unusable stats: never prune on them
-                continue
-            if (hi is None or mn < hi) and (lo is None or mx >= lo):
-                keep.append(g)
-        return keep
-
-    def _load_file(
-        self, partition: _ChangePartition, entry, table_fields, table_schema
-    ):
-        """ONE add's rows as an Arrow table in the LOGICAL schema: row
-        groups pruned to the partition's key range (when set), rows
-        masked by the file's deletion vector filtered by FILE ordinal
-        (offset-aware under row-group pruning), column-mapping physical
-        names grafted back (zero-copy), foreign partition-column values
-        attached from the add action, pre-DDL columns as typed nulls.
-        Every data byte goes through the _io_* pyarrow seam (one cached
-        filesystem client per authority — never a JVM parquet scan, and
-        never pq.read_table's own per-path URI resolution). Shared by
-        the pk-diff classifier and the readChangeFeed CDF path."""
-        import pyarrow as pa
-
-        from cdc_apache_cassandra_spark.streaming.delta_log import (
-            _io_parquet_file,
-        )
-
-        # entries are (path, dv, pv) from _entry; the cdc mode's
-        # oversized-file split appends a 4th element — the row-group
-        # indexes this partition owns
-        p, dv, pv, *rest = entry
-        rgs = rest[0] if rest else None
-        pf = _io_parquet_file(p)
-        keep = (
-            None
-            if partition.key_range is None
-            else self._row_groups_in_range(partition, pf)
-        )
-        if rgs is not None:
-            # the split's row groups; intersect with any key-range
-            # pruning (cdc mode never sets key_range today, but the
-            # composition must stay sound if it ever does). keep now
-            # reflects exactly the groups read, so the DV ordinal
-            # offsets below stay correct.
-            keep = rgs if keep is None else [g for g in keep if g in set(rgs)]
-        if keep is None:
-            t = pf.read()
-        elif keep:
-            t = pf.read_row_groups(keep)
-        else:
-            t = pf.schema_arrow.empty_table()
-        partition.rows_loaded += t.num_rows
-        if dv is not None and t.num_rows:
-            # rows masked by the file's deletion vector are not
-            # part of this side's logical state — filter by FILE
-            # ordinal (offset by the skipped row groups' counts
-            # when footer pruning kept a subset)
-            import numpy as np
-
-            from cdc_apache_cassandra_spark.streaming.delta_log import (
-                _io_read_bytes,
-            )
-            from cdc_apache_cassandra_spark.streaming.deletion_vectors import (
-                load_dv_indexes,
-            )
-
-            idx = load_dv_indexes(self.path, dv, _io_read_bytes)
-            md = pf.metadata
-            counts = [
-                md.row_group(g).num_rows
-                for g in range(md.num_row_groups)
-            ]
-            offsets = np.concatenate(([0], np.cumsum(counts)))
-            groups = (
-                range(md.num_row_groups) if keep is None else keep
-            )
-            positions = np.concatenate(
-                [np.arange(offsets[g], offsets[g + 1]) for g in groups]
-            )
-            t = t.filter(pa.array(~np.isin(positions, idx)))
-        present = set(t.column_names)
-        arrays = []
-        nm = self._file_names(partition, pf)
-        for f in table_fields:
-            pn = nm.get(f.name, f.name)
-            if pn not in present:
-                if pv and f.name in pv:
-                    # PARTITION column: the value lives in the
-                    # add action, not the parquet — a constant
-                    # per file (string-serialized per spec;
-                    # Arrow cast parses ISO dates/timestamps,
-                    # numerics, booleans)
-                    sval = pv[f.name]
-                    arrays.append(
-                        pa.nulls(t.num_rows, type=f.type)
-                        if sval is None
-                        else pa.array(
-                            [sval] * t.num_rows, type=pa.string()
-                        ).cast(f.type)
-                    )
-                    continue
-                # pre-DDL files: typed nulls
-                arrays.append(pa.nulls(t.num_rows, type=f.type))
-                continue
-            col = t.column(pn).combine_chunks()
-            if partition.ids:
-                # ID mode: realign nested structs by parquet
-                # field id (the JVM path's rule) — positional
-                # grafting would silently swap reordered fields
-                node = partition.ids.get(f.name) or {}
-                col = _align_by_id(col, f.type, node.get("children"))
-                arrays.append(col)
-                continue
-            # name-mapped files: graft the LOGICAL names onto
-            # the physical type (zero-copy, names only); type
-            # promotions stay with the cast below
-            nt = _renamed_type(col.type, f.type)
-            arrays.append(col.view(nt) if nt != col.type else col)
-        t = pa.table({f.name: a for f, a in zip(table_fields, arrays)})
-        return t.cast(table_schema)
+        return _classify(partition, to_arrow_schema(self.schema))
 
     def _read_cdc(self, partition: _ChangePartition):
         """readChangeFeed execution: every entry reads INDEPENDENTLY —
@@ -1446,7 +1718,7 @@ class ChangeFeedStreamReader(DataSourceStreamReader):
         load_schema = pa.schema(load_fields)
         ts_type = out_schema.field("_commit_timestamp").type
         for entry in partition.post:
-            t = self._load_file(partition, entry, load_fields, load_schema)
+            t = _load_file(partition, entry, load_fields, load_schema)
             n = t.num_rows
             if not n:
                 continue
@@ -1470,168 +1742,6 @@ class ChangeFeedStreamReader(DataSourceStreamReader):
             yield from (
                 t.select(out_schema.names).cast(out_schema).to_batches()
             )
-
-    def _read_diff(self, partition: _ChangePartition):
-        if not partition.pre and not partition.post:
-            return
-        import pandas as pd
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        out_schema = to_arrow_schema(self.schema)
-        table_fields = [
-            f for f in out_schema
-            if f.name not in ("_change_type", "_commit_version")
-        ]
-        table_schema = pa.schema(table_fields)
-        cols = [f.name for f in table_fields]
-
-        col0 = self.pk_cols[0]
-
-        def key_numeric(series: pd.Series) -> pd.Series:
-            """The pk column in the partition's normalized key space
-            ('ts' → epoch micros, 'date' → epoch days) — a single Arrow
-            cast, nulls preserved as NaN. Timestamps store epoch micros
-            regardless of tz, matching _stat_key's UTC normalization."""
-            if partition.key_kind == "num":
-                return series
-            arr = pa.chunked_array([pa.Array.from_pandas(series)])
-            if pa.types.is_timestamp(arr.type):
-                if arr.type.unit != "us":
-                    arr = arr.cast(pa.timestamp("us", tz=arr.type.tz))
-                arr = arr.cast(pa.int64())
-            elif pa.types.is_date(arr.type):
-                arr = arr.cast(pa.date32()).cast(pa.int32())
-            # ArrowDtype keeps int64 exact (a float64 round-trip would
-            # blur micros past 2^53) and nulls as pd.NA — the existing
-            # masks fillna(False), so NA rows fall to the null branch
-            out = arr.to_pandas(types_mapper=pd.ArrowDtype)
-            out.index = series.index
-            return out
-
-        def key_slice(frame: pd.DataFrame) -> pd.DataFrame:
-            """Keep only this sub-partition's key slice — range mode
-            (lo <= pk[0] < hi; null keys in the first range) or hash
-            mode. Both sides slice with the same predicate, so a key's
-            pre and post rows always land in the same sub-partition."""
-            if not len(frame):
-                return frame
-            if partition.key_range is not None:
-                lo, hi = partition.key_range
-                if lo is None and hi is None:
-                    return frame
-                v = key_numeric(frame[col0])
-                if lo is None:
-                    m = v.isna() | (v < hi).fillna(False)
-                elif hi is None:
-                    m = (v >= lo).fillna(False)
-                else:
-                    m = ((v >= lo) & (v < hi)).fillna(False)
-                return frame[m]
-            if partition.split_count <= 1:
-                return frame
-            h = pd.util.hash_pandas_object(
-                frame[self.pk_cols].astype(object), index=False
-            ).to_numpy()
-            return frame[(h % partition.split_count) == partition.split_idx]
-
-        def load(paths) -> pd.DataFrame:
-            # per-file decode/graft/DV-filter lives in _load_file (the
-            # _io_* pyarrow seam); slice PER FILE: a split partition
-            # holds at most one file plus its own key slice in memory,
-            # never the group
-            frames = [
-                key_slice(
-                    self._load_file(partition, e, table_fields, table_schema)
-                    .to_pandas(types_mapper=pd.ArrowDtype)
-                )
-                for e in paths
-            ]
-            if not frames:
-                return pa.Table.from_pylist([], schema=table_schema).to_pandas(
-                    types_mapper=pd.ArrowDtype
-                )
-            return pd.concat(frames, ignore_index=True)
-
-        pre = load(partition.pre)
-        post = load(partition.post)
-        value_cols = [c for c in cols if c not in self.pk_cols]
-        m = pre.merge(
-            post,
-            on=self.pk_cols,
-            how="outer",
-            suffixes=("__pre", "__post"),
-            indicator=True,
-        )
-        if value_cols:
-            same = None
-            for c in value_cols:
-                a, b = m[f"{c}__pre"], m[f"{c}__post"]
-                try:
-                    eq = a == b
-                except Exception:
-                    # nested types (struct/list/map): Arrow has no
-                    # 'equal' kernel — convert through to_pylist so
-                    # elements are plain dict/list/tuple (deep __eq__;
-                    # astype(object) would yield np.ndarray elements for
-                    # list columns, whose == raises). NaN nested inside
-                    # a list/struct never equals itself under Python ==
-                    # (an unchanged row would emit a spurious update
-                    # pair), so canonicalize every nested NaN to one
-                    # identity-equal sentinel first — matching the
-                    # top-level columns, where the isna() term cancels
-                    # unchanged NaNs. Bounded by the partition's rows.
-                    def canon(v):
-                        if isinstance(v, float) and v != v:
-                            return _NAN_SENTINEL
-                        if isinstance(v, list):
-                            return [canon(x) for x in v]
-                        if isinstance(v, tuple):
-                            return tuple(canon(x) for x in v)
-                        if isinstance(v, dict):
-                            return {k: canon(x) for k, x in v.items()}
-                        return v
-
-                    def plain(s):
-                        arr = pa.chunked_array([pa.Array.from_pandas(s)])
-                        return pd.Series(
-                            [canon(v) for v in arr.to_pylist()],
-                            index=s.index,
-                            dtype=object,
-                        )
-
-                    eq = plain(a) == plain(b)
-                eq = eq.fillna(False) | (a.isna() & b.isna())
-                if a.dtype.kind == "f":
-                    # Spark eqNullSafe (the batch CDF path,
-                    # delta_log.delta_changes) treats NaN as equal to
-                    # NaN — match it, or an unchanged NaN row would
-                    # emit a spurious update pair on the stream only
-                    eq |= (a != a).fillna(False) & (b != b).fillna(False)
-                same = eq if same is None else (same & eq)
-        else:
-            same = pd.Series(True, index=m.index)
-
-        def emit(mask, side: str, change: str) -> pd.DataFrame:
-            sel = m[mask]
-            out = pd.DataFrame(index=sel.index)
-            for c in cols:
-                out[c] = sel[c] if c in self.pk_cols else sel[f"{c}__{side}"]
-            out["_change_type"] = change
-            return out
-
-        parts = [
-            emit(m["_merge"] == "right_only", "post", "insert"),
-            emit(m["_merge"] == "left_only", "pre", "delete"),
-            emit((m["_merge"] == "both") & ~same, "pre", "update_preimage"),
-            emit((m["_merge"] == "both") & ~same, "post", "update_postimage"),
-        ]
-        out = pd.concat(parts, ignore_index=True)
-        out["_commit_version"] = partition.to_version
-        result = pa.Table.from_pandas(out, preserve_index=False).select(
-            out_schema.names
-        ).cast(out_schema)
-        yield from result.to_batches()
 
     # -- lifecycle -----------------------------------------------------------
     def commit(self, end: dict) -> None:

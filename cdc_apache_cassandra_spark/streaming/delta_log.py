@@ -794,6 +794,26 @@ def delta_log_replay(out_path: str) -> tuple[int, dict[str, dict], dict | None]:
     return s.last, s.files, s.meta
 
 
+def _file_identity(files: dict) -> dict:
+    """``{(path, deletion-vector id): (path, add)}`` over a replayed
+    file map — the identity every file diff keys on. A delta-spark
+    DELETE re-adds the SAME parquet path under a new deletion vector,
+    so a path-only diff would see that commit as data-free. The DV id
+    is computed only for adds that carry one, and deliberately not
+    gated on the protocol's deletionVectors flag: a spec-sloppy foreign
+    writer that attaches a DV without declaring the feature still has
+    its deletes seen."""
+    from cdc_apache_cassandra_spark.streaming.deletion_vectors import (
+        dv_unique_id,
+    )
+
+    ids = {}
+    for p, a in files.items():
+        dv = a.get("deletionVector")
+        ids[(p, dv_unique_id(dv) if dv else None)] = (p, a)
+    return ids
+
+
 class LocalLogCommitStore:
     """Create-only publication on POSIX: full content to a temp file,
     then ``os.link`` into place — readers never observe a torn commit, a
@@ -2017,13 +2037,12 @@ def _export_view(
             "active_view_fn must preserve the __bucket column "
             "(operate on state rows, do not project it away)"
         )
-    if plan.dv_candidates or plan.cdf_on:
+    if plan.dv_candidates:
         # the DV planner's two jobs (count-by-bucket gate, set-equality
-        # verify), the staging write and the CDF classification would
-        # each re-read the changed buckets' store files — persist the
-        # view once (scoped-tracked AND explicitly released after its
-        # last use; on an exception in between, the scope tracking is
-        # the backstop)
+        # verify) and the staging write would each re-read the changed
+        # buckets' store files — persist the view once (scoped-tracked
+        # AND explicitly released after its last use; on an exception
+        # in between, the scope tracking is the backstop)
         from cdc_apache_cassandra_spark.caching import persist_scoped
 
         live = persist_scoped(live)
@@ -2146,12 +2165,10 @@ def _stage_buckets(
         else:
             _io_mkdirs(staging)  # the caller's cleanup expects the dir
     finally:
-        if plan.dv_candidates and not plan.cdf_on:
+        if plan.dv_candidates:
             # release AND drop the ledger entry (looping callers outside
             # the registry/bench would otherwise accumulate one dead
-            # reference per export). With CDF on, the change
-            # classification is the view's actual last use — the
-            # caller releases there.
+            # reference per export)
             from cdc_apache_cassandra_spark.caching import release_one
 
             release_one(live)
@@ -2236,7 +2253,6 @@ def _export_cdf_actions(
     out_path: str,
     plan: _ExportPlan,
     log: "_LogState",
-    live: DataFrame,
     actions: list[dict],
     schema_json: str,
     mapped_fields: list[dict] | None,
@@ -2246,44 +2262,43 @@ def _export_cdf_actions(
     none; a mixed commit MUST carry cdc actions (readers treat them as
     authoritative and refuse a mixed commit without them) — including
     the rare rewrite that changed no row, which ships one EMPTY cdc
-    file rather than an unreadable commit. Pre image = every touched
-    bucket's published file (changed rewrites + drops), read under the
-    NEW schema; post image = the staged rows; classification is the
-    SAME pk join delta_changes uses. Distributed end to end — the
-    driver handles file names only."""
-    pre_entries = [
-        (plan.published[b][0], log.files[plan.published[b][0]])
-        for b in plan.changed + plan.dropped
-        if b in plan.published and plan.published[b][0] is not None
-    ]
-    if not pre_entries or not any("add" in a for a in actions):
-        return []
-    pseudo_meta = {
+    file rather than an unreadable commit. The change rows are the
+    pk-diff of the committed files (``log.files``) against the files
+    after this commit's ``actions`` — adds, removes, DV re-points and
+    dropped buckets' removes — both read under the NEW schema, planned
+    and classified exactly as :func:`delta_changes` does. The staged
+    files are already published, so workers read them like any data
+    file; the driver handles file names only."""
+    from cdc_apache_cassandra_spark.sources.change_feed_source import (
+        plan_pk_diff,
+        run_pk_diff,
+    )
+
+    post = dict(log.files)
+    for a in actions:
+        if "remove" in a:
+            post.pop(a["remove"]["path"], None)
+    # within a commit an add wins over a remove of the same path (a DV
+    # re-point), as replay applies it
+    post.update({a["add"]["path"]: a["add"] for a in actions if "add" in a})
+    meta = {
         "schemaString": schema_json,
         "partitionColumns": [],
         "configuration": plan.cfg,
     }
-    logical = T.StructType.fromJson(json.loads(schema_json))
-    post_df = live.drop("__bucket")
-    for f in logical.fields:
-        if f.name not in post_df.columns:
-            # re-export of an old narrow bucket: the reconciled schema
-            # keeps columns this batch's rows lack — typed nulls, the
-            # same rule the scan applies to pre-DDL files
-            post_df = post_df.withColumn(f.name, F.lit(None).cast(f.dataType))
-    changes = _classify_changes(
-        _scan_adds(spark, out_path, pre_entries, pseudo_meta),
-        post_df,
-        plan.cdf_pk,
-        logical.names,
+    parts = plan_pk_diff(
+        out_path, log.files, post, meta, plan.cdf_pk, plan.version
     )
+    n_pre = len({e[0] for p in parts for e in p.pre})
+    if not n_pre or not any(p.post for p in parts):
+        return []
+    logical = T.StructType.fromJson(json.loads(schema_json))
+    changes = run_pk_diff(spark, parts, logical).drop("_commit_version")
     if mapped_fields is not None:
         # cdc files of a mapped table store data under PHYSICAL names;
         # _change_type keeps its literal name (spec passthrough)
         changes = _to_physical(changes, mapped_fields)
-    return _publish_cdc_files(
-        out_path, plan.version, changes, min(32, max(1, len(pre_entries)))
-    )
+    return _publish_cdc_files(out_path, plan.version, changes, min(32, n_pre))
 
 
 def _export_protocol_action(
@@ -2419,15 +2434,16 @@ def delta_export(
     serve the export's feed with no primary key and no file diffing.
     Pure-insert and pure-remove commits deliberately write NO cdc
     files — the spec has readers synthesize those, exactly what
-    delta-spark does. The change rows come from the SAME pk-join
-    classification :func:`delta_changes` uses (``cdf_pk_cols`` — the
-    row identity; persisted in the table configuration so later
-    exports keep writing the feed without re-passing either flag).
-    Composes with ``deletion_vectors``: a DV re-add is a mixed commit,
-    and its pre image (the published file minus its OLD deletion
-    vector) against the bucket's staged live rows classifies to
-    exactly the newly masked rows' deletes — the same generic
-    classification, no DV-specific path."""
+    delta-spark does. The change rows are the pk-diff of the committed
+    files against this commit's published ones, planned and classified
+    by the same planner and classifier :func:`delta_changes` runs
+    (``cdf_pk_cols`` — the row identity; persisted in the table
+    configuration so later exports keep writing the feed without
+    re-passing either flag). Composes with ``deletion_vectors``: a DV
+    re-add is a mixed commit, and its pre image (the published file
+    minus its OLD deletion vector) against the same file under its NEW
+    one classifies to exactly the newly masked rows' deletes — the
+    same generic classification, no DV-specific path."""
     manifest = _export_manifest(
         store_path, out_path, manifest_store, active_view_fn
     )
@@ -2483,27 +2499,16 @@ def delta_export(
             if staging is not None:
                 _io_rmtree(staging)
         actions += _repoint_actions(plan, dv_buckets, now)
-        if plan.cdf_on:
-            from cdc_apache_cassandra_spark.caching import release_one
-
-            try:
-                actions += _export_cdf_actions(
-                    spark,
-                    out_path,
-                    plan,
-                    log,
-                    live,
-                    actions,
-                    schema_json,
-                    mapped_fields,
-                )
-            finally:
-                release_one(live)
-    # commit
     now = _now_ms()
     for b in plan.dropped:
         if plan.published[b][0] is not None:
             actions.append(_remove_action(plan.published[b][0], now))
+    if plan.cdf_on and plan.changed:
+        actions += _export_cdf_actions(
+            spark, out_path, plan, log, actions, schema_json, mapped_fields
+        )
+    # commit
+    now = _now_ms()
     schema_changed = schema_json is not None and (
         log.meta is None or log.meta["schemaString"] != schema_json
     )
@@ -2615,24 +2620,11 @@ def delta_restore(
     tgt = _replay(out_path, version)
     if tgt.meta is None:
         raise ValueError(f"{out_path}: no snapshot at version {version}")
-    from cdc_apache_cassandra_spark.streaming.deletion_vectors import (
-        dv_unique_id,
-    )
-
-    def keyed(files: dict) -> dict:
-        return {
-            (
-                p,
-                dv_unique_id(dv) if (dv := a.get("deletionVector")) else None,
-            ): (p, a)
-            for p, a in files.items()
-        }
-
     for _ in range(max_attempts):
         cur = _replay(out_path)
         if cur.meta is None:
             raise FileNotFoundError(f"no Delta log at {out_path}")
-        k_cur, k_tgt = keyed(cur.files), keyed(tgt.files)
+        k_cur, k_tgt = _file_identity(cur.files), _file_identity(tgt.files)
         add_back = [
             k_tgt[k] for k in sorted(k_tgt.keys() - k_cur.keys(), key=repr)
         ]
@@ -3762,11 +3754,16 @@ def delta_changes(
     surface (``table_changes``) derived from a plain add/remove log, no
     persisted _change_data files needed: the exporter rewrites whole
     buckets, so the NET file diff between the versions contains every
-    changed row (plus unchanged neighbors, cancelled below).
+    changed row (plus unchanged neighbors, which cancel).
 
     Reads ONLY the diff: files removed across the range (pre image) and
-    files added (post image) — IO ∝ changed buckets, never the table.
-    A full outer join on the primary key classifies each key:
+    files added (post image), keyed by (path, deletion vector) — IO ∝
+    changed buckets, never the table. Both versions replay on the
+    driver; the diff is planned and classified by the stream source's
+    planner and classifier (``change_feed_source.plan_pk_diff`` /
+    ``run_pk_diff``): one batch job, at most one task per core for a
+    bucket-tagged table, each merging its buckets' pre and post rows on
+    the primary key —
 
       post only                          -> ``insert``
       pre only                           -> ``delete`` (pre row emitted)
@@ -3791,107 +3788,16 @@ def delta_changes(
     s_to = _replay(out_path, to_version)
     if s_to.meta is None:
         raise FileNotFoundError(f"no Delta log at {out_path}")
+    from cdc_apache_cassandra_spark.sources.change_feed_source import (
+        plan_pk_diff,
+        run_pk_diff,
+    )
+
+    parts = plan_pk_diff(
+        out_path, s_from.files, s_to.files, s_to.meta, pk_cols, to_version
+    )
     schema = T.StructType.fromJson(json.loads(s_to.meta["schemaString"]))
-    # the diff identity is (path, deletion vector), not path alone: a
-    # delta-spark DELETE/UPDATE with DVs re-adds the SAME parquet path
-    # with a different DV — under a path-only diff that version would
-    # look like no change at all. A file whose DV changed contributes
-    # its from-state (old DV mask) to the pre image and its to-state to
-    # the post image; unchanged rows cancel in the null-safe join like
-    # any bucket-rewrite neighbor.
-    # DV work is conditional PER ADD (one dict.get for the common no-DV
-    # file) and deliberately not gated on the protocol flag: a
-    # spec-sloppy foreign writer that attaches a DV without declaring
-    # the feature must still have its deletes seen.
-    from cdc_apache_cassandra_spark.streaming.deletion_vectors import (
-        dv_unique_id,
-    )
-
-    def identity(files: dict) -> dict:
-        return {
-            (
-                p,
-                dv_unique_id(dv) if (dv := a.get("deletionVector")) else None,
-            ): (p, a)
-            for p, a in files.items()
-        }
-
-    id_from, id_to = identity(s_from.files), identity(s_to.files)
-    removed = [id_from[k] for k in sorted(id_from.keys() - id_to.keys(), key=repr)]
-    added = [id_to[k] for k in sorted(id_to.keys() - id_from.keys(), key=repr)]
-
-    def read(entries):
-        return _scan_adds(spark, out_path, entries, s_to.meta)
-
-    cols = schema.names
-    return _classify_changes(read(removed), read(added), pk_cols, cols).withColumn(
-        "_commit_version", F.lit(to_version).cast("long")
-    )
-
-
-def _classify_changes(
-    pre_df: DataFrame, post_df: DataFrame, pk_cols: list[str], cols: list[str]
-) -> DataFrame:
-    """The pk-join change classification SHARED by :func:`delta_changes`
-    (reading a committed file diff) and the export-time CDF writer
-    (classifying pre-commit state against the staged rows): full outer
-    join on the primary key —
-
-      post only                          -> ``insert``
-      pre only                           -> ``delete`` (pre row emitted)
-      both, rows null-safe identical     -> no change (bucket-rewrite
-                                            neighbors cancel here)
-      both, differing                    -> ``update_preimage`` +
-                                            ``update_postimage``
-
-    Output = ``cols`` + ``_change_type``. One shuffle on the pk; every
-    comparison is JVM-side (eqNullSafe, so NaN==NaN and null==null)."""
-    # explicit presence markers: inferring existence from pk nullability
-    # (pk IS NOT NULL after the outer join) misclassifies rows when the
-    # caller's first pk column is genuinely nullable in data (e.g. a
-    # compound clustering key ordered first — partition-level rows carry
-    # a null clustering key)
-    pre = pre_df.select(
-        *[F.col(c).alias(f"__pre_{c}") for c in cols],
-        F.lit(True).alias("__pre_present"),
-    )
-    post = post_df.select(
-        *[F.col(c).alias(f"__post_{c}") for c in cols],
-        F.lit(True).alias("__post_present"),
-    )
-    cond = None
-    for k in pk_cols:
-        c = F.col(f"__pre_{k}").eqNullSafe(F.col(f"__post_{k}"))
-        cond = c if cond is None else cond & c
-    joined = pre.join(post, cond, "full_outer")
-    pre_exists = F.col("__pre_present").isNotNull()
-    post_exists = F.col("__post_present").isNotNull()
-    same_row = F.struct(*[F.col(f"__pre_{c}") for c in cols]).eqNullSafe(
-        F.struct(*[F.col(f"__post_{c}") for c in cols])
-    )
-
-    inserts = joined.filter(post_exists & ~pre_exists).select(
-        *[F.col(f"__post_{c}").alias(c) for c in cols],
-        F.lit("insert").alias("_change_type"),
-    )
-    deletes = joined.filter(pre_exists & ~post_exists).select(
-        *[F.col(f"__pre_{c}").alias(c) for c in cols],
-        F.lit("delete").alias("_change_type"),
-    )
-    changed = joined.filter(pre_exists & post_exists & ~same_row)
-    upd_pre = changed.select(
-        *[F.col(f"__pre_{c}").alias(c) for c in cols],
-        F.lit("update_preimage").alias("_change_type"),
-    )
-    upd_post = changed.select(
-        *[F.col(f"__post_{c}").alias(c) for c in cols],
-        F.lit("update_postimage").alias("_change_type"),
-    )
-    return (
-        inserts.unionByName(deletes)
-        .unionByName(upd_pre)
-        .unionByName(upd_post)
-    )
+    return run_pk_diff(spark, parts, schema)
 
 
 def commit_timestamps(
@@ -4298,22 +4204,9 @@ def delta_changes_since(
     s = _replay(out_path)
     if s.last <= last_version:
         return None, last_version
-    from cdc_apache_cassandra_spark.streaming.deletion_vectors import (
-        dv_unique_id,
-    )
-
-    def file_ids(files: dict) -> set:
-        # (path, deletion vector) — a DV-only commit (delta-spark row
-        # delete) changes rows without changing any path; the DV id is
-        # computed only for adds that actually carry one
-        return {
-            (p, dv_unique_id(dv) if (dv := a.get("deletionVector")) else None)
-            for p, a in files.items()
-        }
-
-    if last_version >= 0 and file_ids(
+    if last_version >= 0 and _file_identity(
         _replay(out_path, last_version).files
-    ) == file_ids(s.files):
+    ).keys() == _file_identity(s.files).keys():
         # the log advanced but only with data-free commits (consumer
         # txn watermarks, metadata): no change rows exist — advance the
         # cursor without running any Spark job

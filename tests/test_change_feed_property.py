@@ -1,8 +1,9 @@
 """VERDICT r7 item 6: property-test the cdc_delta_changes source under
 random pacing — random commit histories × random maxVersionsPerBatch ×
 random restart points ⇒ the concatenated stream output equals an
-INDEPENDENT pure-Python net-diff oracle per consumed window, and the
-windows tile [startingVersion, last] exactly once.
+INDEPENDENT pure-Python net-diff oracle (tests/change_oracle.py) per
+consumed window, and the windows tile [startingVersion, last] exactly
+once.
 
 The engine loop is simulated against the reader class directly (the
 same call order Spark 4.1 uses — latestOffset before initialOffset on
@@ -30,6 +31,7 @@ from cdc_apache_cassandra_spark.streaming.delta_log import (
     delta_export,
 )
 from cdc_apache_cassandra_spark.streaming.materialize import merge_into
+from tests.change_oracle import net_diff
 
 SCHEMA = (
     "op string, pk long, writetime long, v string, segment long, position long"
@@ -99,20 +101,6 @@ def _state_at(table: str, version: int) -> dict:
         for r in pq.read_table(os.path.join(table, rel)).to_pylist():
             out[r["pk"]] = tuple(r[c] for c in COLS)
     return out
-
-
-def _diff(pre: dict, post: dict, to_v: int) -> list[tuple]:
-    rows = []
-    for pk, row in post.items():
-        if pk not in pre:
-            rows.append(row + ("insert", to_v))
-        elif pre[pk] != row:
-            rows.append(pre[pk] + ("update_preimage", to_v))
-            rows.append(row + ("update_postimage", to_v))
-    for pk, row in pre.items():
-        if pk not in post:
-            rows.append(row + ("delete", to_v))
-    return sorted(rows)
 
 
 def _drive(table, start_version, max_versions, restart_after):
@@ -194,7 +182,7 @@ def test_paced_restarting_stream_equals_net_diff_oracle(spark, scenario):
 
         # each window's rows == the independent net-diff oracle
         for f, t, rows in windows:
-            want = _diff(_state_at(table, f), _state_at(table, t), t)
+            want = net_diff(_state_at(table, f), _state_at(table, t), t)
             assert rows == want, (f, t)
     finally:
         shutil.rmtree(root, ignore_errors=True)

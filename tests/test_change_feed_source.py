@@ -990,3 +990,69 @@ def test_starting_timestamp_inclusive_and_boundaries(spark, tmp_path):
 
     with pytest.raises(Exception, match="not both"):
         _tail(spark, table, startingVersion=0, startingTimestamp=str(ts_of[1]))
+
+
+def test_pk_diff_packs_buckets_into_one_partition_per_core(spark, tmp_path):
+    """A diff touching every bucket of a 16-bucket store plans at most
+    one partition per core; each bucket's pre and post files sit in
+    exactly one partition (a key never leaves its bucket, so a merge
+    over several buckets classifies like each bucket alone); the rows
+    equal the pure-Python net diff; and the batch feed's classify stage
+    runs at most one task per core."""
+    import pyarrow.parquet as pq
+
+    from cdc_apache_cassandra_spark.session import default_parallelism
+    from cdc_apache_cassandra_spark.sources.change_feed_source import (
+        plan_pk_diff,
+    )
+    from cdc_apache_cassandra_spark.streaming.delta_log import _replay
+    from tests.change_oracle import net_diff
+
+    base = [("INSERT", k, 10, f"v{k}", 0, k) for k in range(256)]
+    batch = (
+        [("DELETE", k, 20, None, 1, k) for k in range(0, 256, 4)]
+        + [("UPDATE", k, 20, f"u{k}", 1, k) for k in range(1, 256, 4)]
+        + [("INSERT", k, 20, f"n{k}", 1, k) for k in range(256, 320)]
+    )
+    _, table = _build(spark, tmp_path, batches=(base, batch), n_buckets=16)
+    s0, s1 = _replay(table, 0), _replay(table, 1)
+    cores = default_parallelism()
+    parts = plan_pk_diff(table, s0.files, s1.files, s1.meta, ["pk"], 1)
+    assert len(parts) <= cores
+    with pytest.raises(ValueError, match="not in the table schema"):
+        plan_pk_diff(table, s0.files, s1.files, s1.meta, ["nope"], 1)
+
+    where: dict[str, set] = {}  # bucket -> partitions holding its files
+    for i, p in enumerate(parts):
+        for entries, files in ((p.pre, s0.files), (p.post, s1.files)):
+            for e in entries:
+                rel = os.path.relpath(e[0], table)
+                where.setdefault(files[rel]["tags"]["bucket"], set()).add(i)
+    assert sorted(map(int, where)) == list(range(16))
+    assert all(len(ps) == 1 for ps in where.values())
+
+    cols = ["op", "pk", "writetime", "v", "segment", "position"]
+
+    def state(s):
+        return {
+            r["pk"]: tuple(r[c] for c in cols)
+            for rel in s.files
+            for r in pq.read_table(os.path.join(table, rel)).to_pylist()
+        }
+
+    sc = spark.sparkContext
+    group = f"pk-diff-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "delta_changes")
+    try:
+        got = delta_changes(spark, table, 0, 1, ["pk"]).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sorted(map(tuple, got)) == net_diff(state(s0), state(s1), 1)
+    tracker = sc.statusTracker()
+    tasks = [
+        tracker.getStageInfo(stage).numTasks
+        for job in tracker.getJobIdsForGroup(group)
+        for stage in tracker.getJobInfo(job).stageIds
+    ]
+    assert tasks and max(tasks) <= cores

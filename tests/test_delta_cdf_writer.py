@@ -20,6 +20,7 @@ from cdc_apache_cassandra_spark.streaming.delta_log import (
     delta_export,
 )
 from cdc_apache_cassandra_spark.streaming.materialize import merge_into
+from tests.change_oracle import net_diff
 
 SCHEMA = (
     "op string, pk long, writetime long, v string, segment long, position long"
@@ -364,8 +365,10 @@ def test_randomized_cdf_lifecycle_matches_pk_diff(spark, tmp_path):
     randomly toggled deletion_vectors flag — after EVERY committed
     export, the per-commit CDF read (stored cdc files, or synthesis
     for pure commits) must equal the pk-diff classification over the
-    same window. The fuzzed twin of the per-scenario tests above, and
-    the strongest writer/reader cross-pin we have."""
+    same window, and the pk-diff feed must equal the pure-Python net
+    diff of the two versions' snapshots. The fuzzed twin of the
+    per-scenario tests above, and the strongest writer/reader cross-pin
+    we have."""
     import random
 
     from cdc_apache_cassandra_spark.streaming.delta_log import (
@@ -396,10 +399,27 @@ def test_randomized_cdf_lifecycle_matches_pk_diff(spark, tmp_path):
             )
         return spark.createDataFrame(rows, LSCHEMA)
 
+    def snapshot(version, cols):
+        return {
+            r.pk: tuple(r)
+            for r in read_delta(spark, out, version=version)
+            .select(cols)
+            .collect()
+        }
+
     def check(v):
         feed = delta_changes_cdf(spark, out, v, v)
         cols = [c for c in feed.columns if c != "_commit_timestamp"]
         got = sorted(map(tuple, feed.select(cols).collect()))
+        # the pk-diff feed against an independent reference: the net
+        # diff of two DV-aware JVM snapshot scans, which share no code
+        # with the classifier
+        tcols = [c for c in cols if c not in ("_change_type", "_commit_version")]
+        pk_feed = delta_changes(spark, out, v - 1, v, ["pk"]).select(cols)
+        pre = snapshot(v - 1, tcols) if v > 0 else {}
+        assert sorted(map(tuple, pk_feed.collect())) == net_diff(
+            pre, snapshot(v, tcols), v
+        ), f"pk-diff != snapshot net diff at version {v}"
         if v == 0:
             snap = read_delta(spark, out, version=0)
             want = sorted(

@@ -956,6 +956,84 @@ def test_partitioned_foreign_composes_with_dv(spark, tmp_path):
     ]
 
 
+def test_partitioned_foreign_timestamp_values_batch_and_stream(spark, tmp_path):
+    """A foreign table partitioned by a ``timestamp`` column, holding
+    both serializations delta writers use for its partition values: a
+    zone-less ``YYYY-MM-DD HH:MM:SS[.ffffff]`` (session-local time, and
+    the engine's session zone is UTC) and a ``Z``-suffixed ISO-8601.
+    The snapshot read, the batch feed and the stream agree on the
+    listed rows; Arrow refuses a zone-less string cast straight to a
+    zoned timestamp, so the loader must parse it naive first."""
+    import datetime
+
+    from pyspark.sql import functions as F
+
+    root = str(tmp_path / "tspart")
+    os.makedirs(root)
+    values = ["2024-01-02 12:30:00.5", "2024-01-03T08:00:00.25Z"]
+    adds = []
+    for i, (ts, vals) in enumerate(zip(values, [[1, 2], [3]])):
+        t = pa.table({"pk": [10 * i + j for j in range(len(vals))], "v": vals})
+        add = fx.write_data_file(root, f"part-{i:03d}.parquet", t,
+                                 stats_cols=["pk"])
+        add["add"]["partitionValues"] = {"ts": ts}
+        adds.append(add)
+    meta = fx.metadata_action(
+        [fx.field("pk", "long"), fx.field("v", "long"),
+         fx.field("ts", "timestamp")],
+        partition_columns=["ts"],
+    )
+    fx.write_commit(root, 0, [fx.protocol_action(1, 2), meta] + adds)
+    # v1 rewrites both partitions: pk 0 and pk 10 change value
+    new_adds = []
+    for i, (ts, t) in enumerate(zip(values, [
+        pa.table({"pk": [0, 1], "v": [100, 2]}),
+        pa.table({"pk": [10], "v": [300]}),
+    ])):
+        add = fx.write_data_file(root, f"part-{i + 2:03d}.parquet", t,
+                                 stats_cols=["pk"])
+        add["add"]["partitionValues"] = {"ts": ts}
+        new_adds.append(add)
+    fx.write_commit(root, 1, [fx.remove_action(a) for a in adds] + new_adds)
+
+    def micros(*args):
+        utc = datetime.timezone.utc
+        dt = datetime.datetime(*args, tzinfo=utc)
+        epoch = datetime.datetime(1970, 1, 1, tzinfo=utc)
+        return (dt - epoch) // datetime.timedelta(microseconds=1)
+
+    t1 = micros(2024, 1, 2, 12, 30, 0, 500000)
+    t2 = micros(2024, 1, 3, 8, 0, 0, 250000)
+    snap = read_delta(spark, root).select(
+        "pk", "v", F.unix_micros("ts").alias("ts")
+    )
+    assert sorted(map(tuple, snap.collect())) == [
+        (0, 100, t1), (1, 2, t1), (10, 300, t2),
+    ]
+    want = [
+        (0, "update_postimage", 100, t1),
+        (0, "update_preimage", 1, t1),
+        (10, "update_postimage", 300, t2),
+        (10, "update_preimage", 3, t2),
+    ]
+
+    def changes(df):
+        return sorted(
+            map(tuple, df.select(
+                "pk", "_change_type", "v", F.unix_micros("ts")
+            ).collect())
+        )
+
+    assert changes(delta_changes(spark, root, 0, 1, ["pk"])) == want
+    # collected timestamps are naive local datetimes: .timestamp()
+    # inverts the conversion
+    got = sorted(
+        (r.pk, r._change_type, r.v, round(r.ts.timestamp() * 1_000_000))
+        for r in _stream_feed(spark, root, start=0)
+    )
+    assert got == want
+
+
 def _row_tracking_table(tmp_path):
     """The shape recent delta-spark writes with delta.enableRowTracking:
     writer-v7 protocol listing rowTracking+domainMetadata (writer-only
