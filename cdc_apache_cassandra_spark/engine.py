@@ -9,7 +9,8 @@ A reference user's mental model maps 1:1:
 | connector consumes events topic    | ``dedup(events)``                  |
 | MutationCache (cache.max.digest,   | ``mutation_cache(events)``         |
 |   cache.expire.after.ms)           |                                    |
-| CQL read-after-event + data topic  | ``to_records(events, snapshot)``   |
+| dedup → CQL read-after-event →     | ``to_records(events, snapshot)``   |
+|   data topic (batch or stream)     |                                    |
 | converged table state              | ``converged_state(events)``        |
 | backfill CLI                       | ``backfill(snapshot)`` + union     |
 | replay to a point in time          | ``snapshot_as_of(events, t)``      |
@@ -41,10 +42,7 @@ from cdc_apache_cassandra_spark.operators.lookup import (
 )
 from cdc_apache_cassandra_spark.operators.lww import last_write_wins
 from cdc_apache_cassandra_spark.sources.backfill import backfill_mutations
-from cdc_apache_cassandra_spark.streaming.pipeline import (
-    build_pipeline,
-    with_event_time,
-)
+from cdc_apache_cassandra_spark.streaming.pipeline import with_event_time
 from cdc_apache_cassandra_spark.streaming.state import mutation_cache_dedup
 
 
@@ -118,24 +116,6 @@ class CdcEngine:
                 ).alias("value"),
             )
         return recs
-
-    def pipeline(
-        self,
-        events: DataFrame,
-        snapshot: DataFrame,
-        pk_cols: list[str],
-        value_cols: list[str],
-    ) -> DataFrame:
-        """The full §3.2 slice (dedup → lookup → records), batch or
-        streaming by the input's nature."""
-        return build_pipeline(
-            events,
-            snapshot,
-            pk_cols,
-            value_cols,
-            ttl=self.config.ttl,
-            streaming=events.isStreaming,
-        )
 
     # --- state views --------------------------------------------------------
 

@@ -36,15 +36,22 @@ commit's own changes — intermediate states never collapse, unlike the
 pk-diff net-effect), and the output gains ``_commit_timestamp``.
 Change-data files are authoritative (their commit's add/remove ignored
 per spec); add-only commits synthesize inserts and remove-only commits
-deletes via the BATCH surface's shared planner
-(``delta_log._cdf_window_plan``), with the same loud refusals (no
+deletes (``delta_log._cdf_window_plan``), with loud refusals (no
 ``delta.enableChangeDataFeed``; a mixed commit without change-data
 files). The first batch from the default ``startingVersion=-1``
-bootstraps with the current snapshot as ``insert`` rows. Planning cuts
-each commit's files into ≤``maxBytesPerPartition`` chunks — every file
-reads independently (no join), so per-file parallelism is the natural
-unit; DV masks, column mapping (name + id mode) and foreign partition
-values ride the same per-file loader the pk-diff mode uses.
+bootstraps with the current snapshot as ``insert`` rows.
+
+This module holds the engine's ONE file-level change reader. The
+stream, the batch ``delta_log.delta_changes_cdf`` and RESTORE's
+change rows plan with :func:`plan_cdf` and read through
+:func:`_read_cdc`. Every file reads independently (no join), and each
+entry carries its own commit's stamp, so files of several commits
+share a partition and every row still carries its own commit's
+``_commit_version`` and ``_commit_timestamp``. Files pack into at most
+one partition per core, each under ``maxBytesPerPartition``; a single
+file over the bound splits by row groups. DV masks, column mapping
+(name + id mode) and foreign partition values ride the same per-file
+loader the pk-diff mode uses.
 
 Offsets ARE Delta versions: a micro-batch covers the net row-level change
 between two log versions (insert / delete / update_preimage /
@@ -56,8 +63,9 @@ collapse — the same contract Delta CDF batch reads have over a range.
 
 This module holds the engine's ONE pk-diff classifier. The batch feed
 (``delta_log.delta_changes``) and the export-time CDF writer plan with
-:func:`plan_pk_diff`, the same planner the stream runs, and classify
-the partitions through :func:`run_pk_diff`, one batch task each.
+:func:`plan_pk_diff`, the same planner the stream runs. Both kinds of
+planned partition run in a batch through :func:`run_changes`, one task
+each, which reads a partition exactly as the stream's ``read()`` does.
 
 Distribution: the exporter tags every ``add`` with its store bucket, and
 a bucket's keys never migrate, so each bucket's (pre-file, post-file)
@@ -123,6 +131,17 @@ CDF_FIELDS = [
     T.StructField("_change_type", T.StringType(), True),
     T.StructField("_commit_version", T.LongType(), True),
 ]
+
+
+def change_schema(schema: T.StructType, file_level: bool) -> T.StructType:
+    """The change rows' schema: the table's columns + ``CDF_FIELDS``,
+    and ``_commit_timestamp`` for file-level change rows (delta-spark's
+    CDF column set)."""
+    ts = [T.StructField("_commit_timestamp", T.TimestampType(), True)]
+    return T.StructType(
+        list(schema.fields) + CDF_FIELDS + (ts if file_level else [])
+    )
+
 
 #: identity-equal stand-in for float NaN inside NESTED values during the
 #: pandas classification: Python's ``nan == nan`` is False, so a deep
@@ -421,28 +440,31 @@ class _ChangePartition(InputPartition):
         key_kind: str = "num",
         phys: dict | None = None,
         ids: dict | None = None,
-        cdc_change: str | None = None,
-        commit_ts: int | None = None,
+        cdc: bool = False,
         root: str | None = None,
         pk_cols: list[str] | None = None,
     ):
         self.pre = pre
         self.post = post
+        # the pk diff's end version, stamped on every row; for a
+        # file-level partition the window's last commit (rows take
+        # their version from their entry's stamp)
         self.to_version = to_version
         # the table root (deletion-vector files resolve against it) and
         # the classification key: a partition carries all it needs, so
-        # the stream's read() and a batch task classify it alike
+        # the stream's read() and a batch task read it alike
         self.root = root
         self.pk_cols = pk_cols or []
-        # readChangeFeed mode (None = pk-diff classification): 'cdc' =
-        # the entries are CHANGE-DATA files whose rows carry their
-        # stored _change_type; 'insert'/'delete' = synthesized from a
-        # pure-insert / pure-delete commit, the constant IS the change
-        # type. Entries live in `post`; to_version is the entries'
-        # COMMIT version (not the batch end), commit_ts its monotonized
-        # epoch-ms timestamp — read() stamps both onto every row.
-        self.cdc_change = cdc_change
-        self.commit_ts = commit_ts
+        # file-level change rows (readChangeFeed, batch CDF, RESTORE)
+        # instead of pk-diff classification: `pre` is empty and each
+        # `post` entry is (path, dv, partition values, row-group
+        # indexes | None, stamp), stamp = (kind, commit version,
+        # monotonized commit epoch-ms). kind 'cdc' = a CHANGE-DATA file
+        # whose rows carry their stored _change_type; 'insert'/'delete'
+        # = a file of a pure-insert / pure-delete commit, the constant
+        # IS the change type. Entries of several commits may share a
+        # partition; each row is stamped from its own entry.
+        self.cdc = cdc
         # key-hash sub-range of an oversized group: this partition
         # classifies only keys with hash(pk) % split_count == split_idx
         # (sound — classification is key-local, both sides slice alike)
@@ -573,16 +595,16 @@ def _load_file(partition: _ChangePartition, entry, table_fields, table_schema):
     Every data byte goes through the _io_* pyarrow seam (one cached
     filesystem client per authority — never a JVM parquet scan, and
     never pq.read_table's own per-path URI resolution). Shared by
-    the pk-diff classifier and the readChangeFeed CDF path."""
+    the pk-diff classifier and the file-level change reader."""
     import pyarrow as pa
 
     from cdc_apache_cassandra_spark.streaming.delta_log import (
         _io_parquet_file,
     )
 
-    # entries are (path, dv, pv) from _entry; the cdc mode's
-    # oversized-file split appends a 4th element — the row-group
-    # indexes this partition owns
+    # entries are (path, dv, pv) from _entry; file-level entries append
+    # the row-group indexes this partition owns (None = the whole
+    # file) and their change stamp
     p, dv, pv, *rest = entry
     rgs = rest[0] if rest else None
     pf = _io_parquet_file(p)
@@ -593,8 +615,8 @@ def _load_file(partition: _ChangePartition, entry, table_fields, table_schema):
     )
     if rgs is not None:
         # the split's row groups; intersect with any key-range
-        # pruning (cdc mode never sets key_range today, but the
-        # composition must stay sound if it ever does). keep now
+        # pruning (file-level partitions never set key_range today,
+        # but the composition must stay sound if they ever do). keep now
         # reflects exactly the groups read, so the DV ordinal
         # offsets below stay correct.
         keep = rgs if keep is None else [g for g in keep if g in set(rgs)]
@@ -837,11 +859,64 @@ def _classify(partition: _ChangePartition, out_schema):
     yield from result.to_batches()
 
 
+def _read_cdc(partition: _ChangePartition, out_schema):
+    """The engine's one file-level change reader: Arrow record batches
+    of ``out_schema`` (the table's columns + ``_change_type``,
+    ``_commit_version``, ``_commit_timestamp``) for one planned
+    partition. Every entry reads INDEPENDENTLY — the change rows ARE
+    the files' rows (no pk join, no classification) — stamped from its
+    own entry: the stored ``_change_type`` column for 'cdc' change-data
+    files, the constant for synthesized insert/delete files, and its
+    commit's version and timestamp. Constants materialize via pa.repeat
+    + C casts, never a Python loop."""
+    if not partition.post:
+        return
+    import pyarrow as pa
+
+    meta_cols = ("_change_type", "_commit_version", "_commit_timestamp")
+    table_fields = [f for f in out_schema if f.name not in meta_cols]
+    # change-data files store the literal `_change_type` string column
+    # even under column mapping (spec rule) — read it through the same
+    # graft path, nulls if a spec-sloppy file lacks it
+    cdc_fields = table_fields + [pa.field("_change_type", pa.string())]
+    ts_type = out_schema.field("_commit_timestamp").type
+    for entry in partition.post:
+        kind, version, ts = entry[4]
+        fields = cdc_fields if kind == "cdc" else table_fields
+        t = _load_file(partition, entry, fields, pa.schema(fields))
+        n = t.num_rows
+        if not n:
+            continue
+        if kind != "cdc":
+            t = t.append_column(
+                "_change_type", pa.repeat(pa.scalar(kind, pa.string()), n)
+            )
+        t = t.append_column(
+            "_commit_version", pa.repeat(pa.scalar(version, pa.int64()), n)
+        )
+        t = t.append_column(
+            "_commit_timestamp",
+            pa.repeat(pa.scalar(ts, pa.int64()), n)
+            .cast(pa.timestamp("ms"))
+            .cast(ts_type),
+        )
+        yield from t.select(out_schema.names).cast(out_schema).to_batches()
+
+
+def _read_partition(partition: _ChangePartition, out_schema):
+    """One planned partition's change rows as Arrow record batches of
+    ``out_schema``: file-level rows or the pk-diff classification, by
+    the partition's kind. The stream's ``read()`` and every batch task
+    of :func:`run_changes` call this."""
+    return (_read_cdc if partition.cdc else _classify)(partition, out_schema)
+
+
 class _FilePlanner:
     """Driver-side planning over one table's files (metadata only): the
     column-mapping and partition-column plan, the entries partitions
-    carry, and the pk-diff partitions with their bucket packing and
-    key-range / key-hash splits. Holds ``path`` (the table root),
+    carry, the pk-diff partitions with their key-range / key-hash
+    splits, the file-level change partitions with their row-group
+    splits, and the packing both share. Holds ``path`` (the table root),
     ``pk_cols``, ``schema`` and ``max_bytes``; ``_setup_mapping`` fills
     ``_phys``, ``_ids`` and ``_part_cols``."""
 
@@ -946,7 +1021,13 @@ class _FilePlanner:
         ):
             n = min(64, max(1, -(-size // self.max_bytes))) if size else 1
             if n <= 1:
-                whole.append((size, pre_e, post_e))
+                whole.append(
+                    (
+                        size,
+                        [self._entry(*e) for e in pre_e],
+                        [self._entry(*e) for e in post_e],
+                    )
+                )
                 continue
             # oversized group (pathological bucket / untagged fallback).
             # Preferred split: key RANGES from the adds' file-level
@@ -997,13 +1078,15 @@ class _FilePlanner:
                 )
         return parts + self._pack(whole, to_v) or [self._part([], [], to_v)]
 
-    def _pack(self, groups: list, to_v: int) -> list[_ChangePartition]:
-        """Whole bucket groups ``(bytes, pre, post)`` packed into at most
-        one partition per core — more only where ``max_bytes`` forces
-        it — largest group first onto the lightest partition. A Python
-        task costs far more than a small bucket's classification, and a
-        key never leaves its bucket, so a merge over several buckets
-        classifies each key exactly as its bucket alone would."""
+    def _pack(self, groups: list, to_v: int, **kw) -> list[_ChangePartition]:
+        """Groups ``(bytes, pre entries, post entries)`` — whole buckets
+        of a pk diff, or single files of a file-level read — packed into
+        at most one partition per core — more only where ``max_bytes``
+        forces it — largest group first onto the lightest partition. A
+        Python task costs far more than a small bucket's classification
+        or a small file's read, and a key never leaves its bucket, so a
+        merge over several buckets classifies each key exactly as its
+        bucket alone would."""
         from cdc_apache_cassandra_spark.session import default_parallelism
 
         slots = default_parallelism()
@@ -1016,14 +1099,62 @@ class _FilePlanner:
                 light[0] += size
                 light[1] += pre
                 light[2] += post
-        return [
-            self._part(
-                [self._entry(*e) for e in pre],
-                [self._entry(*e) for e in post],
-                to_v,
-            )
-            for _, pre, post in bins
+        return [self._part(pre, post, to_v, **kw) for _, pre, post in bins]
+
+    def _cdf_partitions(
+        self, plans: list, commit_ts: dict
+    ) -> list[_ChangePartition]:
+        """File-level change partitions for ``(version, kind, [(rel,
+        add)])`` plans. Each entry carries its own commit's stamp, so
+        files of several commits pack together (:meth:`_pack`); a file
+        over ``max_bytes`` splits WITHIN itself by row groups (no join,
+        so any partition of the rows is sound) — a multi-GiB file never
+        materializes whole in one task. That footer read is driver-side
+        metadata, paid only for files over the bound."""
+        import os
+
+        last = max((v for v, _k, _f in plans), default=-1)
+        parts, whole = [], []
+        for v, kind, files in plans:
+            stamp = (kind, v, commit_ts.get(v))
+            for rel, a in files:
+                e = self._entry(os.path.join(self.path, rel), a)
+                size = int(a.get("size") or 0)
+                if size <= self.max_bytes:
+                    whole.append((size, [], [(*e, None, stamp)]))
+                    continue
+                for rgs in self._row_group_chunks(e[0]):
+                    parts.append(
+                        self._part([], [(*e, rgs, stamp)], last, cdc=True)
+                    )
+        return parts + self._pack(whole, last, cdc=True) or [
+            self._part([], [], last, cdc=True)
         ]
+
+    def _row_group_chunks(self, path: str) -> list[list[int]]:
+        """Row-group index chunks of one oversized file, each at most
+        ~``max_bytes`` by footer ``total_byte_size`` (uncompressed, so
+        chunks come out conservatively small). Always at least one
+        chunk; a single row group above the bound still gets its own
+        chunk — a row group is the smallest readable unit."""
+        from cdc_apache_cassandra_spark.streaming.delta_log import (
+            _io_parquet_file,
+        )
+
+        md = _io_parquet_file(path).metadata
+        chunks: list[list[int]] = []
+        cur: list[int] = []
+        cur_b = 0
+        for g in range(md.num_row_groups):
+            b = md.row_group(g).total_byte_size
+            if cur and cur_b + b > self.max_bytes:
+                chunks.append(cur)
+                cur, cur_b = [], 0
+            cur.append(g)
+            cur_b += b
+        if cur:
+            chunks.append(cur)
+        return chunks
 
     def _schema_kind(self) -> str | None:
         """The range-split key kind the LEADING pk column's declared
@@ -1215,24 +1346,46 @@ def plan_pk_diff(
     return planner._diff_partitions(files_from, files_to, to_version)
 
 
-def run_pk_diff(spark, parts: list[_ChangePartition], schema: T.StructType):
-    """Planned pk-diff partitions as one batch DataFrame — ``schema``'s
-    columns + ``_change_type`` + ``_commit_version`` — where task ``i``
-    classifies ``parts[i]`` exactly as the stream's read() does. The
+def plan_cdf(
+    root: str,
+    plans: list,
+    meta: dict,
+    commit_ts: dict,
+    max_bytes: int = _MAX_BYTES,
+) -> list[_ChangePartition]:
+    """The file-level change partitions for ``(version, kind, [(rel,
+    add)])`` plans over the table at ``root`` (the shape
+    ``delta_log._cdf_window_plan`` returns; kind 'cdc', 'insert' or
+    'delete') — the planner the stream, the batch CDF and RESTORE
+    share. ``meta`` decides how every file reads (column mapping,
+    partition columns); ``commit_ts`` maps a version to its monotonized
+    epoch-ms timestamp. At most one partition per core, each under
+    ``max_bytes``, plus the row-group splits of files over it; never
+    empty."""
+    planner = _FilePlanner()
+    planner.path, planner.pk_cols, planner.max_bytes = root, [], max_bytes
+    planner._setup_mapping(meta)
+    return planner._cdf_partitions(plans, commit_ts)
+
+
+def run_changes(spark, parts: list[_ChangePartition], schema: T.StructType):
+    """Planned change partitions — all pk-diff or all file-level — as
+    one batch DataFrame of :func:`change_schema`, where task ``i``
+    reads ``parts[i]`` exactly as the stream's read() does. The
     partitions ride the task closure (metadata-sized); workers read
     only data files, through the ``_io_*`` seam."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    out = T.StructType(list(schema.fields) + CDF_FIELDS)
+    out = change_schema(schema, parts[0].cdc)
     arrow_out = to_arrow_schema(out)
 
-    def classify(batches):
+    def read(batches):
         for batch in batches:
             for i in batch.column(0).to_pylist():
-                yield from _classify(parts[i], arrow_out)
+                yield from _read_partition(parts[i], arrow_out)
 
     return spark.range(len(parts), numPartitions=len(parts)).mapInArrow(
-        classify, out
+        read, out
     )
 
 
@@ -1249,8 +1402,8 @@ class ChangeFeedStreamReader(_FilePlanner, DataSourceStreamReader):
         # surface. No pk needed (the change rows ARE the files' rows),
         # per-VERSION emission (intermediate states never collapse),
         # and the output gains `_commit_timestamp` (delta-spark's CDF
-        # column set). Synthesis/refusal rules are the batch surface's
-        # own (`delta_log._cdf_window_plan` — shared code).
+        # column set). Planned by `plan_cdf` and read by `_read_cdc`,
+        # the same functions batch `delta_changes_cdf` runs.
         self.use_cdc = (
             str(options.get("readchangefeed", "false")).lower() == "true"
         )
@@ -1365,8 +1518,7 @@ class ChangeFeedStreamReader(_FilePlanner, DataSourceStreamReader):
         if self.use_cdc and (
             (head.meta or {}).get("configuration") or {}
         ).get("delta.enableChangeDataFeed") != "true":
-            # refuse at CONSTRUCTION, before the first batch — batch
-            # parity (delta_changes_cdf raises the same way): change
+            # refuse at CONSTRUCTION, before the first batch: change
             # data was never recorded for this table, so a cdc-file
             # stream would fabricate change rows
             raise ValueError(
@@ -1501,14 +1653,10 @@ class ChangeFeedStreamReader(_FilePlanner, DataSourceStreamReader):
             )
 
     def _cdc_partitions(self, from_v: int, to_v: int, st_to):
-        """readChangeFeed planning: classify every window commit with
-        the BATCH surface's shared planner (`_cdf_window_plan` — cdc
-        files authoritative; pure-insert/pure-delete synthesis; loud
-        refusal on a mixed commit without change-data files), then cut
-        each commit's files into partitions of at most
-        ``maxBytesPerPartition``. Every file reads independently (no
-        pk join), so per-file parallelism is the natural unit and a
-        chunk is just a task-size floor — no key splits needed.
+        """readChangeFeed planning: the window's commits through
+        ``delta_log._cdf_window_plan`` (cdc files authoritative;
+        pure-insert/pure-delete synthesis; loud refusal on a mixed
+        commit without change-data files), then :func:`plan_cdf`.
 
         A first batch from ``startingVersion=-1`` (the default)
         bootstraps with the CURRENT snapshot as `insert` rows stamped
@@ -1517,8 +1665,6 @@ class ChangeFeedStreamReader(_FilePlanner, DataSourceStreamReader):
         early commit JSONs no longer exist. Driver cost: one JSON
         parse per window commit plus the monotonized timestamp
         resolution (both metadata-sized)."""
-        import os
-
         from cdc_apache_cassandra_spark.streaming.delta_log import (
             _cdf_window_plan,
         )
@@ -1547,46 +1693,12 @@ class ChangeFeedStreamReader(_FilePlanner, DataSourceStreamReader):
                         "snapshot — or raise the log retention so "
                         "consumers this far behind stay servable"
                     ) from e
-        parts = []
-        for v, kind, files in plans:
+        for v, _kind, files in plans:
             if files:
                 self._last_data_version = max(self._last_data_version, v)
-
-            def make(entries, v=v, kind=kind):
-                parts.append(
-                    self._part(
-                        [], entries, v, cdc_change=kind, commit_ts=ts.get(v)
-                    )
-                )
-
-            chunk: list = []
-            size = 0
-            for rel, a in files:
-                fsz = int(a.get("size") or 0)
-                e = self._entry(os.path.join(self.path, rel), a)
-                if fsz > self.max_bytes:
-                    # ONE oversized file: split WITHIN it by row
-                    # groups (no join in cdc mode, so any partition
-                    # of the rows is sound) — otherwise a multi-GiB
-                    # synthesized-insert/delete file would
-                    # materialize whole in one task, escaping the
-                    # per-partition memory bound the pk-diff mode
-                    # enforces. The footer read is driver-side
-                    # metadata, paid only for files over the bound.
-                    if chunk:
-                        make(chunk)
-                        chunk, size = [], 0
-                    for rgs in self._row_group_chunks(e[0]):
-                        make([e + (rgs,)])
-                    continue
-                if chunk and size + fsz > self.max_bytes:
-                    make(chunk)
-                    chunk, size = [], 0
-                chunk.append(e)
-                size += fsz
-            if chunk:
-                make(chunk)
-        return parts or [_ChangePartition([], [], to_v)]
+        return plan_cdf(
+            self.path, plans, st_to.meta if st_to else None, ts, self.max_bytes
+        )
 
     def _commit_ts_map(self) -> dict:
         """The table's monotonized commit-timestamp map, extended
@@ -1631,32 +1743,6 @@ class ChangeFeedStreamReader(_FilePlanner, DataSourceStreamReader):
         }
         return self._ts_cache["map"]
 
-    def _row_group_chunks(self, path: str) -> list[list[int]]:
-        """Row-group index chunks of one oversized file, each at most
-        ~``maxBytesPerPartition`` by footer ``total_byte_size``
-        (uncompressed, so chunks come out conservatively small).
-        Always at least one chunk; a single row group above the bound
-        still gets its own chunk — a row group is the smallest
-        readable unit."""
-        from cdc_apache_cassandra_spark.streaming.delta_log import (
-            _io_parquet_file,
-        )
-
-        md = _io_parquet_file(path).metadata
-        chunks: list[list[int]] = []
-        cur: list[int] = []
-        cur_b = 0
-        for g in range(md.num_row_groups):
-            b = md.row_group(g).total_byte_size
-            if cur and cur_b + b > self.max_bytes:
-                chunks.append(cur)
-                cur, cur_b = [], 0
-            cur.append(g)
-            cur_b += b
-        if cur:
-            chunks.append(cur)
-        return chunks
-
     def partitions(self, start: dict, end: dict):
         from_v, to_v = start["version"], end["version"]
         self._pos = max(self._pos, from_v, to_v)
@@ -1667,7 +1753,6 @@ class ChangeFeedStreamReader(_FilePlanner, DataSourceStreamReader):
         st_to = self._state_at(to_v)
         self._check_schema(st_to.meta if st_to else None, to_v)
         if self.use_cdc:
-            self._setup_mapping(st_to.meta if st_to else None)
             return self._cdc_partitions(from_v, to_v, st_to)
         st_from = self._state_at(from_v)
         meta = (st_to.meta if st_to else None) or (
@@ -1683,65 +1768,9 @@ class ChangeFeedStreamReader(_FilePlanner, DataSourceStreamReader):
 
     # -- execution ---------------------------------------------------------
     def read(self, partition: _ChangePartition):
-        if partition.cdc_change is not None:
-            return self._read_cdc(partition)
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        return _classify(partition, to_arrow_schema(self.schema))
-
-    def _read_cdc(self, partition: _ChangePartition):
-        """readChangeFeed execution: every entry reads INDEPENDENTLY —
-        the change rows ARE the files' rows (no pk join, no
-        classification) — stamped with the partition's change type
-        (the stored ``_change_type`` column for 'cdc' change-data
-        files; the constant for synthesized insert/delete commits),
-        ``_commit_version`` and ``_commit_timestamp``. Constants
-        materialize via pa.repeat + C casts, never a Python loop."""
-        if not partition.post:
-            return
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        out_schema = to_arrow_schema(self.schema)
-        meta_cols = ("_change_type", "_commit_version", "_commit_timestamp")
-        table_fields = [f for f in out_schema if f.name not in meta_cols]
-        load_fields = list(table_fields)
-        if partition.cdc_change == "cdc" and "_change_type" not in {
-            f.name for f in load_fields
-        }:
-            # change-data files store the literal `_change_type` string
-            # column even under column mapping (spec rule; batch
-            # parity: delta_log._CDF_PASSTHROUGH) — read it through
-            # the same graft path, nulls if a spec-sloppy file lacks it
-            # (matching the JVM scan's missing-column behavior)
-            load_fields.append(pa.field("_change_type", pa.string()))
-        load_schema = pa.schema(load_fields)
-        ts_type = out_schema.field("_commit_timestamp").type
-        for entry in partition.post:
-            t = _load_file(partition, entry, load_fields, load_schema)
-            n = t.num_rows
-            if not n:
-                continue
-            if "_change_type" not in t.column_names:
-                t = t.append_column(
-                    "_change_type",
-                    pa.repeat(
-                        pa.scalar(partition.cdc_change, pa.string()), n
-                    ),
-                )
-            t = t.append_column(
-                "_commit_version",
-                pa.repeat(pa.scalar(partition.to_version, pa.int64()), n),
-            )
-            t = t.append_column(
-                "_commit_timestamp",
-                pa.repeat(pa.scalar(partition.commit_ts, pa.int64()), n)
-                .cast(pa.timestamp("ms"))
-                .cast(ts_type),
-            )
-            yield from (
-                t.select(out_schema.names).cast(out_schema).to_batches()
-            )
+        return _read_partition(partition, to_arrow_schema(self.schema))
 
     # -- lifecycle -----------------------------------------------------------
     def commit(self, end: dict) -> None:
@@ -1816,22 +1845,16 @@ class ChangeFeedDataSource(DataSource):
         path = self.options.get("path")
         if not path:
             raise ValueError("cdc_delta_changes requires option 'path'")
-        fields = list(
+        return change_schema(
             _table_schema(
                 path,
                 self.options.get("logstoreurl"),
                 str(self.options.get("logstoremirror", "false")).lower()
                 == "true",
-            ).fields
-        ) + CDF_FIELDS
-        if str(self.options.get("readchangefeed", "false")).lower() == "true":
-            # delta-spark's CDF stream column set additionally carries
-            # the commit timestamp (the monotonized resolution — same
-            # values the batch delta_changes_cdf stamps)
-            fields = fields + [
-                T.StructField("_commit_timestamp", T.TimestampType(), True)
-            ]
-        return T.StructType(fields)
+            ),
+            str(self.options.get("readchangefeed", "false")).lower()
+            == "true",
+        )
 
     def streamReader(self, schema) -> ChangeFeedStreamReader:
         return ChangeFeedStreamReader(self.options, schema)

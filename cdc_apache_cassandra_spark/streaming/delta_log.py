@@ -2271,7 +2271,7 @@ def _export_cdf_actions(
     file; the driver handles file names only."""
     from cdc_apache_cassandra_spark.sources.change_feed_source import (
         plan_pk_diff,
-        run_pk_diff,
+        run_changes,
     )
 
     post = dict(log.files)
@@ -2293,7 +2293,7 @@ def _export_cdf_actions(
     if not n_pre or not any(p.post for p in parts):
         return []
     logical = T.StructType.fromJson(json.loads(schema_json))
-    changes = run_pk_diff(spark, parts, logical).drop("_commit_version")
+    changes = run_changes(spark, parts, logical).drop("_commit_version")
     if mapped_fields is not None:
         # cdc files of a mapped table store data under PHYSICAL names;
         # _change_type keeps its literal name (spec passthrough)
@@ -2611,8 +2611,11 @@ def delta_restore(
     honored (monotonic in-commit timestamp, commitInfo first).
 
     Driver cost: two metadata replays + the file diff; the only
-    distributed work is the CDF job over the diff files, and only
-    when CDF is on."""
+    distributed work is the CDF job, and only when CDF is on: the
+    diff files read through ``change_feed_source``'s file-level change
+    reader (the one batch CDF and the readChangeFeed stream run; Arrow
+    ``_io_*`` reads in ``mapInArrow`` workers, at most one task per
+    core) and their rows staged as change-data files."""
     if (version is None) == (timestamp_ms is None):
         raise ValueError("delta_restore: pass version OR timestamp_ms")
     if timestamp_ms is not None:
@@ -2679,13 +2682,22 @@ def delta_restore(
                     "column-mapped table is not supported (this engine "
                     "writes name-mode cdc files only)"
                 )
-            changes = (
-                _scan_adds(spark, out_path, add_back, meta_for_scan)
-                .withColumn("_change_type", F.lit("insert"))
-                .unionByName(
-                    _scan_adds(spark, out_path, drop, meta_for_scan)
-                    .withColumn("_change_type", F.lit("delete"))
-                )
+            from cdc_apache_cassandra_spark.sources.change_feed_source import (
+                plan_cdf,
+                run_changes,
+            )
+
+            parts = plan_cdf(
+                out_path,
+                [(commit_v, "insert", add_back), (commit_v, "delete", drop)],
+                meta_for_scan,
+                {commit_v: now},
+            )
+            logical = T.StructType.fromJson(
+                json.loads(meta_for_scan["schemaString"])
+            )
+            changes = run_changes(spark, parts, logical).drop(
+                "_commit_version", "_commit_timestamp"
             )
             if _column_mapping_mode(meta_for_scan) == "name":
                 changes = _to_physical(
@@ -3353,20 +3365,12 @@ def _mapping_plan(meta: dict) -> MappingPlan:
 
         def restore(df: DataFrame) -> DataFrame:
             # names/types are already logical; the projection strips the
-            # parquet.field.id field metadata from the result schema.
-            # CDF metadata columns (_change_type) are never mapped —
-            # pass them through untouched.
-            names = {lf.name for lf in logical.fields}
+            # parquet.field.id field metadata from the result schema
             return df.select(
                 *[
                     F.col(lf.name).cast(lf.dataType).alias(lf.name)
                     for lf in logical.fields
-                ],
-                *[
-                    F.col(c)
-                    for c in df.columns
-                    if c in _CDF_PASSTHROUGH and c not in names
-                ],
+                ]
             )
 
         # id-mode writers record physicalName too (the metaData
@@ -3409,20 +3413,11 @@ def _mapping_plan(meta: dict) -> MappingPlan:
     )
 
     def restore(df: DataFrame) -> DataFrame:
-        # CDF metadata columns (_change_type) are stored under their
-        # literal names even in mapped tables — pass them through
-        # (but never duplicate a genuine data column of that name)
-        names = {pf.name for pf in read_schema.fields}
         return df.select(
             *[
                 F.col(pf.name).cast(lf.dataType).alias(lf.name)
                 for pf, lf in zip(read_schema.fields, logical.fields)
-            ],
-            *[
-                F.col(c)
-                for c in df.columns
-                if c in _CDF_PASSTHROUGH and c not in names
-            ],
+            ]
         )
 
     phys_of = {
@@ -3508,37 +3503,26 @@ def _partition_value_of(add: dict, phys_name: str, logical_name: str):
     return pv.get(logical_name)
 
 
-#: CDF metadata columns stored under their LITERAL names in change-data
-#: files, never renamed by column mapping — the restore projections and
-#: the partition reattach pass them through untouched
-_CDF_PASSTHROUGH = ("_change_type",)
-
-
 def _scan_adds(
     spark: SparkSession,
     out_path: str,
     entries: list[tuple[str, dict]],
     meta: dict,
-    change_type: bool = False,
 ) -> DataFrame:
     """Read the given ``(relative_path, add_action)`` entries into the
-    table's LOGICAL schema — the one scan used by every snapshot/CDF
-    surface: schema comes from the log (pre-DDL files read with typed
-    nulls), column-mapped tables read under their physical schema and
-    rename back, rows masked by a deletion vector are filtered by
-    ``_metadata.row_index`` against the broadcast bitmap (map-side — a
-    DV never causes a shuffle or a driver-side row), and PARTITION
-    columns of a foreign partitioned table are reconstructed from
-    ``add.partitionValues`` (the spec stores them in the LOG, not the
-    parquet — reading them as typed nulls would be silent wrong data).
+    table's LOGICAL schema — the JVM snapshot scan behind
+    :func:`read_delta`: schema comes from the log (pre-DDL files read
+    with typed nulls), column-mapped tables read under their physical
+    schema and rename back, rows masked by a deletion vector are
+    filtered by ``_metadata.row_index`` against the broadcast bitmap
+    (map-side — a DV never causes a shuffle or a driver-side row), and
+    PARTITION columns of a foreign partitioned table are reconstructed
+    from ``add.partitionValues`` (the spec stores them in the LOG, not
+    the parquet — reading them as typed nulls would be silent wrong
+    data).
     Reconstruction is a broadcast map over the scan's per-row file
     path: metadata-sized (one entry per file), no shuffle, no plan
-    blow-up with the partition count.
-
-    ``change_type=True`` reads the files as CHANGE-DATA files (spec
-    ``cdc`` actions): the scan additionally reads the literal
-    ``_change_type`` string column, which flows through partition
-    reattach and the mapping restore untouched."""
+    blow-up with the partition count."""
     plan = _mapping_plan(meta)
     read_schema, restore = plan.read_schema, plan.restore
     if plan.field_id_read:
@@ -3578,11 +3562,6 @@ def _scan_adds(
     else:
         scan_part = []
         pq_schema = read_schema
-    if change_type:
-        pq_schema = T.StructType(
-            list(pq_schema.fields)
-            + [T.StructField("_change_type", T.StringType())]
-        )
 
     def attach_partitions(df: DataFrame) -> DataFrame:
         """Graft the partition columns back (typed, under their
@@ -3627,15 +3606,7 @@ def _scan_adds(
                 p,
                 F.element_at(F.col("__pv"), i + 1).cast(by_name[p].dataType),
             )
-        names = {f.name for f in read_schema.fields}
-        return df.drop("__pv").select(
-            *[f.name for f in read_schema.fields],
-            *[
-                c
-                for c in _CDF_PASSTHROUGH
-                if c in df.columns and c not in names
-            ],
-        )
+        return df.drop("__pv").select(*[f.name for f in read_schema.fields])
 
     plain = [
         os.path.join(out_path, rel)
@@ -3677,15 +3648,7 @@ def _scan_adds(
         )
         parts.append(attach_partitions(df))
     if not parts:
-        empty_schema = (
-            T.StructType(
-                list(read_schema.fields)
-                + [T.StructField("_change_type", T.StringType())]
-            )
-            if change_type
-            else read_schema
-        )
-        out = spark.createDataFrame([], schema=empty_schema)
+        out = spark.createDataFrame([], schema=read_schema)
     else:
         out = parts[0]
         for p in parts[1:]:
@@ -3761,7 +3724,7 @@ def delta_changes(
     changed buckets, never the table. Both versions replay on the
     driver; the diff is planned and classified by the stream source's
     planner and classifier (``change_feed_source.plan_pk_diff`` /
-    ``run_pk_diff``): one batch job, at most one task per core for a
+    ``run_changes``): one batch job, at most one task per core for a
     bucket-tagged table, each merging its buckets' pre and post rows on
     the primary key —
 
@@ -3790,14 +3753,14 @@ def delta_changes(
         raise FileNotFoundError(f"no Delta log at {out_path}")
     from cdc_apache_cassandra_spark.sources.change_feed_source import (
         plan_pk_diff,
-        run_pk_diff,
+        run_changes,
     )
 
     parts = plan_pk_diff(
         out_path, s_from.files, s_to.files, s_to.meta, pk_cols, to_version
     )
     schema = T.StructType.fromJson(json.loads(s_to.meta["schemaString"]))
-    return run_pk_diff(spark, parts, schema)
+    return run_changes(spark, parts, schema)
 
 
 def commit_timestamps(
@@ -3910,10 +3873,9 @@ def _cdf_window_plan(
     ``'delete'`` (a pure-delete commit; the entries are the removed
     files' PRE-commit ``add`` actions, read as delete rows) or
     ``'insert'`` (a pure-insert commit; the entries are its dataChange
-    adds). SHARED by the batch surface (:func:`delta_changes_cdf`) and
-    the streaming source's ``readChangeFeed`` mode
-    (``sources/change_feed_source.py``) so synthesis rules and
-    refusals can never diverge between them.
+    adds). ``change_feed_source.plan_cdf`` turns this list into
+    partitions for :func:`delta_changes_cdf` and the streaming
+    source's ``readChangeFeed`` mode alike.
 
     Driver cost: one JSON parse per window commit (metadata-sized);
     the pre-window snapshot replays LAZILY — only when a delete
@@ -4035,16 +3997,21 @@ def delta_changes_cdf(
     set; timestamps are the monotonized :func:`commit_timestamps`
     resolution, so this window and time travel agree on every
     boundary). Composes with column mapping (``_change_type`` is
-    stored under its literal name even in mapped tables) and with
-    partition-value reconstruction.
+    stored under its literal name even in mapped tables), deletion
+    vectors and partition-value reconstruction.
 
-    IO ∝ changed files in the window; the driver holds one action list
-    per commit (metadata-sized) and the result is ONE lazy union —
-    nothing is scanned until the caller acts. The PRE-window snapshot
-    replays only when a delete actually needs it (a window whose
-    history below it was checkpoint-cleaned still serves as long as no
-    delete synthesis reaches back past the window). delta-spark
-    parity on refusals too: a table without
+    The window plans with ``change_feed_source.plan_cdf`` and reads
+    through its one file-level change reader — the functions the
+    ``readChangeFeed`` stream runs — as one ``mapInArrow`` job: files
+    of every commit pack into at most one task per core, each row
+    stamped with its own commit's version and timestamp. IO ∝ changed
+    files in the window; the driver holds one action list per commit
+    (metadata-sized), and nothing is scanned until the caller acts. A
+    negative or inverted version window refuses before any IO. The
+    PRE-window snapshot replays only when a delete actually needs it
+    (a window whose history below it was checkpoint-cleaned still
+    serves as long as no delete synthesis reaches back past the
+    window). delta-spark parity on refusals too: a table without
     ``delta.enableChangeDataFeed`` refuses (change data was never
     recorded — synthesizing file-level rows for its update commits
     would fabricate deletes+inserts for every unchanged neighbor
@@ -4052,6 +4019,12 @@ def delta_changes_cdf(
     removes without change-data files (an update a spec writer must
     have recorded; only pure-insert and pure-delete commits are
     synthesizable)."""
+    if starting_version < 0:
+        raise ValueError(
+            f"starting_version {starting_version} must be >= 0 "
+            "(delta-spark's table_changes refuses a negative version "
+            "the same way)"
+        )
     if ending_version < starting_version:
         raise ValueError(
             f"ending_version {ending_version} < starting_version "
@@ -4070,52 +4043,19 @@ def delta_changes_cdf(
             "table_changes refuses the same way); use the pk-diff "
             "delta_changes for file-rewrite logs"
         )
-    ts = dict(commit_timestamps(out_path))
-    frames: list[DataFrame] = []
-    for v, kind, files in _cdf_window_plan(
-        out_path, starting_version, ending_version
-    ):
+    from cdc_apache_cassandra_spark.sources.change_feed_source import (
+        plan_cdf,
+        run_changes,
+    )
 
-        def _stamp(df: DataFrame, v: int = v) -> DataFrame:
-            return df.withColumn(
-                "_commit_version", F.lit(v).cast("long")
-            ).withColumn(
-                "_commit_timestamp", F.timestamp_millis(F.lit(ts[v]))
-            )
-
-        if kind == "cdc":
-            frames.append(
-                _stamp(
-                    _scan_adds(spark, out_path, files, meta, change_type=True)
-                )
-            )
-        else:
-            frames.append(
-                _stamp(
-                    _scan_adds(spark, out_path, files, meta).withColumn(
-                        "_change_type", F.lit(kind)
-                    )
-                )
-            )
-    if not frames:
-        logical = T.StructType.fromJson(json.loads(meta["schemaString"]))
-        return spark.createDataFrame(
-            [],
-            schema=T.StructType(
-                list(logical.fields)
-                + [
-                    T.StructField("_change_type", T.StringType()),
-                    T.StructField("_commit_version", T.LongType()),
-                    T.StructField(
-                        "_commit_timestamp", T.TimestampType()
-                    ),
-                ]
-            ),
-        )
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
+    parts = plan_cdf(
+        out_path,
+        _cdf_window_plan(out_path, starting_version, ending_version),
+        meta,
+        dict(commit_timestamps(out_path)),
+    )
+    schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
+    return run_changes(spark, parts, schema)
 
 
 def delta_changes_cdf_by_time(

@@ -1,4 +1,5 @@
-"""The end-to-end streaming CDC pipeline (SURVEY §3.2's four-liner, grown up).
+"""Helpers for the end-to-end streaming CDC pipeline (SURVEY §3.2's
+four-liner, grown up).
 
 Reference dataflow (connector/.../CassandraSource.java:452-631):
 events topic -> batch of ≤200 -> per-key dedup -> CQL point read -> keyed
@@ -11,9 +12,12 @@ data topic with tombstones. Spark mapping, one logical pipeline:
       -> key/value projection with tombstones            # P6/S7
       .writeStream.option("checkpointLocation", ...)     # O3 offsets
 
-The SAME stage functions run in batch mode (backfill, SURVEY T2) because
-each stage is DataFrame -> DataFrame; `build_pipeline` only differs in how
-the source DataFrame was constructed.
+``CdcEngine.to_records`` is that pipeline: dedup → ``read_after_event``
+→ ``key_value_records``, streaming or batch by the input (backfill,
+SURVEY T2, runs the same stages because each is DataFrame ->
+DataFrame). This module keeps the event-time column it watermarks on
+(:func:`with_event_time`) and the memory-sink drain tests use
+(:func:`run_to_memory`).
 
 Scale notes:
 - dedup state is watermark-bounded (the Caffeine TTL analogue); key space
@@ -31,36 +35,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cdc_apache_cassandra_spark.operators.dedup import (
-    DEFAULT_TTL,
-    dedup_mutations,
-    dedup_mutations_stream,
-)
-from cdc_apache_cassandra_spark.operators.lookup import key_value_records, read_after_event
-
 
 def with_event_time(events: DataFrame, writetime_col: str = "writetime") -> DataFrame:
     """Derive the TimestampType event-time column from the µs writetime
     (reference W2: mutation carries Cassandra writetime in µs)."""
     return events.withColumn("event_time", F.timestamp_micros(F.col(writetime_col)))
-
-
-def build_pipeline(
-    events: DataFrame,
-    snapshot: DataFrame,
-    pk_cols: list[str],
-    value_cols: list[str],
-    ttl: str = DEFAULT_TTL,
-    streaming: bool = True,
-) -> DataFrame:
-    """events (stream or batch) -> keyed data-topic records with tombstones."""
-    deduped = (
-        dedup_mutations_stream(with_event_time(events), ttl, pk_cols)
-        if streaming
-        else dedup_mutations(events, pk_cols)
-    )
-    enriched = read_after_event(deduped, snapshot, pk_cols, value_cols)
-    return key_value_records(enriched, pk_cols, value_cols)
 
 
 def run_to_memory(out: DataFrame, name: str) -> None:

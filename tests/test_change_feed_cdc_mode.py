@@ -1,8 +1,9 @@
 """readChangeFeed mode of the cdc_delta_changes streaming source
 (sources/change_feed_source.py): the log's own change-data files
-consumed per version — stream == batch delta_changes_cdf (shared
-planner delta_log._cdf_window_plan), snapshot bootstrap from the
-default start, column-mapping composition, delta-spark refusal parity.
+consumed per version — stream == batch delta_changes_cdf (one planner,
+plan_cdf, and one file-level reader), cross-commit packing at most one
+task per core, snapshot bootstrap from the default start,
+column-mapping composition, delta-spark refusal parity.
 """
 
 import contextlib
@@ -126,7 +127,7 @@ def test_cdc_mode_mapped_table(spark, tmp_path):
     """cdc files of a name-mapped table store data under PHYSICAL
     names but ``_change_type`` under its literal name — the stream
     grafts logical names back and passes the stored change type
-    through (batch parity: delta_log._CDF_PASSTHROUGH)."""
+    through, as the batch ``delta_changes_cdf`` does (one reader)."""
     root = str(tmp_path / "mapped")
     os.makedirs(root)
     t0 = pa.table({"col-pk77": [1, 2], "col-v88": ["a", "b"]})
@@ -328,3 +329,84 @@ def test_cdc_stream_starting_timestamp(spark, tmp_path):
     want = delta_changes_cdf(spark, root, 1, 2).select(got.columns)
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, want.collect()))
+
+
+def test_cdf_window_packs_commits_into_one_task_per_core(spark, tmp_path):
+    """A window of several export commits on a 16-bucket CDF table
+    reads in at most one task per core: change-data files of different
+    commits share a partition, yet every row keeps its own commit's
+    ``_commit_version`` and ``_commit_timestamp`` — the window equals
+    the union of its per-version reads, and a stream covering the
+    window in one micro-batch returns the same rows."""
+    from pyspark.sql import functions as F
+
+    from cdc_apache_cassandra_spark.session import default_parallelism
+    from cdc_apache_cassandra_spark.streaming.delta_log import (
+        _cdf_window_plan,
+        commit_timestamps,
+        delta_export,
+    )
+    from cdc_apache_cassandra_spark.streaming.materialize import merge_into
+
+    schema = (
+        "op string, pk long, writetime long, v string, segment long, "
+        "position long"
+    )
+    store, table = str(tmp_path / "store"), str(tmp_path / "table")
+    os.makedirs(store)
+    batches = [[("INSERT", k, 10, f"v{k}", 0, k) for k in range(48)]]
+    for b in range(1, 6):
+        batches.append(
+            [("UPDATE", k, 10 + b, f"u{b}_{k}", b, k)
+             for k in range(b % 3, 48, 3)]
+            + [("DELETE", 40 + b, 10 + b, None, b, 100)]
+            + [("INSERT", 100 + b, 10 + b, f"n{b}", b, 101)]
+        )
+    for rows in batches:
+        merge_into(spark, store, spark.createDataFrame(rows, schema), ["pk"],
+                   n_buckets=16)
+        delta_export(spark, store, table, change_data_feed=True,
+                     cdf_pk_cols=["pk"])
+    last = len(batches) - 1
+    cores = default_parallelism()
+    # the window holds more change files than there are cores, so the
+    # task bound below is only met by packing across commits
+    assert sum(len(f) for _v, _k, f in _cdf_window_plan(table, 1, last)) > cores
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    sc = spark.sparkContext
+    group = f"cdf-window-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "delta_changes_cdf")
+    try:
+        got = rows(delta_changes_cdf(spark, table, 1, last))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    tracker = sc.statusTracker()
+    tasks = [
+        tracker.getStageInfo(stage).numTasks
+        for job in tracker.getJobIdsForGroup(group)
+        for stage in tracker.getJobInfo(job).stageIds
+    ]
+    assert tasks and max(tasks) <= cores
+
+    per_version = []
+    for v in range(1, last + 1):
+        one = delta_changes_cdf(spark, table, v, v)
+        assert {r._commit_version for r in one.collect()} == {v}
+        per_version += rows(one)
+    assert got == sorted(per_version)
+    ts = dict(commit_timestamps(table))
+    stamps = delta_changes_cdf(spark, table, 1, last).select(
+        "_commit_version", F.unix_millis("_commit_timestamp")
+    ).distinct().collect()
+    assert sorted(map(tuple, stamps)) == [
+        (v, ts[v]) for v in range(1, last + 1)
+    ]
+
+    stream = _tail(spark, table, startingVersion=0,
+                   maxVersionsPerBatch=last)
+    assert rows(stream.select(*delta_changes_cdf(
+        spark, table, 1, last).columns)) == got

@@ -7,6 +7,7 @@ file-level restore change rows."""
 import json
 import os
 
+import pyarrow.parquet as pq
 import pytest
 
 from cdc_apache_cassandra_spark.streaming.delta_log import (
@@ -126,6 +127,18 @@ def test_restore_cdf_table_writes_file_level_change_rows(spark, tmp_path):
     ins = {t for t in untouched if t[1] == "insert"}
     dels = {(pk, "delete", v) for pk, _c, v in ins}
     assert {t for t in untouched if t[1] == "delete"} <= dels
+    # exactly the rows of the files the commit re-added (inserts) and
+    # removed (deletes), read with pyarrow directly
+    want = sorted(
+        (r["pk"], change, r["v"])
+        for x in a
+        for kind, change in (("add", "insert"), ("remove", "delete"))
+        if kind in x
+        for r in pq.read_table(
+            os.path.join(table, x[kind]["path"]), columns=["pk", "v"]
+        ).to_pylist()
+    )
+    assert got == want
     register_feed(spark)
     name = "rst_" + uuid.uuid4().hex[:10]
     q = (

@@ -1666,7 +1666,8 @@ def test_cdf_refusals_match_delta_spark(spark, tmp_path):
     synthesizing file-level rows for update commits would fabricate
     deletes+inserts for unchanged neighbors; (b) a CDF-enabled commit
     mixing dataChange adds AND removes with no change-data files —
-    an update a spec writer must have recorded."""
+    an update a spec writer must have recorded; (c) a negative
+    starting version, before any IO (delta-spark's table_changes)."""
     import pytest as _pytest
 
     from cdc_apache_cassandra_spark.streaming.delta_log import (
@@ -1698,6 +1699,10 @@ def test_cdf_refusals_match_delta_spark(spark, tmp_path):
         delta_changes_cdf(spark, root2, 1, 1).collect()
     # insert-only windows still serve
     assert delta_changes_cdf(spark, root2, 0, 0).count() == 1
+    # (c) negative starting version: refused before the log is read
+    # (the path does not exist)
+    with _pytest.raises(ValueError, match="starting_version -1"):
+        delta_changes_cdf(spark, str(tmp_path / "absent"), -1, 2)
 
 
 def test_cdf_window_at_checkpoint_boundary(spark, tmp_path):

@@ -5,6 +5,8 @@ import uuid
 
 import pytest
 
+from cdc_apache_cassandra_spark.config import CdcPipelineConfig
+from cdc_apache_cassandra_spark.engine import CdcEngine
 from cdc_apache_cassandra_spark.operators.dedup import (
     dedup_mutations,
     dedup_mutations_stream,
@@ -12,7 +14,6 @@ from cdc_apache_cassandra_spark.operators.dedup import (
 from cdc_apache_cassandra_spark.sources.event_source import mutation_events
 from cdc_apache_cassandra_spark.sources.registry import load_table
 from cdc_apache_cassandra_spark.streaming.pipeline import (
-    build_pipeline,
     run_to_memory,
     with_event_time,
 )
@@ -54,15 +55,16 @@ def test_stream_equals_batch(spark, sf_dir, event_dir):
     # TTL must cover the replay's event-time disorder (writetimes span the
     # whole key space here); with the default 60 s a genuinely-late replica
     # is dropped by the watermark — see test_late_events_dropped_by_watermark.
-    out = build_pipeline(
-        stream, snapshot, ["pk"], VALUE_COLS, ttl="365 days", streaming=True
+    engine = CdcEngine(
+        spark, CdcPipelineConfig(cache_expire_after_ms=365 * 86_400_000)
     )
+    out = engine.to_records(stream, snapshot, ["pk"], VALUE_COLS)
     name = f"cdc_out_{uuid.uuid4().hex[:8]}"
     run_to_memory(out, name)
     got = spark.table(name)
 
     batch_events = spark.read.parquet(event_dir)
-    want = build_pipeline(batch_events, snapshot, ["pk"], VALUE_COLS, streaming=False)
+    want = engine.to_records(batch_events, snapshot, ["pk"], VALUE_COLS)
 
     assert got.count() == want.count()
     assert got.exceptAll(want).count() == 0

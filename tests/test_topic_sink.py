@@ -80,8 +80,9 @@ def test_full_reference_dataflow_end_to_end(spark, tmp_path_factory):
     view must converge to the batch pipeline's records."""
     import uuid as _uuid
 
+    from cdc_apache_cassandra_spark.config import CdcPipelineConfig
+    from cdc_apache_cassandra_spark.engine import CdcEngine
     from cdc_apache_cassandra_spark.sources.registry import load_table
-    from cdc_apache_cassandra_spark.streaming.pipeline import build_pipeline
 
     base = tmp_path_factory.mktemp("e2e")
     seg_dir, topic_dir, ck = (
@@ -98,9 +99,10 @@ def test_full_reference_dataflow_end_to_end(spark, tmp_path_factory):
     events = (
         spark.readStream.format("cdc_commitlog").option("path", seg_dir).load()
     )
-    records = build_pipeline(
-        events, snapshot, ["pk"], value_cols, ttl="365 days", streaming=True
-    ).select(
+    engine = CdcEngine(
+        spark, CdcPipelineConfig(cache_expire_after_ms=365 * 86_400_000)
+    )
+    records = engine.to_records(events, snapshot, ["pk"], value_cols).select(
         F.col("key.pk").alias("pk"),
         F.col("value").isNull().alias("tombstone"),
         F.col("value.c_acctbal").alias("c_acctbal"),
@@ -115,9 +117,8 @@ def test_full_reference_dataflow_end_to_end(spark, tmp_path_factory):
     q.stop()
 
     got = read_topic(spark, topic_dir)
-    want = build_pipeline(
-        mutation_events(spark, SF), snapshot, ["pk"], value_cols,
-        streaming=False,
+    want = engine.to_records(
+        mutation_events(spark, SF), snapshot, ["pk"], value_cols
     ).select(
         F.col("key.pk").alias("pk"),
         F.col("value").isNull().alias("tombstone"),
